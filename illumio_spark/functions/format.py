@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from illumio_spark import schema as S
+from illumio_spark.functions import once_per_gateway
 
 _ORIG_PREFIX_LEN = len("|original_message=")  # 18
 
@@ -230,14 +231,22 @@ def with_routed_text(df: DataFrame) -> DataFrame:
     than once downstream — so each ``py_strip`` regexp appears exactly
     once in the generated code instead of ~6× (the 64 KB-method-limit
     codegen fallback VERDICT r3 'what's wrong #1')."""
+    stages = _routed_text_stages()
+    for stage in stages:
+        df = df.withColumns(stage)
+    return df.drop(*[c for stage in stages[:-1] for c in stage])
+
+
+@once_per_gateway
+def _routed_text_stages() -> list[dict[str, Column]]:
+    """with_routed_text's three withColumns stages (built once per gateway)."""
     fields = siem_field_columns()
-    df = df.withColumns({f"_sf_{n}": c for n, c in fields.items()})
     mat = {n: F.col(f"_sf_{n}") for n in fields}
-    df = df.withColumns(
+    return [
+        {f"_sf_{n}": c for n, c in fields.items()},
         {
             "_fmt": formatted_log_column(mat),
             "_esc": F.replace(F.col("text"), F.lit("|"), F.lit("_")),
-        }
-    )
-    df = df.withColumn("routed_text", routed_text_column(F.col("_fmt"), F.col("_esc")))
-    return df.drop("_fmt", "_esc", *[f"_sf_{n}" for n in fields])
+        },
+        {"routed_text": routed_text_column(F.col("_fmt"), F.col("_esc"))},
+    ]

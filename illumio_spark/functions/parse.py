@@ -36,9 +36,10 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from illumio_spark import schema as S
+from illumio_spark.functions import once_per_gateway
 from illumio_spark.functions.format import py_strip
 
 SUMMARY_COLS = [f"s_{f}" for f in S.SUMMARY_TEXT_FIELDS]
@@ -139,7 +140,8 @@ def parse_batch(pdf: pd.DataFrame) -> pd.DataFrame:
     return out
 
 
-def audit_field_columns() -> dict[str, "F.Column"]:
+@once_per_gateway
+def audit_field_columns() -> dict[str, Column]:
     """Flat a_* extraction expressions over the `audit` struct column.
 
     Nested path extraction is pure Catalyst: notifications[0].info.* via
@@ -220,6 +222,81 @@ _SEP = "\n"
 _SUMMARY_REPL = _SEP.join(f"${i}" for i in range(1, len(S.SUMMARY_TEXT_FIELDS) + 1))
 
 
+_PARSE_TEMPS = ("_tricky", "_stripped", "_is_summary", "_sum_repl", "_sum_parts")
+
+
+@once_per_gateway
+def _jvm_parse_stages() -> list[dict[str, Column]]:
+    """The withColumns stages of parse_turns_jvm, in order (built once per
+    gateway; each dict is one projection)."""
+    text = F.col("text")
+    # One cheap two-range scan decides, per row, whether the exact Unicode
+    # patterns are needed or their ~6×-faster ASCII twins suffice
+    # (identical semantics on safe rows — see format.PY_TRICKY_RE).
+    from illumio_spark.functions.format import (
+        PY_TRICKY_RE,
+        _ASCII_STRIP_RE,
+        _PY_STRIP_RE,
+        _edge_is_py_ws,
+    )
+
+    tricky = F.col("_tricky")
+    # Python-strip semantics, not F.trim: the oracle's blank test is
+    # text.strip() == '' (Unicode whitespace), and the audit candidate
+    # gate must see past leading \t/\n (json.loads accepts JSON whitespace
+    # before '{' — an ASCII-space-only trim misrouted '\t{...}' payloads).
+    # Edge-probe fast path (r8): strip is the identity unless the first or
+    # last char is Python whitespace — two 1-char membership probes skip
+    # the full-string strip regex on the overwhelming majority of rows.
+    stripped = F.when(
+        _edge_is_py_ws(text),
+        F.when(tricky, F.regexp_replace(text, _PY_STRIP_RE, "")).otherwise(
+            F.regexp_replace(text, _ASCII_STRIP_RE, "")
+        ),
+    ).otherwise(text)
+    blank = text.isNull() | (F.col("_stripped") == "")
+    # ONE summary-regex pass instead of two (r8): run the group-extracting
+    # regexp_replace unconditionally and classify by comparing its output
+    # to the input. regexp_replace returns the input unchanged iff the
+    # anchored pattern did not match; a MATCH always changes the string —
+    # the rewrite drops the literal 'act= sn= count=…' separators (~50
+    # bytes) and inserts 7 one-byte sentinels, so matched output is
+    # strictly shorter than the input and can never equal it. The old
+    # shape paid rlike + regexp_replace (two full scans of the big
+    # pattern) on every summary row.
+    n_fields = len(S.SUMMARY_TEXT_FIELDS)
+    sum_repl = F.when(
+        tricky, F.regexp_replace(text, _JAVA_SUMMARY_REGEX, _SUMMARY_REPL)
+    ).otherwise(F.regexp_replace(text, _JAVA_SUMMARY_REGEX_ASCII, _SUMMARY_REPL))
+    is_summary = F.col("_is_summary")
+    audit_cand = (~blank) & (~is_summary) & F.col("_stripped").startswith("{")
+    is_audit = F.nullif(py_strip(F.col("audit")["event_type"]), F.lit("")).isNotNull()
+    return [
+        {"_tricky": text.rlike(PY_TRICKY_RE)},
+        {"_stripped": stripped},
+        {"_sum_repl": sum_repl},
+        {"_is_summary": (~blank) & (F.col("_sum_repl") != text)},
+        {"_sum_parts": F.when(is_summary, F.split(F.col("_sum_repl"), _SEP, n_fields))},
+        {f"s_{f}": F.get("_sum_parts", i) for i, f in enumerate(S.SUMMARY_TEXT_FIELDS)},
+        {
+            "audit": F.when(
+                audit_cand, F.from_json(text, S.AUDIT_JSON_SCHEMA, AUDIT_JSON_OPTIONS)
+            )
+        },
+        {
+            "event_class": F.when(blank, F.lit(None).cast("string"))
+            .when(is_summary, S.CLASS_SUMMARY)
+            .when(is_audit, S.CLASS_AUDITABLE)
+        },
+        {
+            "error_reason": F.when(blank, S.ERROR_EMPTY).when(
+                F.col("event_class").isNull(), S.ERROR_UNPARSEABLE
+            )
+        },
+        audit_field_columns(),
+    ]
+
+
 def parse_turns_jvm(df: DataFrame) -> DataFrame:
     """Full-JVM parse: identical routing + extraction semantics, zero Python.
 
@@ -239,89 +316,9 @@ def parse_turns_jvm(df: DataFrame) -> DataFrame:
     the JVM 64 KB limit — a silent fallback to interpreted execution,
     2×+ slower (VERDICT r3). CollapseProject keeps the projection
     boundaries because each temp is non-cheap and multi-referenced."""
-    text = F.col("text")
-    # One cheap two-range scan decides, per row, whether the exact Unicode
-    # patterns are needed or their ~6×-faster ASCII twins suffice
-    # (identical semantics on safe rows — see format.PY_TRICKY_RE).
-    from illumio_spark.functions.format import (
-        PY_TRICKY_RE,
-        _ASCII_STRIP_RE,
-        _PY_STRIP_RE,
-        _edge_is_py_ws,
-    )
-
-    df = df.withColumn("_tricky", text.rlike(PY_TRICKY_RE))
-    tricky = F.col("_tricky")
-    # Python-strip semantics, not F.trim: the oracle's blank test is
-    # text.strip() == '' (Unicode whitespace), and the audit candidate
-    # gate must see past leading \t/\n (json.loads accepts JSON whitespace
-    # before '{' — an ASCII-space-only trim misrouted '\t{...}' payloads).
-    # Edge-probe fast path (r8): strip is the identity unless the first or
-    # last char is Python whitespace — two 1-char membership probes skip
-    # the full-string strip regex on the overwhelming majority of rows.
-    df = df.withColumn(
-        "_stripped",
-        F.when(
-            _edge_is_py_ws(text),
-            F.when(tricky, F.regexp_replace(text, _PY_STRIP_RE, "")).otherwise(
-                F.regexp_replace(text, _ASCII_STRIP_RE, "")
-            ),
-        ).otherwise(text),
-    )
-    blank = text.isNull() | (F.col("_stripped") == "")
-    # ONE summary-regex pass instead of two (r8): run the group-extracting
-    # regexp_replace unconditionally and classify by comparing its output
-    # to the input. regexp_replace returns the input unchanged iff the
-    # anchored pattern did not match; a MATCH always changes the string —
-    # the rewrite drops the literal 'act= sn= count=…' separators (~50
-    # bytes) and inserts 7 one-byte sentinels, so matched output is
-    # strictly shorter than the input and can never equal it. The old
-    # shape paid rlike + regexp_replace (two full scans of the big
-    # pattern) on every summary row.
-    n_fields = len(S.SUMMARY_TEXT_FIELDS)
-    df = df.withColumn(
-        "_sum_repl",
-        F.when(
-            tricky, F.regexp_replace(text, _JAVA_SUMMARY_REGEX, _SUMMARY_REPL)
-        ).otherwise(
-            F.regexp_replace(text, _JAVA_SUMMARY_REGEX_ASCII, _SUMMARY_REPL)
-        ),
-    )
-    df = df.withColumn(
-        "_is_summary", (~blank) & (F.col("_sum_repl") != text)
-    )
-    is_summary = F.col("_is_summary")
-    df = df.withColumn(
-        "_sum_parts",
-        F.when(is_summary, F.split(F.col("_sum_repl"), _SEP, n_fields)),
-    )
-    df = df.withColumns(
-        {
-            f"s_{f}": F.get("_sum_parts", i)
-            for i, f in enumerate(S.SUMMARY_TEXT_FIELDS)
-        }
-    )
-
-    audit_cand = (~blank) & (~is_summary) & F.col("_stripped").startswith("{")
-    df = df.withColumn(
-        "audit",
-        F.when(audit_cand, F.from_json(text, S.AUDIT_JSON_SCHEMA, AUDIT_JSON_OPTIONS)),
-    )
-    is_audit = F.nullif(py_strip(F.col("audit")["event_type"]), F.lit("")).isNotNull()
-    df = df.withColumn(
-        "event_class",
-        F.when(blank, F.lit(None).cast("string"))
-        .when(is_summary, S.CLASS_SUMMARY)
-        .when(is_audit, S.CLASS_AUDITABLE),
-    ).withColumn(
-        "error_reason",
-        F.when(blank, S.ERROR_EMPTY).when(
-            F.col("event_class").isNull(), S.ERROR_UNPARSEABLE
-        ),
-    )
-    return df.withColumns(audit_field_columns()).drop(
-        "_tricky", "_stripped", "_is_summary", "_sum_repl", "_sum_parts"
-    )
+    for stage in _jvm_parse_stages():
+        df = df.withColumns(stage)
+    return df.drop(*_PARSE_TEMPS)
 
 
 def parse_turns(df: DataFrame, parser: str = "jvm") -> DataFrame:

@@ -683,8 +683,8 @@ def compact_neardup_frontier(
     itself (≤ n_bands rows per doc). Measured at 508 k docs: the
     pairwise form feeds CC 32.8 M edges and runs ~3 min; the star form
     feeds it ≤ 2 M. One distinct + one groupBy + one equi-join back on
-    the bucket key (ReusedExchange with the groupBy); CC via pointer
-    jumping. No text, no minhashing, no all-pairs, no quadratic
+    the bucket key (ReusedExchange with the groupBy); CC by alternating
+    large-/small-star contraction (neardup_components). No text, no minhashing, no all-pairs, no quadratic
     fan-out."""
     b = bands.select(id_col, "band_idx", "band_key").distinct()
     # materialize the deduped band table ONCE: the star-edge aggregate, the

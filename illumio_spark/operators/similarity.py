@@ -43,6 +43,42 @@ def cosine(a, b):
     return F.try_divide(_dot(a, b), l2_norm(a) * l2_norm(b))
 
 
+# no signature type hints: pandas_udf's hint inference cannot resolve
+# string annotations here (same constraint as lsh_bucket_pandas)
+def _cosine_batch(va, vb):
+    """cosine_pandas's Arrow batch: row-wise cosine of two vector Series.
+
+    NULL / ragged guard (r8, ADVICE r7): the expression cosine yields NULL
+    for a NULL vector and for mismatched lengths (zip_with); the numpy
+    conversion would instead raise inside the UDF. Any value that is not
+    a vector (None, a float NaN) takes the NULL path, as does a length
+    mismatch. Score only the valid rows, NULL the rest."""
+    import pandas as pd
+
+    def length(x):
+        return len(x) if isinstance(x, (list, tuple, np.ndarray)) else -1
+
+    la = va.map(length).to_numpy()
+    lb = vb.map(length).to_numpy()
+    valid = (la >= 0) & (la == lb)
+    result = pd.Series([None] * len(va), dtype="object")
+    if valid.any():
+        for L, idx in pd.Series(range(len(va)))[valid].groupby(la[valid]):
+            rows = idx.to_numpy()
+            A = np.array(va.iloc[rows].tolist(), dtype=np.float64)
+            B = np.array(vb.iloc[rows].tolist(), dtype=np.float64)
+            num = (A * B).sum(axis=1)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                out = num / (np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1))
+            # non-finite → NULL, not NaN: Spark sorts NaN FIRST under
+            # desc() (measured: [NaN, 0.5, NULL]), so a NaN cosine
+            # would rank a zero-norm vector as every query's top
+            # neighbor while try_divide's NULL correctly sorts last
+            vals = pd.Series(out, dtype="object").where(np.isfinite(out), None)
+            result.iloc[rows] = vals.to_numpy()
+    return result
+
+
 def cosine_pandas(a, b) -> "F.Column":
     """Arrow-batched row-wise cosine — the engine-default alternative to
     the `cosine` expression when a column of already-materialized
@@ -63,44 +99,10 @@ def cosine_pandas(a, b) -> "F.Column":
     few rows at high dim (768-dim ANN bench, ~50 k candidates: IVF
     2.9 s expr vs 4.1 s pandas). Both modes stay available for exactly
     this reason."""
-    import pandas as pd
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
-    # no signature type hints: pandas_udf's hint inference cannot resolve
-    # string annotations here (same constraint as lsh_bucket_pandas)
-    def _cos(va, vb):
-        # NULL / ragged guard (r8, ADVICE r7): the expression cosine
-        # yields NULL for a NULL vector and for mismatched lengths
-        # (zip_with); the numpy conversion would instead raise inside
-        # the UDF. Score only the valid rows, NULL the rest.
-        la = va.map(lambda x: -1 if x is None else len(x))
-        lb = vb.map(lambda x: -1 if x is None else len(x))
-        valid = (la.to_numpy() >= 0) & (la.to_numpy() == lb.to_numpy())
-        result = pd.Series([None] * len(va), dtype="object")
-        if valid.any():
-            for L, idx in pd.Series(range(len(va)))[valid].groupby(
-                la.to_numpy()[valid]
-            ):
-                rows = idx.to_numpy()
-                A = np.array(va.iloc[rows].tolist(), dtype=np.float64)
-                B = np.array(vb.iloc[rows].tolist(), dtype=np.float64)
-                num = (A * B).sum(axis=1)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    out = num / (
-                        np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-                    )
-                # non-finite → NULL, not NaN: Spark sorts NaN FIRST under
-                # desc() (measured: [NaN, 0.5, NULL]), so a NaN cosine
-                # would rank a zero-norm vector as every query's top
-                # neighbor while try_divide's NULL correctly sorts last
-                vals = pd.Series(out, dtype="object").where(
-                    np.isfinite(out), None
-                )
-                result.iloc[rows] = vals.to_numpy()
-        return result
-
-    return pandas_udf(_cos, T.DoubleType())(a, b)
+    return pandas_udf(_cosine_batch, T.DoubleType())(a, b)
 
 
 def brute_force_topk(

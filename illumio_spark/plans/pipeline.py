@@ -27,13 +27,28 @@ Scale design (the 100 TB point — each decision is a shuffle/pass saved):
     Catalyst's EliminateSorts; the wide terminal sort measured +0.4 s at
     1.3M rows). Hash partitioning avoids repartitionByRange's extra
     sampling pass over the (expensive) parse.
+
+Fixed per-run cost (paid by every run and every streaming micro-batch):
+  - no RDD-backed local frames: the enrich lookup and the rollups are
+    inline VALUES tables (LocalRelation), so the lookup broadcasts
+    without a job and the rollup write runs one task; createDataFrame
+    over a Python list scans a parallelized RDD instead.
+  - no inference reads of committed runs: TableIO reads each run with the
+    schema its manifest recorded, so no footer-inference job per read.
+  - parse/enrich/format Column expressions are built once per py4j
+    gateway (functions.once_per_gateway) and reused for every plan: the
+    ~5,500 py4j round-trips of building them cost ~1 s per run. The
+    withColumns stages, and so the projection boundaries, are unchanged.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+import functools
+
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
 from illumio_spark import schema as S
+from illumio_spark.functions import once_per_gateway
 from illumio_spark.functions.format import with_routed_text
 from illumio_spark.functions.parse import parse_turns
 
@@ -41,15 +56,53 @@ NULL_TOOL_KEY = "__none__"
 TURN_BLOCK = 4096  # max turns of one conversation per partition (skew bound)
 
 
-def enrichment_lookup(spark: SparkSession) -> DataFrame:
-    """(role, tool) → event_type, severity — FIXTURES.md §B broadcast side."""
+def _sql_str(v: str) -> str:
+    """A SQL string literal for a module constant (never for user input)."""
+    if "'" in v or "\\" in v:
+        raise ValueError(f"constant needs escaping: {v!r}")
+    return f"'{v}'"
+
+
+@functools.cache
+def _lookup_sql() -> str:
     sev = {e: s for e, s, _ in S.severity_rows()}
-    rows = [
-        (role, tool if tool is not None else NULL_TOOL_KEY, et, sev[et])
+    rows = ",\n".join(
+        "(" + ", ".join(map(_sql_str, (role, tool_key, et, sev[et]))) + ")"
         for role, tool, et in S.role_tool_event_rows()
-    ]
-    return spark.createDataFrame(
-        rows, "lk_role string, lk_tool_key string, lk_event_type string, lk_severity string"
+        for tool_key in [tool if tool is not None else NULL_TOOL_KEY]
+    )
+    return (
+        f"SELECT * FROM VALUES\n{rows}\n"
+        "AS lookup(lk_role, lk_tool_key, lk_event_type, lk_severity)"
+    )
+
+
+def enrichment_lookup(spark: SparkSession) -> DataFrame:
+    """(role, tool) → event_type, severity — FIXTURES.md §B broadcast side.
+
+    An inline VALUES table (a LocalRelation): the broadcast needs no job,
+    where a createDataFrame(list) frame scans a parallelized RDD."""
+    return spark.sql(_lookup_sql())
+
+
+@once_per_gateway
+def _enrich_columns() -> tuple[Column, Column, dict[str, Column]]:
+    """(tool_key, join condition, trimmed event_type/severity) for the
+    enrich step (built once per gateway)."""
+    from illumio_spark.functions.format import _clean as clean  # Python-strip semantics
+
+    is_audit = F.col("event_class") == S.CLASS_AUDITABLE
+    return (
+        F.coalesce(F.col("tool"), F.lit(NULL_TOOL_KEY)),
+        (F.col("role") == F.col("lk_role")) & (F.col("tool_key") == F.col("lk_tool_key")),
+        {
+            "event_type": F.when(is_audit, clean(F.col("a_event_type"))).otherwise(
+                F.col("lk_event_type")
+            ),
+            "severity": F.when(is_audit, clean(F.col("a_severity"))).otherwise(
+                F.col("lk_severity")
+            ),
+        },
     )
 
 
@@ -57,26 +110,13 @@ def parse_enrich_format(
     spark: SparkSession, transcripts: DataFrame, parser: str = "jvm"
 ) -> DataFrame:
     df = parse_turns(transcripts, parser=parser)
-
-    lk = enrichment_lookup(spark)
-    df = df.withColumn("tool_key", F.coalesce(F.col("tool"), F.lit(NULL_TOOL_KEY)))
-    df = df.join(
-        F.broadcast(lk),
-        (df.role == lk.lk_role) & (df.tool_key == lk.lk_tool_key),
-        "left",
-    ).drop("lk_role", "lk_tool_key", "tool_key")
-
-    from illumio_spark.functions.format import _clean as clean  # Python-strip semantics
-
-    is_audit = F.col("event_class") == S.CLASS_AUDITABLE
-    df = df.withColumn(
-        "event_type",
-        F.when(is_audit, clean(F.col("a_event_type"))).otherwise(F.col("lk_event_type")),
-    ).withColumn(
-        "severity",
-        F.when(is_audit, clean(F.col("a_severity"))).otherwise(F.col("lk_severity")),
-    ).drop("lk_event_type", "lk_severity")
-
+    tool_key, on, trimmed = _enrich_columns()
+    df = (
+        df.withColumn("tool_key", tool_key)
+        .join(F.broadcast(enrichment_lookup(spark)), on, "left")
+        .drop("lk_role", "lk_tool_key", "tool_key")
+    )
+    df = df.withColumns(trimmed).drop("lk_event_type", "lk_severity")
     return with_routed_text(df)
 
 
@@ -131,13 +171,28 @@ def ordered_for_sink(
     return df.sortWithinPartitions("conv_id", "turn_idx") if sort else df
 
 
+_ROLLUPS_SQL = """SELECT * FROM VALUES
+  (:summary, 'routed_events', CAST(:n_summary AS BIGINT), :run_id),
+  (:auditable, 'routed_events', CAST(:n_auditable AS BIGINT), :run_id),
+  (CAST(NULL AS STRING), 'dead_letter', CAST(:n_dead AS BIGINT), :run_id)
+AS rollups(event_class, sink, n_rows, run_id)"""
+
+
 def rollups_from_counts(counts: dict, run_id: str, spark: SparkSession) -> DataFrame:
-    rows = [
-        (S.CLASS_SUMMARY, "routed_events", counts.get("n_summary", 0), run_id),
-        (S.CLASS_AUDITABLE, "routed_events", counts.get("n_auditable", 0), run_id),
-        (None, "dead_letter", counts.get("n_dead", 0), run_id),
-    ]
-    return spark.createDataFrame(rows, S.ROLLUPS_SCHEMA)
+    """Per-sink row counts as an inline VALUES table (a LocalRelation: its
+    write runs one task, not one per core); run_id and the counts are
+    bound parameters."""
+    return spark.sql(
+        _ROLLUPS_SQL,
+        args={
+            "summary": S.CLASS_SUMMARY,
+            "auditable": S.CLASS_AUDITABLE,
+            "n_summary": counts.get("n_summary", 0),
+            "n_auditable": counts.get("n_auditable", 0),
+            "n_dead": counts.get("n_dead", 0),
+            "run_id": run_id,
+        },
+    )
 
 
 def checkpoints_from_output(out_df: DataFrame, run_id: str) -> DataFrame:

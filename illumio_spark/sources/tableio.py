@@ -18,6 +18,7 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from illumio_spark.session import iceberg_available
 
@@ -125,23 +126,13 @@ class TableIO:
         return path
 
     def _read_run_path(self, spark: SparkSession, path: str, schema_str: str) -> DataFrame:
-        """Read one run dir; an EMPTY partitioned write leaves no parquet
-        files (UNABLE_TO_INFER_SCHEMA), so fall back to an empty frame with
-        the manifest-recorded schema — empty inputs must round-trip."""
-        from pyspark.errors import AnalysisException
+        """Read one committed run dir with the schema its manifest recorded.
 
-        try:
-            return spark.read.parquet(path)
-        except AnalysisException as e:
-            # ONLY the empty-run case (a partitioned write of zero rows
-            # leaves no parquet files) reads back as an empty frame; a
-            # corrupt or partially-deleted run dir must fail loudly
-            msg = str(e)
-            if "UNABLE_TO_INFER_SCHEMA" in msg and os.path.isdir(path):
-                from pyspark.sql.types import StructType
-
-                return spark.createDataFrame([], StructType.fromDDL(schema_str))
-            raise
+        No footer-inference job per read, and an EMPTY partitioned write
+        (no parquet files) reads back empty with its columns; a deleted
+        run dir still fails (PATH_NOT_FOUND). Partition columns come back
+        last, as partition discovery orders them."""
+        return spark.read.schema(StructType.fromDDL(schema_str)).parquet(path)
 
     def read(self, spark: SparkSession, table: str, run_id: str | None = None) -> DataFrame:
         if self.use_iceberg:

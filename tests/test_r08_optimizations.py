@@ -278,6 +278,28 @@ def test_matmul_and_pandas_cosine_null_ragged_vectors(spark):
     assert want_e[1:] == [None, None, None, None]
 
 
+def test_pandas_cosine_non_sequence_is_null(monkeypatch):
+    """ADVICE r8: cosine_pandas's NULL probe treated only None as NULL;
+    any other non-vector (a float NaN from a pandas null) raised
+    TypeError in len(x) and failed the whole batch. Captures the batch
+    function cosine_pandas hands to pandas_udf and runs it directly."""
+    import numpy as np
+    import pandas as pd
+    import pyspark.sql.functions as PF
+
+    from illumio_spark.operators.similarity import cosine_pandas
+
+    captured = []
+    monkeypatch.setattr(
+        PF, "pandas_udf", lambda fn, _type: captured.append(fn) or (lambda *cols: None)
+    )
+    cosine_pandas(None, None)
+    (batch,) = captured
+    va = pd.Series([np.array([1.0, 0.0]), float("nan"), np.array([3.0, 4.0]), None])
+    vb = pd.Series([np.array([1.0, 0.0]), np.array([1.0, 0.0]), float("nan"), [3.0, 4.0]])
+    assert batch(va, vb).tolist() == [1.0, None, None, None]
+
+
 def test_matmul_block_bound_adapts(spark):
     """ADVICE r7 (medium): a large bucket must not allocate a
     block x M float64 sims matrix beyond the cell budget — verified
