@@ -9,8 +9,9 @@ Spark-first over a table of multi-turn agent/conversation transcripts:
 
 Design (SURVEY.md §1.2 / §7):
   - DataFrame/SQL declarative plans; Catalyst + AQE pick physical strategy.
-  - Grok/regex field extraction as vectorized Arrow-batched pandas UDFs
-    (reference: app/log_processor.py:368-497, row-at-a-time Python dicts).
+  - Grok/regex field extraction as JVM regex + from_json expressions
+    inside whole-stage codegen, no Python worker (reference:
+    app/log_processor.py:368-497, row-at-a-time Python dicts).
   - Enrichment via broadcast equi-joins on small lookup tables
     (reference: hard-coded maps, app/log_processor.py:370,448-450).
   - Fan-out to per-sink tables (routed_events / dead_letter / rollups)

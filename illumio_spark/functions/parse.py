@@ -1,25 +1,20 @@
-"""Vectorized parse + classification of transcript turns.
+"""JVM parse + classification of transcript turns.
 
 The grok core (reference app/log_processor.py:344-356 NDJSON parse and
-:399-461 per-class extraction) in two stages:
+:399-461 per-class extraction) as Catalyst expressions only — no Python
+worker, no Arrow transfer; the whole parse runs inside whole-stage
+codegen:
 
-1. ONE Arrow-batched ``mapInPandas`` pass: a single vectorized
-   ``pd.Series.str.extract`` for the summary class, strict ``json.loads``
-   validation over only the audit-candidate minority (classification must
-   match the oracle's json.loads semantics exactly — ``from_json`` is
-   permissive and would accept partially-truncated JSON), numpy masks for
-   routing. Never per-row Python over the hot path.
-2. JVM-side ``from_json`` with the full nested schema
+1. Summary class: one anchored ``regexp_replace`` rewrites a matching
+   line to its eight groups joined by a sentinel, a limit-8 ``split``
+   extracts them (msg rides last, verbatim). A row is a summary iff the
+   rewrite changed it.
+2. Auditable class: ``from_json`` with the full nested schema
    (``array<struct<notification_type, info:struct<...>>>`` +
-   ``map<string,string>`` labels) and nested path extraction
-   ``audit.notifications[0].info.src_ip`` — the reference's nested
-   auditable_event shape (app/log_processor.py:410-419) as Catalyst
-   expressions inside whole-stage codegen, no Python.
-
-mapInPandas (not a scalar struct UDF) is deliberate: a struct-returning
-pandas UDF gets re-evaluated once per field reference after Catalyst's
-projection collapse (measured 3-10× re-execution); mapInPandas is a real
-materialization barrier, so Python runs exactly once per batch.
+   ``map<string,string>`` labels) and strict-JSON options, gated to
+   rows whose stripped text starts with ``{``, plus nested path
+   extraction ``audit.notifications[0].info.src_ip`` — the reference's
+   nested auditable_event shape (app/log_processor.py:410-419).
 
 Routing semantics (mirrors oracle.parse_text exactly):
   1. null/blank text                      → dead letter, 'empty_text'
@@ -30,22 +25,14 @@ Routing semantics (mirrors oracle.parse_text exactly):
 
 from __future__ import annotations
 
-import json
 import re
-from collections.abc import Iterator
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F
 
 from illumio_spark import schema as S
 from illumio_spark.functions import once_per_gateway
 from illumio_spark.functions.format import py_strip
 
-SUMMARY_COLS = [f"s_{f}" for f in S.SUMMARY_TEXT_FIELDS]
-
-# Java regex variant of the summary grok pattern: Java named groups forbid
-# underscores, and extraction is by index anyway — strip the (?P<name> names
 # Java-regex port of the oracle's Python pattern. Three deltas matter:
 #   - named groups: Java has no (?P<name>) — strip to positional
 #   - \S: Python's \s is the str.isspace() set (incl. \x1c-\x1f, NEL, NBSP,
@@ -66,7 +53,7 @@ _JAVA_SUMMARY_REGEX = re.sub(r"\(\?P<[^>]+>", "(", S.SUMMARY_TEXT_REGEX)
 # Unicode whitespace/digits, no \x1c-\x1f — see format.PY_TRICKY_RE), Java's
 # primitive \S/\d classes agree with Python's exactly, and they measure ~6×
 # faster than the 20-range custom class (0.9 s vs 5.5 s per pass over 1.3M
-# rows). parse_turns_jvm picks per row via one cheap two-range scan.
+# rows). parse_turns picks per row via one cheap two-range scan.
 _JAVA_SUMMARY_REGEX_ASCII = "(?s)" + _JAVA_SUMMARY_REGEX
 _JAVA_SUMMARY_REGEX = "(?s)" + _JAVA_SUMMARY_REGEX.replace(
     r"\S", f"[^{_PY_WS_CLASS}]"
@@ -78,71 +65,10 @@ _JAVA_SUMMARY_REGEX = "(?s)" + _JAVA_SUMMARY_REGEX.replace(
 # blank event_type) already nulls out identically (verified empirically)
 AUDIT_JSON_OPTIONS = {"allowSingleQuotes": "false"}
 
-PARSED_FIELDS = [
-    *[T.StructField(c, T.StringType(), True) for c in SUMMARY_COLS],
-    T.StructField("event_class", T.StringType(), True),
-    T.StructField("error_reason", T.StringType(), True),
-]
 
-
-def parsed_schema(input_schema: T.StructType) -> T.StructType:
-    return T.StructType(list(input_schema.fields) + PARSED_FIELDS)
-
-
-def _is_valid_audit(s: str) -> bool:
-    """Strict oracle-equivalent audit check: JSON object with a non-blank
-    event_type (json.loads semantics, NOT Jackson-permissive)."""
-    try:
-        obj = json.loads(s)
-    except (json.JSONDecodeError, ValueError):
-        return False
-    if not isinstance(obj, dict):
-        return False
-    et = obj.get("event_type")
-    if et is None or (isinstance(et, str) and not et.strip()):
-        return False
-    return True
-
-
-def parse_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    text = pdf["text"]
-    notnull = text.notna()
-    stripped = text.where(notnull, "").str.strip()
-    blank = ~notnull | (stripped == "")
-
-    # summary class: one vectorized regex pass (named groups)
-    sm = text.where(notnull, "").str.extract(S.SUMMARY_TEXT_REGEX)
-    sm.columns = SUMMARY_COLS
-    is_summary = sm["s_act"].notna().to_numpy()
-
-    # auditable class: strict json.loads VALIDATION over candidates only
-    # (~9% of rows); field extraction happens JVM-side via from_json
-    is_cand = (~blank) & (~is_summary) & stripped.str.startswith("{")
-    is_audit = np.zeros(len(pdf), dtype=bool)
-    cand_idx = np.flatnonzero(is_cand.to_numpy())
-    if len(cand_idx):
-        texts = text.to_numpy()
-        for i in cand_idx:
-            is_audit[i] = _is_valid_audit(texts[i])
-
-    event_class = np.where(
-        blank, None, np.where(is_summary, S.CLASS_SUMMARY, np.where(is_audit, S.CLASS_AUDITABLE, None))
-    )
-    error_reason = np.where(
-        blank, S.ERROR_EMPTY, np.where(is_summary | is_audit, None, S.ERROR_UNPARSEABLE)
-    )
-
-    out = pdf.copy()
-    for c in SUMMARY_COLS:
-        out[c] = sm[c]  # NaN (→ null) wherever the regex didn't match
-    out["event_class"] = event_class
-    out["error_reason"] = error_reason
-    return out
-
-
-@once_per_gateway
 def audit_field_columns() -> dict[str, Column]:
-    """Flat a_* extraction expressions over the `audit` struct column.
+    """Flat a_* extraction expressions over the `audit` struct column
+    (the last of _jvm_parse_stages, which builds it once per gateway).
 
     Nested path extraction is pure Catalyst: notifications[0].info.* via
     F.get (null-safe on empty/missing arrays under ANSI mode), matching the
@@ -181,35 +107,6 @@ def audit_field_columns() -> dict[str, Column]:
     }
 
 
-def with_audit_fields(df: DataFrame) -> DataFrame:
-    """+ `audit` struct (from_json, nested schema) and flat a_* columns.
-
-    from_json runs only on auditable-classified rows (when() gates the
-    Jackson parse off the summary/dead-letter majority)."""
-    is_audit = F.col("event_class") == S.CLASS_AUDITABLE
-    df = df.withColumn(
-        "audit",
-        F.when(is_audit, F.from_json(F.col("text"), S.AUDIT_JSON_SCHEMA, AUDIT_JSON_OPTIONS)),
-    )
-    return df.withColumns(audit_field_columns())
-
-
-def parse_turns_pandas(df: DataFrame) -> DataFrame:
-    """transcripts → + summary s_* columns, event_class, error_reason,
-    audit struct + flat a_* nested extractions (Arrow-batched pandas path).
-
-    This is the mandated pandas-UDF grok surface — use it when extraction
-    genuinely needs Python (exotic grok, per-batch state). For this regex-
-    expressible pattern the JVM path below is faster and scales better."""
-    schema = parsed_schema(df.schema)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield parse_batch(pdf)
-
-    return with_audit_fields(df.mapInPandas(run, schema=schema))
-
-
 # Split sentinel for the one-pass group extraction. '\n' is PROVABLY
 # collision-free for every non-terminal field: act/sn/state match the
 # Python-\S class (no whitespace of any kind, so no '\n'), the four digit
@@ -227,7 +124,7 @@ _PARSE_TEMPS = ("_tricky", "_stripped", "_is_summary", "_sum_repl", "_sum_parts"
 
 @once_per_gateway
 def _jvm_parse_stages() -> list[dict[str, Column]]:
-    """The withColumns stages of parse_turns_jvm, in order (built once per
+    """The withColumns stages of parse_turns, in order (built once per
     gateway; each dict is one projection)."""
     text = F.col("text")
     # One cheap two-range scan decides, per row, whether the exact Unicode
@@ -297,17 +194,16 @@ def _jvm_parse_stages() -> list[dict[str, Column]]:
     ]
 
 
-def parse_turns_jvm(df: DataFrame) -> DataFrame:
-    """Full-JVM parse: identical routing + extraction semantics, zero Python.
+def parse_turns(df: DataFrame) -> DataFrame:
+    """transcripts → + s_* summary columns, event_class, error_reason,
+    `audit` struct and flat a_* nested extractions; zero Python.
 
-    Summary extraction is TWO regex passes total (rlike to classify, one
-    regexp_replace rewriting the line to $1⏎$2⏎…$8, then a limit-8 split
-    whose last element keeps msg verbatim) instead of eight regexp_extract
-    calls; audit classification is from_json with strict-json options
-    (alignment with the oracle's json.loads verified on every malformed
-    class in the corpus). Everything stays inside whole-stage codegen /
-    Catalyst — no Arrow transfer, no Python workers, which is worth
-    ~15-25% e2e and scales with cores (BENCH/BASELINE.md).
+    Summary extraction is ONE regex pass (the group-rewriting
+    regexp_replace, then a limit-8 split whose last element keeps msg
+    verbatim) instead of eight regexp_extract calls; audit classification
+    is from_json with strict-json options (alignment with the oracle's
+    json.loads verified on every malformed class in the corpus).
+    Everything stays inside whole-stage codegen / Catalyst.
 
     The three expensive shared subtrees (py_strip, the rlike, the
     replace→split) are each materialized ONCE as a temp column: inlined,
@@ -320,8 +216,3 @@ def parse_turns_jvm(df: DataFrame) -> DataFrame:
         df = df.withColumns(stage)
     return df.drop(*_PARSE_TEMPS)
 
-
-def parse_turns(df: DataFrame, parser: str = "jvm") -> DataFrame:
-    """transcripts → + parsed columns. parser: 'jvm' (default, zero-Python
-    codegen path) or 'pandas' (Arrow-batched mapInPandas grok surface)."""
-    return parse_turns_jvm(df) if parser == "jvm" else parse_turns_pandas(df)

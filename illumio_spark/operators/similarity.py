@@ -44,7 +44,7 @@ def cosine(a, b):
 
 
 # no signature type hints: pandas_udf's hint inference cannot resolve
-# string annotations here (same constraint as lsh_bucket_pandas)
+# string annotations under `from __future__ import annotations`
 def _cosine_batch(va, vb):
     """cosine_pandas's Arrow batch: row-wise cosine of two vector Series.
 
@@ -142,22 +142,20 @@ def hyperplanes(dim: int, n_planes: int = 16, seed: int = LSH_SEED) -> np.ndarra
     return rng.standard_normal((n_planes, dim))
 
 
-# above this many plane literals (n_planes × dim), switch the bucket
-# assignment from JVM fold expressions to one Arrow-batched numpy matmul —
-# giant literal expression trees bloat the plan/codegen, while a (batch ×
-# dim) @ (dim × planes) matmul ships the planes once per worker
+# above this many plane literals (n_tables × n_planes × dim), switch the
+# bucket assignment from JVM fold expressions to one Arrow-batched numpy
+# matmul — giant literal expression trees bloat the plan/codegen, while a
+# (batch × dim) @ (dim × planes·tables) matmul ships the planes once per
+# worker. Both give identical buckets (pytest-asserted); small plane sets
+# stay on the fold because it needs no Python worker stage
 LSH_LITERAL_BUDGET = 4096
 
 
 def lsh_bucket_column(vec, n_planes: int, dim: int, seed: int) -> "F.Column":
-    """Random-hyperplane LSH: sign pattern of <v, p_i> → integer bucket.
-
-    Small plane sets are embedded as literal arrays (pure JVM fold, zero
-    Python); large ones (real embedding dims × many planes) go through
-    lsh_bucket_pandas — a vectorized matmul with the planes captured in the
-    UDF closure (broadcast once per worker)."""
-    if n_planes * dim > LSH_LITERAL_BUDGET:
-        return lsh_bucket_pandas(vec, n_planes, dim, seed)
+    """Random-hyperplane LSH: sign pattern of <v, p_i> → integer bucket,
+    with the planes embedded as literal arrays (pure JVM fold, zero
+    Python). Only for plane sets within LSH_LITERAL_BUDGET; larger ones
+    go through lsh_buckets_pandas_multi (see _bucketed_long)."""
     planes = hyperplanes(dim, n_planes, seed)
     bucket = F.lit(0).cast("long")
     for i, p in enumerate(planes):
@@ -165,26 +163,6 @@ def lsh_bucket_column(vec, n_planes: int, dim: int, seed: int) -> "F.Column":
         bit = F.when(_dot(vec, plane) > 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
         bucket = bucket.bitwiseOR(bit)
     return bucket
-
-
-def lsh_bucket_pandas(vec, n_planes: int, dim: int, seed: int) -> "F.Column":
-    """Bucket assignment as ONE numpy matmul per Arrow batch: signs of
-    (batch × dim) @ planes.T, packed to an integer via bit weights."""
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
-    planes_t = hyperplanes(dim, n_planes, seed).T  # (dim, n_planes)
-    weights = (1 << np.arange(n_planes)).astype(np.int64)
-
-    def _bucket(v):
-        mat = np.asarray(v.tolist(), dtype=np.float64)  # (batch, dim)
-        bits = (mat @ planes_t) > 0  # (batch, n_planes)
-        return pd.Series(bits @ weights)
-
-    # non-decorator form: `from __future__ import annotations` stringifies
-    # type hints, which pandas_udf's hint inference can't resolve here
-    return pandas_udf(_bucket, T.LongType())(vec)
 
 
 def lsh_buckets_pandas_multi(vec, n_planes: int, dim: int, seeds: list[int]) -> "F.Column":

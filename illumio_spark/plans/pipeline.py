@@ -106,10 +106,8 @@ def _enrich_columns() -> tuple[Column, Column, dict[str, Column]]:
     )
 
 
-def parse_enrich_format(
-    spark: SparkSession, transcripts: DataFrame, parser: str = "jvm"
-) -> DataFrame:
-    df = parse_turns(transcripts, parser=parser)
+def parse_enrich_format(spark: SparkSession, transcripts: DataFrame) -> DataFrame:
+    df = parse_turns(transcripts)
     tool_key, on, trimmed = _enrich_columns()
     df = (
         df.withColumn("tool_key", tool_key)
@@ -212,7 +210,6 @@ def run_pipeline(
     io=None,
     run_id: str = "run0",
     sink_partitions: int | None = None,
-    parser: str = "jvm",
 ):
     """Execute the full fan-out.
 
@@ -240,7 +237,7 @@ def run_pipeline(
         # join, gets silently removed by Catalyst's EliminateSorts, and the
         # terminal wide sort measured only +0.4 s at 1.3M rows anyway
         transcripts = ordered_for_sink(transcripts, sink_partitions, sort=False)
-    enriched = parse_enrich_format(spark, transcripts, parser=parser)
+    enriched = parse_enrich_format(spark, transcripts)
 
     if io is None:
         out = {

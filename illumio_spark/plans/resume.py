@@ -51,7 +51,6 @@ def run_resumable(
     io,
     run_id: str,
     sink_partitions: int | None = None,
-    parser: str = "jvm",
 ):
     """Process only not-yet-committed days; append as a new run commit.
 
@@ -59,6 +58,4 @@ def run_resumable(
     todo = pending_input(spark, transcripts, io)
     if todo.isEmpty():
         return None
-    return run_pipeline(
-        spark, todo, io=io, run_id=run_id, sink_partitions=sink_partitions, parser=parser
-    )
+    return run_pipeline(spark, todo, io=io, run_id=run_id, sink_partitions=sink_partitions)

@@ -258,7 +258,12 @@ def _read_frontier_excluding(spark, path: str, batch_id: int, cols: list[str]):
     the batch currently being (re)processed — partition pruning drops the
     dir before any file is touched, so a replayed batch sees exactly the
     frontier state its first attempt saw. Returns None when the frontier
-    does not exist yet (first batch)."""
+    does not exist yet (first batch).
+
+    A dir that mixes flat parquet files (the pre-r8 appended layout, or
+    a frontier bootstrapped flat) with batch=<id> dirs raises ValueError:
+    Spark's partition discovery silently skips the flat files, so the
+    previously-seen docs would be re-kept."""
     from illumio_spark.sources.tableio import read_parquet_if_exists
     from pyspark.sql import functions as F
 
@@ -266,6 +271,12 @@ def _read_frontier_excluding(spark, path: str, batch_id: int, cols: list[str]):
     if df is None:
         return None
     if "batch" in df.columns:
+        # inputFiles is the listing the read already made — no extra IO
+        if any(not f.rsplit("/", 2)[-2].startswith("batch=") for f in df.inputFiles()):
+            raise ValueError(
+                f"frontier {path} mixes flat parquet files with batch=<id> dirs; "
+                f"move the flat files under {path}/batch=-1 and restart"
+            )
         df = df.filter(F.col("batch") != batch_id)
     return df.select(*cols)
 

@@ -48,9 +48,6 @@ def main() -> None:
     ap.add_argument("--run-id", default=None)
     ap.add_argument("--resume", action="store_true", help="skip days already checkpointed")
     ap.add_argument("--sink-partitions", type=int, default=None)
-    ap.add_argument("--parser", default="jvm", choices=["jvm", "pandas"],
-                    help="jvm = zero-Python codegen parse (default); pandas = "
-                         "Arrow-batched mapInPandas grok (byte-equal)")
     ap.add_argument("--master", default=None, help="override master (default: from spark-submit)")
     ap.add_argument("--streaming", action="store_true",
                     help="run as a Structured Streaming job over --input (availableNow)")
@@ -58,10 +55,8 @@ def main() -> None:
 
     from illumio_spark.session import build_session
     from illumio_spark.sources.tableio import TableIO
-    from illumio_spark.metrics import attach_metrics
 
     spark = build_session(app_name="illumio_spark_pipeline", master=args.master)
-    metrics = attach_metrics(spark)
     io = TableIO(args.output)
     run_id = args.run_id or f"run-{int(time.time())}"
 
@@ -92,8 +87,7 @@ def main() -> None:
     if args.resume:
         from illumio_spark.plans.resume import run_resumable
 
-        result = run_resumable(spark, transcripts, io, run_id, args.sink_partitions,
-                               parser=args.parser)
+        result = run_resumable(spark, transcripts, io, run_id, args.sink_partitions)
         if result is None:
             print("[pipeline] nothing pending — all input days already committed")
             return
@@ -101,7 +95,7 @@ def main() -> None:
         from illumio_spark.plans.pipeline import run_pipeline
 
         result = run_pipeline(spark, transcripts, io=io, run_id=run_id,
-                              sink_partitions=args.sink_partitions, parser=args.parser)
+                              sink_partitions=args.sink_partitions)
 
     dt = time.time() - t0
     roll = {(r["event_class"], r["sink"]): r["n_rows"] for r in result["rollups"].collect()}
@@ -110,8 +104,6 @@ def main() -> None:
           f"({total / dt:,.0f} turns/s) → {args.output}")
     for (ec, sink), n in sorted(roll.items(), key=str):
         print(f"[pipeline]   {sink:>14s} {str(ec):>10s}: {n:,}")
-    for line in metrics.report():
-        print(f"[metrics] {line}")
 
     if args.ttl_cutoff:
         io.delete_where(spark, "pipeline_out", f"ts < timestamp'{args.ttl_cutoff}'")

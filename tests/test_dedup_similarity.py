@@ -91,20 +91,6 @@ def test_brute_force_topk(emb):
     assert by_rank[1] == 1  # the injected near-duplicate is the top neighbor
 
 
-def test_lsh_bucket_paths_agree(emb):
-    # the literal-fold JVM path and the matmul pandas path must assign
-    # identical buckets (same seeded planes, sign test on the same doubles)
-    from pyspark.sql import functions as F
-
-    v = F.col("embedding").cast("array<double>")
-    out = emb.select(
-        "vec_id",
-        SIM.lsh_bucket_column(v, 4, 16, SIM.LSH_SEED).alias("jvm"),
-        SIM.lsh_bucket_pandas(v, 4, 16, SIM.LSH_SEED).alias("np"),
-    ).collect()
-    assert all(r.jvm == r.np for r in out) and len(out) == 60
-
-
 def test_lsh_topk_recall(emb):
     qs = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")

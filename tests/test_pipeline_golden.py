@@ -119,19 +119,6 @@ def test_labels_map_fold_exercised(oracle_out):
         assert k in ("env", "team", "zone") and v != ""
 
 
-def test_pandas_parser_byte_equal(spark, oracle_out, transcripts_pdf):
-    """Both parse paths — full-JVM (default) and mapInPandas grok — must be
-    byte-equal to the oracle (and therefore to each other)."""
-    df = spark.createDataFrame(transcripts_pdf)
-    out = run_pipeline(spark, df, io=None, run_id="test", parser="pandas")
-    got = _sorted_pdf(out["routed_events"])
-    want = oracle_out["routed_events"]
-    assert len(got) == len(want)
-    assert (got["routed_text"].to_numpy() == want["routed_text"].to_numpy()).all()
-    dead = _sorted_pdf(out["dead_letter"])
-    assert (dead["error_reason"].to_numpy() == oracle_out["dead_letter"]["error_reason"].to_numpy()).all()
-
-
 def test_maptype_roundtrip_parquet(spark, transcripts_pdf, tmp_path):
     """The real MapType column survives a parquet sink round-trip."""
     from illumio_spark.plans.pipeline import parse_enrich_format

@@ -44,6 +44,9 @@ def test_enrich_join_is_broadcast(spark):
     plan = _plan(parse_enrich_format(spark, df))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+    # zero Python on the parse path: no Arrow/pickled Python worker stage
+    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, f"{node} in parse_enrich_format plan:\n{plan}"
 
 
 def test_single_exchange_in_pipeline(spark):

@@ -396,3 +396,31 @@ def test_embedding_neardup_stream_two_batches(spark):
     assert sorted(
         os.path.basename(p) for p in glob.glob(out + "/batch=*")
     ) == ["batch=0", "batch=1"]
+
+
+def test_frontier_mixed_flat_and_batch_layout_raises(spark, tmp_path):
+    """A frontier dir holding flat parquet files next to batch=<id> dirs
+    (a pre-r8 flat frontier the per-batch stream then wrote into) must
+    fail with an actionable message: partition discovery would silently
+    skip the flat files and re-keep every doc they record. Moving them
+    under batch=-1, as the message says, makes them readable again."""
+    import glob
+    import shutil
+
+    from illumio_spark.streaming.stateful import _read_frontier_excluding
+
+    frontier = str(tmp_path / "frontier")
+    cols = ["doc_id", "band_idx", "band_key"]
+    spark.createDataFrame([(1, 0, 5)], "doc_id long, band_idx int, band_key long") \
+        .coalesce(1).write.parquet(frontier)
+    spark.createDataFrame([(2, 0, 6)], "doc_id long, band_idx int, band_key long") \
+        .coalesce(1).write.parquet(f"{frontier}/batch=0")
+
+    with pytest.raises(ValueError, match=r"frontier .*frontier mixes flat.*batch=-1"):
+        _read_frontier_excluding(spark, frontier, 1, cols)
+
+    os.makedirs(f"{frontier}/batch=-1")
+    for f in glob.glob(f"{frontier}/part-*"):
+        shutil.move(f, f"{frontier}/batch=-1/")
+    got = _read_frontier_excluding(spark, frontier, 1, cols)
+    assert sorted(r.doc_id for r in got.collect()) == [1, 2]
