@@ -58,11 +58,12 @@ def parallelize_scan(df: DataFrame, *cols: Column | str) -> DataFrame:
     assignment feeding a differently-keyed shuffle), an unconditional
     shuffle would be pure overhead on a cluster whose scan already has
     thousands of splits — the classic local-only "win". Two probes:
-    - a lineage that already contains a shuffle exchange is distributed
-      at spark.sql.shuffle.partitions — pass through, and crucially do
-      NOT touch df.rdd (converting an AQE plan with shuffles to an RDD
-      executes its query stages eagerly: measured 2 eager jobs / 6.7 s
-      at plan-build time on the hash-embed lineage);
+    - a lineage that already contains an exchange — shuffle or broadcast
+      — passes through, and crucially does NOT touch df.rdd (converting
+      an AQE plan with exchanges to an RDD executes its query stages
+      eagerly: measured 2 eager jobs / 6.7 s at plan-build time on the
+      hash-embed lineage, and 1 job for a broadcast join over a one-file
+      scan);
     - otherwise the plan is narrow over its scan, df.rdd is job-free,
       and its partition count is the scan's split count: compacted
       single-row-group inputs report 1-2 and get the pinned
@@ -73,11 +74,6 @@ def parallelize_scan(df: DataFrame, *cols: Column | str) -> DataFrame:
     # runs; this is not the per-row .rdd anti-pattern the codebase bans.
     n = df.sparkSession.sparkContext.defaultParallelism
     plan = df._jdf.queryExecution().executedPlan().toString()
-    has_shuffle = any(
-        f"Exchange {kind}" in plan
-        for kind in ("hashpartitioning", "rangepartitioning",
-                     "RoundRobinPartitioning", "SinglePartition")
-    )
-    if has_shuffle or df.rdd.getNumPartitions() >= n:
+    if "Exchange" in plan or df.rdd.getNumPartitions() >= n:
         return df
     return df.repartition(n, *cols)

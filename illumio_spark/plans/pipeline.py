@@ -3,8 +3,7 @@
 One declarative DataFrame plan per run (reference: the hand-rolled poll
 loop + per-type dispatch at app/main.py:272-384):
 
-  transcripts ──parse (default: full-JVM regex + from_json, zero Python;
-                       alt: ONE mapInPandas grok pass, Arrow-batched)
+  transcripts ──parse (full-JVM regex + from_json, zero Python)
               ──enrich (broadcast equi-join, (role,tool)→event_type→severity)
               ──format (JVM concat expressions, byte-equal routed_text)
               ──fan-out (ONE write job: sinks as partition values +
@@ -135,25 +134,9 @@ def fanout_frame(enriched: DataFrame) -> DataFrame:
     )
 
 
-def routed_events(enriched: DataFrame) -> DataFrame:
-    return enriched.filter(F.col("event_class").isNotNull()).select(
-        "conv_id", "turn_idx", "event_class", "event_type", "severity", "routed_text", "ts"
-    )
-
-
-def dead_letter(enriched: DataFrame) -> DataFrame:
-    return enriched.filter(F.col("event_class").isNull()).select(
-        "conv_id",
-        "turn_idx",
-        F.col("text").alias("raw_text"),
-        "error_reason",
-        "ts",
-    )
-
-
 def ordered_for_sink(
     df: DataFrame,
-    n_partitions: int | None = None,
+    n_partitions: int,
     sort: bool = True,
     turn_block: int = TURN_BLOCK,
 ) -> DataFrame:
@@ -164,8 +147,7 @@ def ordered_for_sink(
     (skew-proof), each output file is sorted, and sorting the file set by
     (conv_id, turn_idx) reconstructs the total order."""
     block = (F.col("turn_idx") / turn_block).cast("int")
-    parts = [F.col("conv_id"), block]
-    df = df.repartition(n_partitions, *parts) if n_partitions else df.repartition(*parts)
+    df = df.repartition(n_partitions, F.col("conv_id"), block)
     return df.sortWithinPartitions("conv_id", "turn_idx") if sort else df
 
 
@@ -204,19 +186,11 @@ def checkpoints_from_output(out_df: DataFrame, run_id: str) -> DataFrame:
     )
 
 
-def run_pipeline(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    io=None,
-    run_id: str = "run0",
-    sink_partitions: int | None = None,
-):
-    """Execute the full fan-out.
-
-    With a TableIO: ONE write job over the input (sinks are partition
-    values, rollups ride via observe, checkpoints from read-back); returns
-    the read-back sink DataFrames.
-    Without: returns the lazy sink DataFrames (test mode).
+def run_pipeline(spark: SparkSession, transcripts: DataFrame, io, run_id: str = "run0"):
+    """Execute the full fan-out: ONE write job over the input (sinks are
+    partition values, rollups ride via observe, checkpoints from the
+    read-back of the committed output); returns the read-back sink
+    DataFrames.
 
     The (conv_id, turn_block) repartition happens on the NARROW input —
     before parse widens rows ~6× — so the plan's only shuffle moves the
@@ -225,44 +199,12 @@ def run_pipeline(
     1.3M rows; an earlier narrow sort is removed by EliminateSorts). This
     also fixes scan under-parallelism on small/compacted inputs
     (maxPartitionBytes can pack a whole small table into one task)."""
-    if io is not None:
-        if sink_partitions is None:
-            # over-partition ~4× the core count: Python-stage tasks pipeline
-            # against the JVM side (measured: 64 partitions beat 8 by 1.5×
-            # at local[8] and 2× at local[32]); on a cluster this is the
-            # usual 2-4 × total-cores rule
-            sink_partitions = spark.sparkContext.defaultParallelism * 4
-        # repartition narrow; the O1 sort happens at the SINK (terminal
-        # sortWithinPartitions below) — a sort placed here, under the enrich
-        # join, gets silently removed by Catalyst's EliminateSorts, and the
-        # terminal wide sort measured only +0.4 s at 1.3M rows anyway
-        transcripts = ordered_for_sink(transcripts, sink_partitions, sort=False)
-    enriched = parse_enrich_format(spark, transcripts)
-
-    if io is None:
-        out = {
-            "routed_events": routed_events(enriched),
-            "dead_letter": dead_letter(enriched),
-            "rollups": None,  # computed below without observe
-            "checkpoints": None,
-        }
-        counts = {
-            r["event_class"]: r["n"]
-            for r in enriched.groupBy("event_class")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        out["rollups"] = rollups_from_counts(
-            {
-                "n_summary": counts.get(S.CLASS_SUMMARY, 0),
-                "n_auditable": counts.get(S.CLASS_AUDITABLE, 0),
-                "n_dead": counts.get(None, 0),
-            },
-            run_id,
-            spark,
-        )
-        out["checkpoints"] = checkpoints_from_output(fanout_frame(enriched), run_id)
-        return out
+    # 4 × defaultParallelism (executors × cores); measured: 64 partitions
+    # beat 8 by 1.5× at local[8] and 2× at local[32]
+    n_partitions = spark.sparkContext.defaultParallelism * 4
+    enriched = parse_enrich_format(
+        spark, ordered_for_sink(transcripts, n_partitions, sort=False)
+    )
 
     obs = Observation("rollups")
     # terminal local sort = the O1 invariant: each sink file comes out
@@ -279,10 +221,7 @@ def run_pipeline(
     roll = rollups_from_counts(obs.get, run_id, spark)
     io.write(roll, "rollups", run_id)
 
-    out_df = io.read_sink(spark, "routed_events", run_id).select("ts").unionByName(
-        io.read_sink(spark, "dead_letter", run_id).select("ts")
-    )
-    ckpt = checkpoints_from_output(out_df, run_id)
+    ckpt = checkpoints_from_output(io.read(spark, "pipeline_out", run_id).select("ts"), run_id)
     io.write(ckpt, "checkpoints", run_id)
 
     return {

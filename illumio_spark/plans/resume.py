@@ -45,17 +45,11 @@ def pending_input(spark: SparkSession, transcripts: DataFrame, io) -> DataFrame:
     return keyed.join(F.broadcast(done), "partition_key", "left_anti").drop("partition_key")
 
 
-def run_resumable(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    io,
-    run_id: str,
-    sink_partitions: int | None = None,
-):
+def run_resumable(spark: SparkSession, transcripts: DataFrame, io, run_id: str):
     """Process only not-yet-committed days; append as a new run commit.
 
     Returns None if everything is already committed (idempotent re-run)."""
     todo = pending_input(spark, transcripts, io)
     if todo.isEmpty():
         return None
-    return run_pipeline(spark, todo, io=io, run_id=run_id, sink_partitions=sink_partitions)
+    return run_pipeline(spark, todo, io=io, run_id=run_id)

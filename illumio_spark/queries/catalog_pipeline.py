@@ -7,8 +7,10 @@ pytest golden suite byte-compares against) is run once over the
 deterministic seed-42 corpus by tools/gen_pipeline_oracle.py, and its
 summarized outputs (per-sink counts + order-insensitive md5 checksums)
 become a constant VALUES relation for DuckDB. The Spark side recomputes the
-same summaries from a live pipeline run — any routing / formatting /
-enrichment drift flips a checksum and fails the driver gate.
+same summaries from a live pipeline run: each row aggregates the sinks that
+run_pipeline COMMITTED (read back through TableIO, the production write
+path), so any routing / formatting / enrichment / sink-write drift flips a
+checksum and fails the driver gate.
 
 Inputs are synthesized deterministically in-process (seed 42, no external
 data) at the FIXED golden size, independent of sf_dir: these are
@@ -20,9 +22,11 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from illumio_spark import synth
-from illumio_spark.plans.pipeline import parse_enrich_format, routed_events, dead_letter
+from illumio_spark.plans.pipeline import parse_enrich_format, run_pipeline
+from illumio_spark.plans.resume import run_resumable
 from illumio_spark.queries import pipeline_golden as PG
 from illumio_spark.queries.catalog import q
+from illumio_spark.sources.tableio import TableIO
 
 _MOD = str(2**64)
 
@@ -78,6 +82,30 @@ def _session_cached(spark, name: str, build):
     return _SESSION_RESULTS[key]
 
 
+def _golden_sinks(spark) -> TableIO:
+    """The TableIO holding one committed run_pipeline over the golden
+    corpus (run_id 'golden'), built once per session."""
+
+    def build(root):
+        io = TableIO(root)
+        run_pipeline(spark, _golden_input(spark), io=io, run_id="golden")
+        return io
+
+    return _session_cached(spark, "pipeline_golden", build)
+
+
+def _routed_summary(routed):
+    return (
+        routed.groupBy("event_class")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.countDistinct("conv_id").alias("n_convs"),
+            _checksum("routed_text").alias("checksum"),
+        )
+        .orderBy("event_class")
+    )
+
+
 @q(
     "pipeline_routed_events",
     _values_sql(
@@ -87,17 +115,7 @@ def _session_cached(spark, name: str, build):
     ),
 )
 def pipeline_routed_events(spark, sf_dir):
-    enriched = parse_enrich_format(spark, _golden_input(spark))
-    return (
-        routed_events(enriched)
-        .groupBy("event_class")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.countDistinct("conv_id").alias("n_convs"),
-            _checksum("routed_text").alias("checksum"),
-        )
-        .orderBy("event_class")
-    )
+    return _routed_summary(_golden_sinks(spark).read_sink(spark, "routed_events", "golden"))
 
 
 @q(
@@ -119,17 +137,9 @@ def s7_gz_ndjson_ingest(spark, sf_dir):
     def build(out_dir):
         write_gz_fixture(synth.generate_pandas(PG.N_CONV, hot_frac=PG.HOT_FRAC), out_dir)
         raw = read_raw_gz(spark, f"{out_dir}/*.ndjson.gz")
-        enriched = parse_enrich_format(spark, raw)
-        return (
-            routed_events(enriched)
-            .groupBy("event_class")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.countDistinct("conv_id").alias("n_convs"),
-                _checksum("routed_text").alias("checksum"),
-            )
-            .orderBy("event_class")
-        )
+        io = TableIO(f"{out_dir}/sinks")
+        run_pipeline(spark, raw, io=io, run_id="s7")
+        return _routed_summary(io.read_sink(spark, "routed_events", "s7"))
 
     return _session_cached(spark, "s7_gz_fixture", build)
 
@@ -143,9 +153,9 @@ def s7_gz_ndjson_ingest(spark, sf_dir):
     ),
 )
 def pipeline_dead_letter(spark, sf_dir):
-    enriched = parse_enrich_format(spark, _golden_input(spark))
     return (
-        dead_letter(enriched)
+        _golden_sinks(spark)
+        .read_sink(spark, "dead_letter", "golden")
         .groupBy("error_reason")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -192,9 +202,6 @@ def a11_total_ever(spark, sf_dir):
     sqlite_sequence.seq): per-run committed row totals read back from the
     checkpoints table across a two-run resumable history — the manifest/
     snapshot lineage as a queryable relation."""
-    from illumio_spark.plans.pipeline import run_pipeline
-    from illumio_spark.plans.resume import run_resumable
-    from illumio_spark.sources.tableio import TableIO
 
     def build(root):
         io = TableIO(root)
@@ -225,9 +232,6 @@ def a2b_rollup_delta(spark, sf_dir):
     the report history as a queryable relation."""
     from pyspark.sql import Window
 
-    from illumio_spark.plans.pipeline import run_pipeline
-    from illumio_spark.plans.resume import run_resumable
-    from illumio_spark.sources.tableio import TableIO
 
     def build(root):
         io = TableIO(root)
@@ -254,9 +258,9 @@ def a2b_rollup_delta(spark, sf_dir):
     ),
 )
 def pipeline_rollup_counts(spark, sf_dir):
-    enriched = parse_enrich_format(spark, _golden_input(spark))
     return (
-        routed_events(enriched)
+        _golden_sinks(spark)
+        .read_sink(spark, "routed_events", "golden")
         .groupBy("event_class", "event_type", "severity")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy("event_class", "event_type", "severity")

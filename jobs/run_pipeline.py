@@ -15,9 +15,9 @@ Local smoke:
 
     python jobs/run_pipeline.py --synthetic 2000 --output /tmp/sinks
 
-On a real cluster, size --sink-partitions to executors × cores and leave
-partitioning/AQE to the session defaults; everything else (skew blocks,
-broadcast enrich, observe-based rollups) is inside the plan.
+On a real cluster, leave partitioning/AQE to the session defaults: the sink
+write uses 4 × executors × cores partitions, and everything else (skew
+blocks, broadcast enrich, observe-based rollups) is inside the plan.
 """
 
 from __future__ import annotations
@@ -47,7 +47,6 @@ def main() -> None:
     ap.add_argument("--output", required=True, help="sink root (TableIO)")
     ap.add_argument("--run-id", default=None)
     ap.add_argument("--resume", action="store_true", help="skip days already checkpointed")
-    ap.add_argument("--sink-partitions", type=int, default=None)
     ap.add_argument("--master", default=None, help="override master (default: from spark-submit)")
     ap.add_argument("--streaming", action="store_true",
                     help="run as a Structured Streaming job over --input (availableNow)")
@@ -87,15 +86,14 @@ def main() -> None:
     if args.resume:
         from illumio_spark.plans.resume import run_resumable
 
-        result = run_resumable(spark, transcripts, io, run_id, args.sink_partitions)
+        result = run_resumable(spark, transcripts, io, run_id)
         if result is None:
             print("[pipeline] nothing pending — all input days already committed")
             return
     else:
         from illumio_spark.plans.pipeline import run_pipeline
 
-        result = run_pipeline(spark, transcripts, io=io, run_id=run_id,
-                              sink_partitions=args.sink_partitions)
+        result = run_pipeline(spark, transcripts, io=io, run_id=run_id)
 
     dt = time.time() - t0
     roll = {(r["event_class"], r["sink"]): r["n_rows"] for r in result["rollups"].collect()}

@@ -47,6 +47,7 @@ def test_run_pipeline_cli_sinks_resume_and_usage(shared_session_conf, tmp_path, 
     lines = _main([*argv, "--resume"], monkeypatch, capsys)
     assert any("nothing pending" in l for l in lines), lines
 
-    with pytest.raises(SystemExit) as exc:
-        _main([*argv, "--parser", "pandas"], monkeypatch, capsys)
-    assert exc.value.code == 2
+    for removed in (["--parser", "pandas"], ["--sink-partitions", "8"]):
+        with pytest.raises(SystemExit) as exc:
+            _main([*argv, *removed], monkeypatch, capsys)
+        assert exc.value.code == 2

@@ -219,10 +219,9 @@ def test_expire_runs_empty_list_renders_no_sql(tmp_path):
     assert not [e for e in spark.log if e[0] == "sql"]  # no 'IN ()' ever rendered
 
 
-def test_session_attaches_iceberg_confs_only_with_jar(monkeypatch):
-    """build_session must not point spark.sql.catalog.local at a missing
-    runtime; with a (mocked) jar present the extension + hadoop catalog
-    confs are attached."""
+def _capture_builder(monkeypatch) -> dict:
+    """Swap SparkSession.builder for a fake that records the master and
+    every config build_session sets; returns that record."""
     from illumio_spark import session as S
 
     captured = {}
@@ -231,7 +230,8 @@ def test_session_attaches_iceberg_confs_only_with_jar(monkeypatch):
         def appName(self, *_):
             return self
 
-        def master(self, *_):
+        def master(self, m):
+            captured["master"] = m
             return self
 
         def config(self, k, v):
@@ -242,6 +242,16 @@ def test_session_attaches_iceberg_confs_only_with_jar(monkeypatch):
             return "session"
 
     monkeypatch.setattr(S.SparkSession, "builder", FakeBuilder())
+    return captured
+
+
+def test_session_attaches_iceberg_confs_only_with_jar(monkeypatch):
+    """build_session must not point spark.sql.catalog.local at a missing
+    runtime; with a (mocked) jar present the extension + hadoop catalog
+    confs are attached."""
+    from illumio_spark import session as S
+
+    captured = _capture_builder(monkeypatch)
     monkeypatch.setattr(S, "iceberg_available", lambda: True)
     assert S.build_session() == "session"
     assert captured["spark.sql.catalog.local"] == "org.apache.iceberg.spark.SparkCatalog"
@@ -252,3 +262,38 @@ def test_session_attaches_iceberg_confs_only_with_jar(monkeypatch):
     monkeypatch.setattr(S, "iceberg_available", lambda: False)
     S.build_session()
     assert "spark.sql.catalog.local" not in captured
+
+
+def test_session_defaults_sized_to_host(monkeypatch):
+    """With no env overrides, local[N] and the shuffle partitions follow
+    the host's core count, and the driver heap is min(16g, 60% of RAM):
+    a 4-core 15 GB host must not get local[32] and a 16g heap."""
+    import os
+
+    from illumio_spark import session as S
+
+    def host(cores, ram_gb):
+        pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": ram_gb * 2**30 // 4096}
+        monkeypatch.setattr(os, "cpu_count", lambda: cores)
+        monkeypatch.setattr(os, "sysconf", lambda name: pages[name])
+        captured.clear()
+        S.build_session()
+        return captured
+
+    captured = _capture_builder(monkeypatch)
+    monkeypatch.setattr(S, "iceberg_available", lambda: False)
+    for var in ("SPARK_GRAFT_CPUS", "SPARK_DRIVER_MEMORY"):
+        monkeypatch.delenv(var, raising=False)
+
+    small = host(4, 15)
+    assert small["master"] == "local[4]"
+    assert small["spark.sql.shuffle.partitions"] == "4"
+    assert small["spark.driver.memory"] == f"{15 * 1024 * 6 // 10}m"
+    assert host(64, 256)["spark.driver.memory"] == "16384m"
+
+    # env values still win; an invalid core count falls back to the host
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4x")
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "2g")
+    env = host(6, 15)
+    assert env["master"] == "local[6]"
+    assert env["spark.driver.memory"] == "2g"

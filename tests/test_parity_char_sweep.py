@@ -16,6 +16,7 @@ import pytest
 
 from illumio_spark import oracle, schema as S
 from illumio_spark.plans.pipeline import run_pipeline
+from illumio_spark.sources.tableio import TableIO
 
 # every ASCII char + the chars whose class membership differs between
 # Python and ASCII-Java regex semantics (Python-ws beyond Java-ws, NEL,
@@ -53,10 +54,10 @@ def _rows():
     return pd.DataFrame(rows)
 
 
-def test_char_sweep_routes_and_formats_byte_identically(spark):
+def test_char_sweep_routes_and_formats_byte_identically(spark, tmp_path):
     pdf = _rows()
     sdf = spark.createDataFrame(pdf, schema=S.TRANSCRIPT_SCHEMA)
-    got = run_pipeline(spark, sdf, io=None, run_id="sweep")
+    got = run_pipeline(spark, sdf, io=TableIO(str(tmp_path)), run_id="sweep")
     want = oracle.run(pdf, run_id="sweep")
 
     g = got["routed_events"].toPandas().sort_values("turn_idx").reset_index(drop=True)

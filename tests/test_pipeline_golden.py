@@ -9,6 +9,7 @@ import pytest
 
 from illumio_spark import oracle, synth
 from illumio_spark.plans.pipeline import run_pipeline
+from illumio_spark.sources.tableio import TableIO
 
 N_CONV = 120
 
@@ -24,9 +25,10 @@ def oracle_out(transcripts_pdf):
 
 
 @pytest.fixture(scope="module")
-def spark_out(spark, transcripts_pdf):
+def spark_out(spark, transcripts_pdf, tmp_path_factory):
     df = spark.createDataFrame(transcripts_pdf)
-    return run_pipeline(spark, df, io=None, run_id="test")
+    io = TableIO(str(tmp_path_factory.mktemp("golden_sinks")))
+    return run_pipeline(spark, df, io=io, run_id="test")
 
 
 def _sorted_pdf(sdf):
@@ -84,6 +86,22 @@ def test_rollup_counts_match(spark_out, oracle_out):
     got = norm(spark_out["rollups"].toPandas())
     want = norm(oracle_out["rollups"])
     assert got == want
+
+
+def test_checkpoints_match(spark_out, oracle_out):
+    """Per-day watermarks over the committed sinks equal a pandas per-day
+    aggregate over the oracle's routed and dead-letter ts."""
+    ts = pd.concat([oracle_out["routed_events"]["ts"], oracle_out["dead_letter"]["ts"]])
+    want = (
+        ts.groupby(ts.dt.strftime("%Y-%m-%d"))
+        .agg(max_ts="max", n_rows="size")
+        .rename_axis("partition_key")
+        .reset_index()
+    )
+    want["lineage_id"] = "test:" + want["partition_key"]
+    got = spark_out["checkpoints"].toPandas().sort_values("partition_key").reset_index(drop=True)
+    assert len(want) > 1  # the fixture spans several days
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
 def test_truncation_exercised(oracle_out):

@@ -14,6 +14,7 @@ examples are few but each carries many adversarial rows.
 from __future__ import annotations
 
 import json
+import tempfile
 
 import pandas as pd
 import pytest
@@ -21,6 +22,7 @@ from hypothesis import HealthCheck, given, settings, strategies as st
 
 from illumio_spark import oracle, schema as S
 from illumio_spark.plans.pipeline import run_pipeline
+from illumio_spark.sources.tableio import TableIO
 
 # no newlines: the transcript contract is one turn per line (the raw
 # NDJSON wire format cannot carry literal newlines inside a turn)
@@ -130,10 +132,12 @@ def fuzz_spark(spark):
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
 )
 @given(pdf=turn_batch())
-def test_pipeline_byte_equal_on_adversarial_payloads(fuzz_spark, pdf):
+def test_pipeline_byte_equal_on_adversarial_payloads(fuzz_spark, tmp_path, pdf):
     spark = fuzz_spark
     sdf = spark.createDataFrame(pdf, schema=S.TRANSCRIPT_SCHEMA)
-    got = run_pipeline(spark, sdf, io=None, run_id="fuzz")
+    # tmp_path is shared by every hypothesis example: one sink root each
+    io = TableIO(tempfile.mkdtemp(dir=tmp_path))
+    got = run_pipeline(spark, sdf, io=io, run_id="fuzz")
     want = oracle.run(pdf, run_id="fuzz")
 
     g_r = (

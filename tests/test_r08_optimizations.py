@@ -10,7 +10,8 @@ pin the internal contracts the optimizations rely on:
     exercise the probe (whitespace edges, interior-only whitespace,
     unicode whitespace, empty/null);
   - parallelize_scan: repartitions an under-parallel narrow scan, passes a
-    shuffle-bearing lineage through without launching eager jobs.
+    shuffle- or broadcast-bearing lineage through without launching eager
+    jobs.
 """
 
 from __future__ import annotations
@@ -130,14 +131,20 @@ def test_parallelize_scan_narrow_vs_shuffled(spark, tmp_path):
     # launches no eager jobs (df.rdd on an AQE plan would execute stages)
     sc = spark.sparkContext
     shuffled = narrow.groupBy((F.col("id") % 10).alias("k")).count()
-    sc.setJobGroup("ps-probe", "parallelize_scan probe")
-    try:
-        out2 = parallelize_scan(shuffled, F.col("k"))
-        jobs = sc.statusTracker().getJobIdsForGroup("ps-probe")
-    finally:
-        sc.setJobGroup(None, None)
-    assert list(jobs) == []
-    assert out2 is shuffled
+    # a broadcast join over the one-file scan: its only exchange is a
+    # BroadcastExchange, which df.rdd would also execute eagerly
+    small = spark.createDataFrame([(i, f"n{i}") for i in range(10)], "id long, name string")
+    broadcast = narrow.join(F.broadcast(small), "id")
+    assert "BroadcastExchange" in broadcast._jdf.queryExecution().executedPlan().toString()
+    for group, lineage in (("ps-probe", shuffled), ("ps-probe-bc", broadcast)):
+        sc.setJobGroup(group, "parallelize_scan probe")
+        try:
+            out2 = parallelize_scan(lineage, F.col(lineage.columns[0]))
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+        finally:
+            sc.setJobGroup(None, None)
+        assert list(jobs) == [], group
+        assert out2 is lineage
 
 
 def test_neardup_stream_replay_poisoning_fixed(spark, tmp_path):

@@ -11,6 +11,7 @@ import pytest
 from illumio_spark import oracle, synth
 from illumio_spark.plans.pipeline import run_pipeline
 from illumio_spark.sources.rawlog import read_raw_gz, validity_prescan, write_gz_fixture
+from illumio_spark.sources.tableio import TableIO
 
 N_CONV = 60
 
@@ -33,12 +34,11 @@ def test_filenames_encode_timestamp(fixture_dir):
         assert re.match(r"^\d{14}_\d{5}\.ndjson\.gz$", name), name
 
 
-def test_raw_roundtrip_byte_equal(spark, fixture_dir):
+def test_raw_roundtrip_byte_equal(spark, fixture_dir, tmp_path):
     pdf, out = fixture_dir
     raw = read_raw_gz(spark, f"{out}/*.ndjson.gz")
-    got = run_pipeline(spark, raw, io=None)["routed_events"].toPandas().sort_values(
-        ["conv_id", "turn_idx"]
-    ).reset_index(drop=True)
+    out = run_pipeline(spark, raw, io=TableIO(str(tmp_path)))
+    got = out["routed_events"].toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     want = oracle.run(pdf)["routed_events"]
     assert len(got) == len(want)
     assert (got["routed_text"].to_numpy() == want["routed_text"].to_numpy()).all()
@@ -73,7 +73,7 @@ def test_malformed_raw_lines_dead_letter(spark, tmp_path):
                 '"ts":"2026-01-01T00:00:00.000000"}\n')
         f.write("garbage line\n")
     raw = read_raw_gz(spark, str(p / "*.ndjson.gz"))
-    out = run_pipeline(spark, raw, io=None)
+    out = run_pipeline(spark, raw, io=TableIO(str(tmp_path / "sinks")))
     assert out["routed_events"].count() == 1
     dead = out["dead_letter"].collect()
     assert len(dead) == 1

@@ -91,7 +91,7 @@ def test_on_disk_per_file_ordering(spark):
 
     pdf = synth.generate_pandas(60, hot_frac=0.3)
     io = TableIO(tempfile.mkdtemp(prefix="ord_"))
-    run_pipeline(spark, spark.createDataFrame(pdf), io=io, run_id="o1", sink_partitions=8)
+    run_pipeline(spark, spark.createDataFrame(pdf), io=io, run_id="o1")
     files = glob.glob(io.root + "/pipeline_out/run_id=o1/sink=*/part-*.parquet")
     assert len(files) > 1
     for f in files:
@@ -104,7 +104,7 @@ def test_skew_correctness_with_salting(spark):
     pdf = synth.generate_pandas(40, hot_frac=0.45)
     want = oracle.run(pdf)
     io = TableIO(tempfile.mkdtemp(prefix="skew_"))
-    run_pipeline(spark, spark.createDataFrame(pdf), io=io, run_id="s1", sink_partitions=8)
+    run_pipeline(spark, spark.createDataFrame(pdf), io=io, run_id="s1")
     got = io.read_sink(spark, "routed_events", "s1").toPandas().sort_values(
         ["conv_id", "turn_idx"]
     ).reset_index(drop=True)

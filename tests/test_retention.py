@@ -139,8 +139,9 @@ def test_compact_reduces_files_preserves_content_and_order(spark):
 
     io = TableIO(tempfile.mkdtemp(prefix="compact_"))
     df = synth.generate_spark(spark, 150, hot_frac=0.3, parallelism=8)
-    # force many tiny files through the real fan-out write
-    run_pipeline(spark, df, io=io, run_id="c1", sink_partitions=32)
+    # many tiny files through the real fan-out write (4 × defaultParallelism
+    # partitions per sink)
+    run_pipeline(spark, df, io=io, run_id="c1")
     before = io.read(spark, "pipeline_out", "c1").orderBy("conv_id", "turn_idx").collect()
     root = os.path.join(io.root, "pipeline_out", "run_id=c1")
     files_before = len(glob.glob(os.path.join(root, "**", "*.parquet"), recursive=True))
