@@ -50,7 +50,7 @@ def run_arm(spark, mult: int) -> dict:
     out: dict = {"mult": mult, "n_new": new.count(), "n_seen": seen.count()}
     t0 = time.time()
     seen_bands = spark.read.parquet(frontier_dir)
-    kept, new_bands = D.incremental_neardup(new, seen_bands)
+    kept, new_bands, _ = D.incremental_neardup(new, seen_bands)
     out["kept_rows"] = kept.count()
     out["incremental_neardup_s"] = round(time.time() - t0, 3)
     out["frontier_band_rows"] = seen_bands.count()

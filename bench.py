@@ -1,7 +1,8 @@
 """Benchmark harness (driver contract).
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+Runs the headline queries at $SPARK_GRAFT_SF_DIR (default: the sf0.1
+testdata directory) on build_session's default master (local[N], N =
+$SPARK_GRAFT_CPUS, else the host's core count) and prints ONE JSON line:
   {"metric": ..., "value": <total sec>, "unit": "sec",
    "queries": {name: sec, ...}, "sf": <sf>, ...extras}
 
@@ -193,7 +194,7 @@ def _incremental_neardup_fast(spark, sf_dir):
 
     corpus = _neardup_corpus(spark, sf_dir)
     seen_bands = D.band_signatures(corpus.filter("doc_id < 15"))
-    kept, _ = D.incremental_neardup(corpus.filter("doc_id >= 15"), seen_bands)
+    kept, _, _ = D.incremental_neardup(corpus.filter("doc_id >= 15"), seen_bands)
     return kept.select("doc_id")
 
 
@@ -367,17 +368,15 @@ def sf1_arm(spark) -> dict | None:
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = sf_of(sf_dir)
 
     from illumio_spark.session import build_session
     import __spark_entry__ as entry_mod
 
     with StderrCapture() as cap:
-        spark = build_session(
-            app_name="bench", master=f"local[{cpus}]", shuffle_partitions=int(cpus)
-        )
+        spark = build_session(app_name="bench")
         spark.sparkContext.setLogLevel("ERROR")
+        cpus = spark.sparkContext.defaultParallelism
 
         queries: dict[str, float] = {}
 
@@ -408,7 +407,7 @@ def main():
                 "sf": sf,
                 "pipeline_turns": n_turns,
                 "pipeline_turns_per_sec": round(turns_per_sec, 1),
-                "cpus": int(cpus),
+                "cpus": cpus,
                 "disk_mb_s": disk_mb_s,
                 "codegen_fallback": cap.codegen_fallback(),
                 **({"sf1": sf1} if sf1 else {}),

@@ -473,20 +473,16 @@ def incremental_neardup(
     n_hashes: int = N_MINHASH,
     n_bands: int = N_BANDS,
     hash_fn: str = "xxhash64",
-    max_iters: int = 20,
-    report_seen_merges: bool = False,
-) -> tuple[DataFrame, ...]:
+) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Cross-run NEAR-dup dedup — the reference's processed-keys resume
     pattern (s3_manager.py:208-210,356-359: skip keys already handled by
     earlier runs) lifted from exact fingerprints to minhash-LSH
     signatures. A new batch's band table is equi-joined against the
     union of the seen table and itself, restricted to pairs with at
     least one NEW side (new-vs-all, never the quadratic all-vs-all over
-    the full history); connected components run over just that induced
-    subgraph; a new doc survives iff its component touches no seen doc
-    AND it is the component's min-id representative (so within-batch
-    near-dup groups keep exactly one member, and anything near a
-    previously-processed doc drops — 'seen wins').
+    the full history); star edges over the touched buckets feed the
+    shared keep rule (_seen_wins: min-id keeper per component, seen
+    wins).
 
     Contract vs a combined single run (ids monotone across runs,
     pytest-asserted both ways): the incremental keeper set is a
@@ -500,16 +496,15 @@ def incremental_neardup(
     like any streaming dedup — cannot retract output). Measured on the
     50.8 k-doc bench corpus: 4,539 incremental vs 4,492 combined
     keepers, all 47 extras verified to be such retroactive bridge
-    merges. Pass report_seen_merges=True to receive those merge events
-    as a third output for downstream compaction/retraction.
+    merges; compact_neardup_frontier resolves them.
 
-    Returns (kept_docs, new_bands) — or (kept_docs, new_bands,
-    seen_merges) with report_seen_merges=True, where seen_merges is
-    (component, id) rows over previously-seen docs this batch newly
-    proved connected. Append new_bands — the bands of ALL processed
-    docs, kept or not, so re-submissions of dropped content stay
-    dropped — to the seen table after the batch commits; the append is
-    idempotent on (id, band_idx).
+    Returns (kept_docs, new_bands, seen_merges). seen_merges is a lazy
+    (component, id) frame over previously-seen docs this batch newly
+    proved connected — the retraction signal for downstream
+    compaction. Append new_bands — the bands of ALL processed docs,
+    kept or not, so re-submissions of dropped content stay dropped — to
+    the seen table after the batch commits; the append is idempotent
+    on (id, band_idx).
 
     Scale shape: the batch's band table is checkpointed small, so AQE
     builds the bucket prefilter as a BroadcastHashJoin with the NEW
@@ -520,13 +515,12 @@ def incremental_neardup(
     any edge forms (their members' components were already resolved by
     the runs that introduced them, and they cannot reach a new doc);
     within the surviving buckets CC gets STAR edges to the bucket min
-    (_band_star_edges: M-1 edges, never the new×all pair fan-out) —
-    every bucket member genuinely collides with every other, so stars
-    preserve exactly the new-new connectivity and new-to-seen
-    reachability the keep decision reads, at strictly fewer edges. CC
-    runs on the batch-induced subgraph, not the full corpus graph.
-    State is n_bands small rows per document ever processed — the
-    near-dup analog of the minimal exact-dedup frontier."""
+    (_band_star_edges) — every bucket member genuinely collides with
+    every other, so stars preserve exactly the new-new connectivity and
+    new-to-seen reachability the keep decision reads. CC runs on the
+    batch-induced subgraph, not the full corpus graph. State is n_bands
+    small rows per document ever processed — the near-dup analog of the
+    minimal exact-dedup frontier."""
     new_bands = band_signatures(
         new_docs, id_col, text_col, n_hashes, n_bands, hash_fn
     )
@@ -535,10 +529,11 @@ def incremental_neardup(
     # checkpoint each consumer re-runs the whole signature pipeline
     new_bands = new_bands.localCheckpoint(eager=True)
     if seen_bands is None:
-        all_bands = new_bands
+        all_bands, seen_ids = new_bands, None
     else:
         seen_bands = seen_bands.select(id_col, "band_idx", "band_key")
         all_bands = new_bands.unionByName(seen_bands)
+        seen_ids = seen_bands.select(id_col).distinct()
     new_keys = new_bands.select("band_idx", "band_key").distinct()
     touched = all_bands.join(new_keys, ["band_idx", "band_key"], "left_semi")
     # materialize the touched band rows (bounded by batch + collisions):
@@ -557,29 +552,7 @@ def incremental_neardup(
     # label join re-executed the star aggregate twice (measured ~1.5 s
     # of the row's 9.6 s at sf1.0)
     pairs = _band_star_edges(touched, id_col).localCheckpoint(eager=True)
-    new_ids = new_docs.select(id_col)
-    nodes = (
-        new_ids.unionByName(pairs.select(F.col("id_a").alias(id_col)))
-        .unionByName(pairs.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    comp = neardup_components(nodes, pairs, id_col, max_iters=max_iters)
-    if seen_bands is None:
-        seen_comps = None
-    else:
-        seen_comps = (
-            comp.join(seen_bands.select(id_col).distinct(), id_col, "left_semi")
-            .select("component")
-            .distinct()
-        )
-    keep = comp.join(new_ids, id_col, "left_semi").filter(
-        F.col(id_col) == F.col("component")
-    )
-    if seen_comps is not None:
-        keep = keep.join(seen_comps, "component", "left_anti")
-    kept = new_docs.join(keep.select(id_col), id_col, "left_semi")
-    if not report_seen_merges:
-        return kept, new_bands
+    kept, comp = _seen_wins(new_docs, pairs, seen_ids, id_col)
     # merge events: seen docs whose induced component holds >= 2 seen
     # members — they are now known connected. These are merge
     # CANDIDATES, not guaranteed-new information: star edges within a
@@ -588,20 +561,45 @@ def incremental_neardup(
     # when the later of them was processed; the frontier stores no
     # labels, so the caller dedupes candidates against its own
     # keeper/label state during compaction.
-    if seen_bands is None:
-        merges = comp.select("component", F.col(id_col)).filter(F.lit(False))
-    else:
-        seen_in_comp = comp.join(
-            seen_bands.select(id_col).distinct(), id_col, "left_semi"
-        ).select("component", F.col(id_col))
-        multi = (
-            seen_in_comp.groupBy("component")
-            .count()
-            .filter(F.col("count") >= 2)
-            .select("component")
+    seen_in_comp = comp.select("component", F.col(id_col))
+    if seen_ids is None:
+        return kept, new_bands, seen_in_comp.filter(F.lit(False))
+    seen_in_comp = seen_in_comp.join(seen_ids, id_col, "left_semi")
+    multi = (
+        seen_in_comp.groupBy("component")
+        .count()
+        .filter(F.col("count") >= 2)
+        .select("component")
+    )
+    return kept, new_bands, seen_in_comp.join(multi, "component", "left_semi")
+
+
+def _seen_wins(
+    new_df: DataFrame, edges: DataFrame, seen_ids: DataFrame | None, id_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The frontier keep rule shared by the text and embedding frontiers
+    (incremental_neardup, similarity.incremental_embedding_neardup):
+    connected components over the new ids plus every edge endpoint; a
+    new row survives iff its id is its component's minimum AND the
+    component holds no seen id ('seen wins' — so within-batch near-dup
+    groups keep exactly one member, and anything near a previously-
+    processed doc drops). Returns (kept new rows, (id, component))."""
+    new_ids = new_df.select(id_col)
+    nodes = (
+        new_ids.unionByName(edges.select(F.col("id_a").alias(id_col)))
+        .unionByName(edges.select(F.col("id_b").alias(id_col)))
+        .distinct()
+    )
+    comp = neardup_components(nodes, edges, id_col)
+    keep = comp.join(new_ids, id_col, "left_semi").filter(
+        F.col(id_col) == F.col("component")
+    )
+    if seen_ids is not None:
+        seen_comps = (
+            comp.join(seen_ids, id_col, "left_semi").select("component").distinct()
         )
-        merges = seen_in_comp.join(multi, "component", "left_semi")
-    return kept, new_bands, merges
+        keep = keep.join(seen_comps, "component", "left_anti")
+    return new_df.join(keep.select(id_col), id_col, "left_semi"), comp
 
 
 def _band_star_edges(bands: DataFrame, id_col: str) -> DataFrame:
@@ -652,7 +650,6 @@ def compact_neardup_frontier(
     bands: DataFrame,
     emitted: DataFrame | None = None,
     id_col: str = "doc_id",
-    max_iters: int = 20,
 ) -> DataFrame | tuple[DataFrame, DataFrame]:
     """Periodic frontier compaction — the batch maintenance job that
     resolves the retroactive bridge merges an incremental/streaming
@@ -670,22 +667,15 @@ def compact_neardup_frontier(
     consumers should remove to converge the rolling corpus onto what one
     combined run would have kept. After compaction the frontier itself
     is already canonical (bands of dropped docs stay, by design — they
-    must keep dropping resubmissions).
+    must keep dropping resubmissions). This is also the combined-run
+    keeper computation: neardup_keepers is the corpus semi-joined with
+    the canonical ids of its own fresh band table.
 
     Scale shape: deliberately O(history) in DOCUMENTS but never in
-    pairs — CC needs connectivity, not the candidate-pair list, so each
-    band bucket contributes a STAR to its minimum id (M-1 edges for an
-    M-member bucket) instead of the M²/2 self-join pairs. Components
-    are provably identical (every bucket member reaches every other
-    through the bucket min; every star edge is a genuine shared-band
-    collision), but a 1,000-replica boilerplate group costs 999 edges
-    instead of ~500k — the edge table is bounded by the band table
-    itself (≤ n_bands rows per doc). Measured at 508 k docs: the
-    pairwise form feeds CC 32.8 M edges and runs ~3 min; the star form
-    feeds it ≤ 2 M. One distinct + one groupBy + one equi-join back on
-    the bucket key (ReusedExchange with the groupBy); CC by alternating
-    large-/small-star contraction (neardup_components). No text, no minhashing, no all-pairs, no quadratic
-    fan-out."""
+    pairs — CC runs over per-bucket star edges (_band_star_edges: M-1
+    edges per M-member bucket, identical components). Measured at 508 k
+    docs: the pairwise form feeds CC 32.8 M edges and runs ~3 min; the
+    star form feeds it ≤ 2 M. No text, no minhashing, no all-pairs."""
     b = bands.select(id_col, "band_idx", "band_key").distinct()
     # materialize the deduped band table ONCE: the star-edge aggregate, the
     # node list, and CC's round-0 labels all read it — uncheckpointed, each
@@ -695,7 +685,7 @@ def compact_neardup_frontier(
     b = b.localCheckpoint(eager=True)
     pairs = _band_star_edges(b, id_col)
     nodes = b.select(id_col).distinct()
-    comp = neardup_components(nodes, pairs, id_col, max_iters=max_iters)
+    comp = neardup_components(nodes, pairs, id_col)
     return canonical_and_retractions(comp, emitted, id_col)
 
 
@@ -777,13 +767,14 @@ def neardup_components(
 
     Convergence is detected EXACTLY, not probabilistically: the
     algorithm's fixpoint is a disjoint union of stars centered at
-    component minima, which holds iff (a) every id_b appears exactly
-    once and (b) no id appears as both a center (id_a) and a leaf
-    (id_b). Both checks are cheap aggregates on the checkpointed edge
-    table, and both operations preserve connectivity (every re-link
-    targets a node's own neighbor), so a verified star state IS the
-    true component decomposition. Labels then read off the stars: leaf
-    → its center, everything else → itself.
+    component minima, which holds iff no node is a leaf (id_b) of two
+    centers and no node is both a leaf and a center (id_a). One
+    per-node aggregate (leaf count, center flag) on the checkpointed
+    edge table decides both with one action per round, and both phases
+    preserve connectivity (every re-link targets a node's own
+    neighbor), so a verified star state IS the true component
+    decomposition. Labels then read off the stars: leaf → its center,
+    everything else → itself.
 
     Duplicate pairs are tolerated (the first distinct normalizes).
     Raises RuntimeError if max_iters rounds (one large-star + one
@@ -817,24 +808,14 @@ def neardup_components(
             eager=True
         )
         edges = _star_phase(edges, large=False).localCheckpoint(eager=True)
-        st = edges.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count_distinct(F.col("id_b")).alias("nb"),
-        ).collect()[0]
-        if st["n"] == 0:
-            converged = True
-        elif st["n"] == st["nb"]:
-            # leaves are unique; star state iff additionally no center
-            # is itself a leaf (checked only when the cheap test passes)
-            converged = (
-                edges.select("id_b")
-                .join(
-                    edges.select(F.col("id_a").alias("id_b")),
-                    "id_b",
-                    "left_semi",
-                )
-                .isEmpty()
-            )
+        ends = edges.selectExpr("id_b AS __n", "1 AS __leaf", "false AS __ctr").unionByName(
+            edges.selectExpr("id_a AS __n", "0 AS __leaf", "true AS __ctr")
+        )
+        per_node = ends.groupBy("__n").agg(
+            F.sum("__leaf").alias("__leaves"), F.max("__ctr").alias("__center")
+        )
+        not_star = (F.col("__leaves") > 1) | ((F.col("__leaves") > 0) & F.col("__center"))
+        converged = per_node.agg(F.count(F.when(not_star, 1))).first()[0] == 0
     if not converged:
         raise RuntimeError(
             f"neardup_components did not converge in {max_iters} iterations "
@@ -856,17 +837,13 @@ def neardup_keepers(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
-    """Corpus → rows surviving transitivity-correct near-dup removal:
-    LSH band table → star edges per band bucket → connected components →
-    keep the min-id representative of each component. Star edges (see
-    _band_star_edges) give CC the identical components the pairwise
-    candidate list induces, at M-1 instead of M²/2 edges per bucket —
-    measured at 508 k docs (32.8 M pairwise edges): 109 s → 40 s."""
+    """Corpus → rows surviving transitivity-correct near-dup removal: the
+    rows whose id is a canonical keeper of compact_neardup_frontier over
+    the corpus's own band table (star edges per band bucket → connected
+    components → min id per component). A combined run and a frontier
+    compaction keep the same ids by definition, so they share one path."""
     bands = band_signatures(df, id_col, text_col, hash_fn=hash_fn)
-    pairs = _band_star_edges(bands, id_col)
-    comp = neardup_components(df.select(id_col), pairs, id_col)
-    losers = comp.filter(F.col(id_col) != F.col("component")).select(id_col)
-    return df.join(losers, id_col, "left_anti")
+    return df.join(compact_neardup_frontier(bands, id_col=id_col), id_col, "left_semi")
 
 
 def verbatim_overlap_pairs(

@@ -376,7 +376,6 @@ def incremental_embedding_neardup(
     n_planes: int = 4,
     dim: int = 64,
     n_tables: int = 3,
-    max_iters: int = 20,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Cross-run EMBEDDING near-dup dedup — the processed-keys resume
     pattern (reference s3_manager.py:208-210) on the similarity family,
@@ -393,23 +392,15 @@ def incremental_embedding_neardup(
     Returns (kept_new_docs, new_buckets, new_vecs); append the latter
     two after the batch's output commits (idempotent on id).
 
-    Decision mirrors incremental_neardup: candidates = (tbl, bucket)
-    equi-join of the new batch against seen+new (>= 1 new side, never
-    the all-vs-all of history); pairs verified at cosine >= threshold;
-    connected components over the verified edges (transitivity-correct);
-    a new doc survives iff its component touches no seen doc and it is
-    the component's min-id member — 'seen wins'. Bucket assignment is
-    seed-deterministic, so a vector's buckets are identical in every
-    run — cross-run candidates equal combined-run candidates exactly.
-
-    Contract vs a combined single run (ids monotone, pytest-asserted
-    both ways, same as dedup.incremental_neardup): the incremental
-    keeper set is a SUPERSET of the combined run's, equal unless a
-    later batch holds a BRIDGE vector within `threshold` of two
-    earlier-emitted keepers that aren't within threshold of each other
-    — the combined run merges their components retroactively; emitted
-    output can't be retracted. compact_embedding_frontier is the
-    periodic maintenance job that resolves those merges.
+    Candidates = (tbl, bucket) equi-join of the new batch against
+    seen+new (>= 1 new side, never the all-vs-all of history), verified
+    at cosine >= threshold; the verified edges go through the text
+    frontier's keep rule (dedup._seen_wins) and carry its contract vs a
+    combined run (superset, equal unless a later BRIDGE vector merges
+    two emitted keepers; compact_embedding_frontier resolves those).
+    Bucket assignment is seed-deterministic, so a vector's buckets are
+    identical in every run — cross-run candidates equal combined-run
+    candidates exactly.
 
     Scale shape: buckets holding no new doc are semi-join-pruned before
     any vector moves, so per-run cost is O(batch + collisions), never
@@ -418,7 +409,7 @@ def incremental_embedding_neardup(
     mask) — each touched vector crosses Arrow once per bucket
     membership instead of once per candidate pair; CC runs on the
     batch-induced subgraph."""
-    from illumio_spark.operators.dedup import neardup_components
+    from illumio_spark.operators.dedup import _seen_wins
 
     ev = new_df.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
@@ -465,26 +456,8 @@ def incremental_embedding_neardup(
     # joins all read it — same single-execution discipline as the text
     # path's touched-bands checkpoint
     verified = verified.localCheckpoint(eager=True)
-    new_ids = new_df.select(id_col)
-    nodes = (
-        new_ids.unionByName(verified.select(F.col("id_a").alias(id_col)))
-        .unionByName(verified.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    comp = neardup_components(nodes, verified, id_col, max_iters=max_iters)
-    keep = comp.join(new_ids, id_col, "left_semi").filter(
-        F.col(id_col) == F.col("component")
-    )
-    if seen_buckets is not None:
-        seen_comps = (
-            comp.join(
-                seen_buckets.select(id_col).distinct(), id_col, "left_semi"
-            )
-            .select("component")
-            .distinct()
-        )
-        keep = keep.join(seen_comps, "component", "left_anti")
-    kept = new_df.join(keep.select(id_col), id_col, "left_semi")
+    seen_ids = None if seen_buckets is None else seen_buckets.select(id_col).distinct()
+    kept, _ = _seen_wins(new_df, verified, seen_ids, id_col)
     return kept, nb, new_df.select(id_col, vec_col)
 
 
@@ -678,7 +651,6 @@ def compact_embedding_frontier(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.9,
-    max_iters: int = 20,
 ) -> DataFrame | tuple[DataFrame, DataFrame]:
     """Periodic compaction of the embedding near-dup frontier — the
     similarity-family analog of dedup.compact_neardup_frontier: full CC
@@ -716,7 +688,7 @@ def compact_embedding_frontier(
         bv, id_col=id_col, vec_col="__v", threshold=threshold
     )
     nodes = b.select(id_col).distinct()
-    comp = neardup_components(nodes, verified, id_col, max_iters=max_iters)
+    comp = neardup_components(nodes, verified, id_col)
     return canonical_and_retractions(comp, emitted, id_col)
 
 

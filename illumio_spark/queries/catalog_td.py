@@ -1836,7 +1836,7 @@ def td_incremental_neardup(spark, sf_dir):
     seen = corpus.filter(F.col("doc_id") < 15)
     new = corpus.filter(F.col("doc_id") >= 15)
     seen_bands = D.band_signatures(seen, hash_fn="md5")
-    kept, _new_bands = D.incremental_neardup(
+    kept, _new_bands, _merges = D.incremental_neardup(
         new, seen_bands, hash_fn="md5"
     )
     return kept.select("doc_id")

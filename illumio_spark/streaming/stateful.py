@@ -193,7 +193,6 @@ def neardup_stream(
     checkpoint_path: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_fn: str = "xxhash64",
     merges_path: str | None = None,
 ):
     """Streaming NEAR-dup dedup: each micro-batch runs the cross-run
@@ -237,16 +236,21 @@ def neardup_stream(
     longer accumulate across replays.
 
     Returns the StreamingQuery (caller awaits/stops it)."""
+    return _start_per_batch(
+        stream, checkpoint_path, _neardup_stream_batch,
+        frontier_path=frontier_path, output_path=output_path,
+        id_col=id_col, text_col=text_col, merges_path=merges_path,
+    )
 
-    def _one_batch(batch: DataFrame, batch_id: int) -> None:
-        _neardup_stream_batch(
-            batch, batch_id, frontier_path, output_path,
-            id_col=id_col, text_col=text_col, hash_fn=hash_fn,
-            merges_path=merges_path,
-        )
 
+def _start_per_batch(stream: DataFrame, checkpoint_path: str, one_batch, **kwargs):
+    """Start `stream` as an availableNow foreachBatch query checkpointed
+    at checkpoint_path, calling one_batch(batch, batch_id, **kwargs) per
+    micro-batch — the shared starter of the frontier streams."""
     return (
-        stream.writeStream.foreachBatch(_one_batch)
+        stream.writeStream.foreachBatch(
+            lambda batch, batch_id: one_batch(batch, batch_id, **kwargs)
+        )
         .option("checkpointLocation", checkpoint_path)
         .trigger(availableNow=True)
         .start()
@@ -284,7 +288,7 @@ def _read_frontier_excluding(spark, path: str, batch_id: int, cols: list[str]):
 def _neardup_stream_batch(
     batch: DataFrame, batch_id: int, frontier_path: str, output_path: str,
     id_col: str = "doc_id", text_col: str = "text",
-    hash_fn: str = "xxhash64", merges_path: str | None = None,
+    merges_path: str | None = None,
 ) -> None:
     """One neardup_stream micro-batch (module-level so the replay
     discipline is directly pytest-drivable)."""
@@ -294,14 +298,12 @@ def _neardup_stream_batch(
     seen = _read_frontier_excluding(
         spark, frontier_path, batch_id, [id_col, "band_idx", "band_key"]
     )
-    res = incremental_neardup(
-        batch, seen, id_col=id_col, text_col=text_col, hash_fn=hash_fn,
-        report_seen_merges=merges_path is not None,
+    kept, new_bands, merges = incremental_neardup(
+        batch, seen, id_col=id_col, text_col=text_col
     )
-    kept, new_bands = res[0], res[1]
     kept.write.mode("overwrite").parquet(f"{output_path}/batch={batch_id}")
     if merges_path is not None:
-        res[2].write.mode("overwrite").parquet(f"{merges_path}/batch={batch_id}")
+        merges.write.mode("overwrite").parquet(f"{merges_path}/batch={batch_id}")
     # frontier advances only after the batch's output is durable, under
     # this batch's OWN partition — replays overwrite instead of append
     new_bands.write.mode("overwrite").parquet(f"{frontier_path}/batch={batch_id}")
@@ -350,19 +352,11 @@ def embedding_neardup_stream(
     file's physical vector type — a source mixing array<float> and
     array<double> files fails the parquet read (Spark file-source
     semantics); cast upstream at write time."""
-
-    def _one_batch(batch: DataFrame, batch_id: int) -> None:
-        _embedding_stream_batch(
-            batch, batch_id, frontier_path, output_path,
-            id_col=id_col, vec_col=vec_col, threshold=threshold,
-            n_planes=n_planes, dim=dim, n_tables=n_tables,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_one_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    return _start_per_batch(
+        stream, checkpoint_path, _embedding_stream_batch,
+        frontier_path=frontier_path, output_path=output_path,
+        id_col=id_col, vec_col=vec_col, threshold=threshold,
+        n_planes=n_planes, dim=dim, n_tables=n_tables,
     )
 
 

@@ -28,12 +28,13 @@ count action re-executes stages 1..N-1, O(stages²) total work at scale):
                          the fingerprints of every prior run, frontier
                          appended after the output commits — the
                          processed-keys resume pattern)
-  2. near-dup drop     — minhash-LSH candidate pairs (xxhash64 engine
-                         mode) → connected components, keep the min-id
-                         representative per component; --seen-sigs PATH
-                         makes it CROSS-RUN (band-join vs every prior
-                         run's signatures, new-vs-all; frontier appended
-                         after the output commits)
+  2. near-dup drop     — minhash-LSH band table (xxhash64 engine
+                         mode) → star edges per band bucket → connected
+                         components, keep the min-id representative per
+                         component; --seen-sigs PATH makes it CROSS-RUN
+                         (band-join vs every prior run's signatures,
+                         new-vs-all; frontier appended after the output
+                         commits)
   2b. verbatim cut     — --cut-spans K: ExactSubstr spans excised from
                          the higher-id doc (Lee et al. remediation)
   3. decontamination   — GPT-3-style 13-gram overlap vs --eval corpus
@@ -176,7 +177,7 @@ def run(spark, args) -> dict:
         from illumio_spark.sources.tableio import read_parquet_if_exists
 
         seen_bands = read_parquet_if_exists(spark, sigs_path)
-        kept, pending_bands = D.incremental_neardup(
+        kept, pending_bands, _ = D.incremental_neardup(
             cur, seen_bands, hash_fn="xxhash64"
         )
         cur = stage("cross_run_neardup", kept)

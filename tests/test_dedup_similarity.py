@@ -339,6 +339,26 @@ def test_neardup_components_no_pairs_converges_immediately(spark):
     assert comp == {i: i for i in range(4)}
 
 
+def test_neardup_components_star_forest_one_check_per_round(spark):
+    """An edge list that is already a star forest converges after one
+    round whose star-state check is a single aggregate action: 18 jobs
+    on local[4], where the two-action check (count/count_distinct
+    collect, then a semi-join isEmpty) ran 22."""
+    from illumio_spark.operators.dedup import neardup_components
+
+    nodes = spark.createDataFrame([(i,) for i in range(1, 7)], "doc_id long")
+    pairs = spark.createDataFrame([(1, 2), (1, 3), (4, 5)], "id_a long, id_b long")
+    sc = spark.sparkContext
+    sc.setJobGroup("cc-star-forest", "neardup_components job count")
+    try:
+        comp = {r.doc_id: r.component for r in neardup_components(nodes, pairs).collect()}
+        jobs = sc.statusTracker().getJobIdsForGroup("cc-star-forest")
+    finally:
+        sc.setJobGroup(None, None)
+    assert comp == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6}
+    assert len(jobs) < 22, sorted(jobs)
+
+
 def test_neardup_components_path_graph_diameter_1000(spark):
     """VERDICT r5 task 7: a 1,000-node path graph (diameter 999) is the
     adversarial case for plain min-label propagation (would need ~999
@@ -381,8 +401,8 @@ def test_incremental_neardup_equals_combined_run(neardup_corpus):
     near-dup pairs straddle it (originals < 120, dups at 1000000+)."""
     batch1 = neardup_corpus.filter(F.col("doc_id") < 120)
     batch2 = neardup_corpus.filter(F.col("doc_id") >= 120)
-    kept1, bands1 = D.incremental_neardup(batch1, None)
-    kept2, bands2 = D.incremental_neardup(batch2, bands1)
+    kept1, bands1, _ = D.incremental_neardup(batch1, None)
+    kept2, bands2, _ = D.incremental_neardup(batch2, bands1)
     combined = D.neardup_keepers(neardup_corpus, hash_fn="xxhash64")
     incr_ids = {r.doc_id for r in kept1.collect()} | {
         r.doc_id for r in kept2.collect()
@@ -405,20 +425,20 @@ def test_incremental_neardup_resubmission_stays_dropped(spark):
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     rows = [(1, base), (2, base + " mu"), (3, "totally different text about unrelated things entirely")]
     b1 = spark.createDataFrame(rows, "doc_id long, text string")
-    kept1, bands1 = D.incremental_neardup(b1, None)
+    kept1, bands1, _ = D.incremental_neardup(b1, None)
     assert sorted(r.doc_id for r in kept1.collect()) == [1, 3]  # 2 is near-dup loser
     # rerun same content under new ids: everything already seen
     b2 = spark.createDataFrame(
         [(11, base), (12, base + " mu")], "doc_id long, text string"
     )
-    kept2, _ = D.incremental_neardup(b2, bands1)
+    kept2, _, _ = D.incremental_neardup(b2, bands1)
     assert kept2.count() == 0
     # genuinely new content under the same frontier survives
     b3 = spark.createDataFrame(
         [(21, "fresh words never observed before in any prior run batch")],
         "doc_id long, text string",
     )
-    kept3, _ = D.incremental_neardup(b3, bands1)
+    kept3, _, _ = D.incremental_neardup(b3, bands1)
     assert kept3.count() == 1
 
 
@@ -429,11 +449,11 @@ def test_incremental_neardup_transitive_chain_through_new(spark):
     reachability-to-seen)."""
     t = "one two three four five six seven eight nine ten eleven twelve"
     seen = spark.createDataFrame([(1, t)], "doc_id long, text string")
-    _, bands = D.incremental_neardup(seen, None)
+    _, bands, _ = D.incremental_neardup(seen, None)
     chain = spark.createDataFrame(
         [(10, t + " x"), (11, t + " x y")], "doc_id long, text string"
     )
-    kept, _ = D.incremental_neardup(chain, bands)
+    kept, _, _ = D.incremental_neardup(chain, bands)
     assert kept.count() == 0
 
 
@@ -747,8 +767,8 @@ def test_incremental_neardup_random_split_sweep(spark):
         df = spark.createDataFrame(rows, "doc_id long, text string")
         b1 = df.filter(F.col("doc_id") < cut)
         b2 = df.filter(F.col("doc_id") >= cut)
-        kept1, bands1 = D.incremental_neardup(b1, None)
-        kept2, _ = D.incremental_neardup(b2, bands1)
+        kept1, bands1, _ = D.incremental_neardup(b1, None)
+        kept2, _, _ = D.incremental_neardup(b2, bands1)
         incr = {r.doc_id for r in kept1.collect()} | {
             r.doc_id for r in kept2.collect()
         }
@@ -793,8 +813,8 @@ def test_incremental_neardup_bridge_divergence(spark):
     assert pairs == {(1, 10), (2, 10)}  # precondition: C bridges, A !~ B
     b1 = df.filter(F.col("doc_id") < 10)
     b2 = df.filter(F.col("doc_id") == 10)
-    kept1, bands1 = D.incremental_neardup(b1, None)
-    kept2, _ = D.incremental_neardup(b2, bands1)
+    kept1, bands1, _ = D.incremental_neardup(b1, None)
+    kept2, _, _ = D.incremental_neardup(b2, bands1)
     incr = {r.doc_id for r in kept1.collect()} | {
         r.doc_id for r in kept2.collect()
     }
@@ -805,20 +825,16 @@ def test_incremental_neardup_bridge_divergence(spark):
 
 
 def test_incremental_neardup_reports_seen_merges(spark):
-    """report_seen_merges=True surfaces the bridge event as a retraction
+    """The seen_merges output surfaces the bridge event as a retraction
     signal: the batch that introduces C reports seen docs {A, B} newly
     proved connected (one component, two rows); a batch with no bridge
     reports nothing."""
     a, b, c = _bridge_triple()
     b1 = spark.createDataFrame([(1, a), (2, b)], "doc_id long, text string")
-    kept1, bands1, merges1 = D.incremental_neardup(
-        b1, None, report_seen_merges=True
-    )
+    kept1, bands1, merges1 = D.incremental_neardup(b1, None)
     assert merges1.count() == 0  # first run: no seen docs at all
     b2 = spark.createDataFrame([(10, c)], "doc_id long, text string")
-    kept2, _, merges2 = D.incremental_neardup(
-        b2, bands1, report_seen_merges=True
-    )
+    kept2, _, merges2 = D.incremental_neardup(b2, bands1)
     rows = merges2.collect()
     assert {r.doc_id for r in rows} == {1, 2}
     assert {r.component for r in rows} == {1}  # one merged group
@@ -828,7 +844,7 @@ def test_incremental_neardup_reports_seen_merges(spark):
         [(20, "totally fresh unrelated words never seen before anywhere")],
         "doc_id long, text string",
     )
-    _, _, merges3 = D.incremental_neardup(b3, bands1, report_seen_merges=True)
+    _, _, merges3 = D.incremental_neardup(b3, bands1)
     assert merges3.count() == 0
 
 
@@ -840,8 +856,8 @@ def test_compact_frontier_retracts_bridge_merge(spark):
     a, b, c = _bridge_triple()
     b1 = spark.createDataFrame([(1, a), (2, b)], "doc_id long, text string")
     b2 = spark.createDataFrame([(10, c)], "doc_id long, text string")
-    kept1, bands1 = D.incremental_neardup(b1, None)
-    kept2, bands2 = D.incremental_neardup(b2, bands1)
+    kept1, bands1, _ = D.incremental_neardup(b1, None)
+    kept2, bands2, _ = D.incremental_neardup(b2, bands1)
     frontier = bands1.unionByName(bands2)
     emitted = kept1.select("doc_id").unionByName(kept2.select("doc_id"))
     canonical, retractions = D.compact_neardup_frontier(frontier, emitted)
@@ -855,15 +871,18 @@ def test_compact_frontier_retracts_bridge_merge(spark):
 
 
 def test_compact_frontier_equals_combined_keepers(spark):
-    """On a real corpus: canonical ids from the band table alone equal
-    neardup_keepers over the raw text (compaction never re-reads text),
-    and duplicated band rows (idempotent frontier re-appends) change
-    nothing."""
+    """On a real corpus: canonical ids from the band table alone (star
+    edges, compaction never re-reads text) equal the min-id members of
+    CC over the PAIRWISE candidate list, and duplicated band rows
+    (idempotent frontier re-appends) change nothing."""
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
     ).select("doc_id", "text")
     bands = D.band_signatures(docs)
-    want = {r.doc_id for r in D.neardup_keepers(docs, hash_fn="xxhash64").collect()}
+    ref = D.neardup_components(
+        docs.select("doc_id"), D.minhash_lsh_pairs(docs, hash_fn="xxhash64")
+    )
+    want = {r.doc_id for r in ref.filter("doc_id = component").collect()}
     got = {
         r.doc_id for r in D.compact_neardup_frontier(bands).collect()
     }
@@ -875,5 +894,6 @@ def test_compact_frontier_equals_combined_keepers(spark):
     assert got2 == want
     # no-bridge frontier: zero retractions against its own keeper set
     emitted = D.neardup_keepers(docs, hash_fn="xxhash64").select("doc_id")
+    assert {r.doc_id for r in emitted.collect()} == want
     _, rets = D.compact_neardup_frontier(bands, emitted)
     assert rets.count() == 0

@@ -297,3 +297,26 @@ def test_session_defaults_sized_to_host(monkeypatch):
     env = host(6, 15)
     assert env["master"] == "local[6]"
     assert env["spark.driver.memory"] == "2g"
+
+
+def test_bench_sizes_session_from_host(monkeypatch):
+    """bench.py leaves the master and shuffle partitions to
+    build_session's host-sized defaults: with SPARK_GRAFT_CPUS unset it
+    must not pin local[32]."""
+    import bench
+    from illumio_spark import session as S
+
+    calls = []
+
+    class _Stop(Exception):
+        pass
+
+    def fake_build_session(*args, **kwargs):
+        calls.append((args, kwargs))
+        raise _Stop
+
+    monkeypatch.setattr(S, "build_session", fake_build_session)
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    with pytest.raises(_Stop):
+        bench.main()
+    assert calls == [((), {"app_name": "bench"})]

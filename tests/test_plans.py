@@ -310,7 +310,7 @@ def test_incremental_neardup_plan(spark):
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
     seen = band_signatures(docs.filter("doc_id < 20"))
-    kept, new_bands = incremental_neardup(docs.filter("doc_id >= 20"), seen)
+    kept, new_bands, _ = incremental_neardup(docs.filter("doc_id >= 20"), seen)
     for df in (kept, new_bands):
         plan = _plan(df)
         assert "CartesianProduct" not in plan
