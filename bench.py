@@ -338,7 +338,7 @@ def sf1_arm(spark) -> dict | None:
     n_conv = max(int(1.0 * CONV_PER_SF), 200)
     t_cache = os.path.join(CACHE_DIR, f"transcripts_v{SYNTH_VERSION}_nconv{n_conv}.parquet")
     sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH"))
-    import bench_sf1 as S
+    import points as S
 
     d_cache = os.path.join(CACHE_DIR, f"documents_v{S.DOCS_V}_mult10.parquet")
     if flag not in ("1", "on", "true") and not (

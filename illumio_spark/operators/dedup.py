@@ -896,7 +896,7 @@ def verbatim_overlap_pairs(
 
 def verbatim_overlap_spans(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    k: int = 50, hash_fn: str = "xxhash64", min_windows: int = 1,
+    k: int = 50, hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Span-locating ExactSubstr (VERDICT r5 task 3): where
     verbatim_overlap_pairs reports WHICH documents share a verbatim
@@ -939,7 +939,7 @@ def verbatim_overlap_spans(
             F.count(F.lit(1)).alias("n_windows"),
         )
     )
-    return runs.filter(F.col("n_windows") >= min_windows).select(
+    return runs.select(
         "id_a", "id_b", "pos_a", "pos_b", "n_windows",
         (F.col("n_windows") + F.lit(k - 1)).cast("bigint").alias("span_tokens"),
     )

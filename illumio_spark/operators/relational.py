@@ -67,11 +67,6 @@ def salted_agg(
     return partials.groupBy(*keys).agg(*final_exprs)
 
 
-def anti_join_committed(df: DataFrame, committed: DataFrame, key: str) -> DataFrame:
-    """Left-anti incremental-skip (reference processed-keys, S4/J4)."""
-    return df.join(F.broadcast(committed), key, "left_anti")
-
-
 def windowed_growth(df: DataFrame, ts_col: str, interval: str) -> DataFrame:
     """Rows in the trailing window relative to the data's max timestamp
     (reference 1h/24h growth counters, db_stats.py:68-85)."""
