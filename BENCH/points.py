@@ -696,30 +696,23 @@ def ann_768() -> None:
 
 
 def _run_stream(spark, make_df, input_dir: str, label: str,
-                update_mode: bool = False, max_files: int | None = None) -> dict:
-    """Time one availableNow pass. Append-mode results go to a parquet
-    sink; update-mode stateful output (sessionize) needs a memory sink —
-    the parquet file sink is append-only. max_files forces multiple
-    micro-batches (state expiry only runs at batch boundaries)."""
+                max_files: int | None = None) -> dict:
+    """Time one availableNow pass into an append-mode parquet sink.
+    max_files forces multiple micro-batches (state expiry only runs at
+    batch boundaries)."""
     from illumio_spark.streaming.stream_pipeline import read_transcript_stream
 
     out = tempfile.mkdtemp(prefix=f"stream_{label}_")
     try:
         stream = read_transcript_stream(spark, input_dir, max_files_per_trigger=max_files)
         t0 = time.time()
-        w = make_df(stream).writeStream
-        if update_mode:
-            w = w.outputMode("update").format("memory").queryName(f"bench_{label}")
-        else:
-            w = w.format("parquet").option("path", out)
-        q = w.option("checkpointLocation", out + "_ckpt").trigger(availableNow=True).start()
+        q = (
+            make_df(stream).writeStream.format("parquet").option("path", out)
+            .option("checkpointLocation", out + "_ckpt").trigger(availableNow=True).start()
+        )
         q.awaitTermination(1800)
         elapsed = time.time() - t0
-        rows_out = (
-            spark.sql(f"SELECT COUNT(*) FROM bench_{label}").first()[0]
-            if update_mode
-            else spark.read.parquet(out).count()
-        )
+        rows_out = spark.read.parquet(out).count()
         ops = [so for p in q.recentProgress for so in p.get("stateOperators", []) or []]
         return {
             "elapsed_s": round(elapsed, 3),
@@ -758,12 +751,7 @@ def streaming(spark) -> dict:
     the cached sf0.1 transcript corpus, next to the equivalent batch
     plans in the same session, with state-store row counts from the
     query progress."""
-    from illumio_spark.streaming.stateful import (
-        dedup_stream,
-        sessionize_batch,
-        sessionize_stream,
-        sessionize_stream_native,
-    )
+    from illumio_spark.streaming.stateful import dedup_stream, sessionize_batch, sessionize_stream
 
     input_dir, n_turns = B.transcripts_path(spark, 0.1)
     batch_df = spark.read.parquet(input_dir)
@@ -789,16 +777,9 @@ def streaming(spark) -> dict:
     result["dedup_bounded_rows_per_sec"] = round(n_turns / r["elapsed_s"], 1)
     result["dedup_bounded_state_frac"] = round(r["state_rows_max"] / n_turns, 4)
 
+    # session_window sessionizer; keys keep their r5-r8 "native" names
     r = _run_stream(
         spark, lambda s: sessionize_stream(s, watermark="96 hours", gap="96 hours"),
-        input_dir, "sessionize", update_mode=True,
-    )
-    result["sessionize_stream"] = r
-    result["sessionize_stream_rows_per_sec"] = round(n_turns / r["elapsed_s"], 1)
-
-    # JVM-native session_window variant (append mode → parquet sink works)
-    r = _run_stream(
-        spark, lambda s: sessionize_stream_native(s, watermark="96 hours", gap="96 hours"),
         input_dir, "sessionize_native",
     )
     result["sessionize_stream_native"] = r

@@ -160,18 +160,16 @@ _NO_ESCAPE_FIELDS = {
 }
 
 
-def formatted_log_column(fields: dict[str, Column] | None = None) -> Column:
+def formatted_log_column(fields: dict[str, Column]) -> Column:
     """'k=v|k=v|...' pipe join with '|'→'_' value escaping (F1).
 
-    ``fields`` should be pre-materialized column references (see
+    ``fields`` are pre-materialized column references (see
     ``with_routed_text``): each field value is referenced 2-3× here
     (null/empty gate + escaped value), so inlining the raw
     ``siem_field_columns()`` expressions duplicates every ``py_strip``
     regexp subtree — the generated ``sort_addToSorter_0()`` of the sink
     stage grew past the JVM's 64 KB method limit and silently fell back
     to interpreted execution (2×+ slower end-to-end)."""
-    if fields is None:
-        fields = siem_field_columns()
     device_type = fields["tag1"]  # tag1 == device_type by construction
 
     head = F.concat(
@@ -195,15 +193,13 @@ def formatted_log_column(fields: dict[str, Column] | None = None) -> Column:
     return F.concat(*parts)
 
 
-def routed_text_column(formatted: Column, escaped: Column | None = None) -> Column:
+def routed_text_column(formatted: Column, escaped: Column) -> Column:
     """Append escaped+truncated original payload (F2) and the deterministic
     syslog envelope (F3, derived from event ts — SURVEY.md §7 risk note).
 
-    Pass pre-materialized ``formatted``/``escaped`` column refs when this
-    feeds a real sink plan: both are referenced 2-3× below, and inlined
-    copies of the whole format concat double the generated code size."""
-    if escaped is None:
-        escaped = F.replace(F.col("text"), F.lit("|"), F.lit("_"))
+    ``formatted``/``escaped`` are pre-materialized column refs: both are
+    referenced 2-3× below, and inlined copies of the whole format concat
+    double the generated code size."""
     max_orig = F.lit(S.MAX_MESSAGE_LENGTH) - F.length(formatted) - F.lit(_ORIG_PREFIX_LEN)
     keep = F.greatest(max_orig - F.lit(3), F.lit(0))
     orig = F.when(

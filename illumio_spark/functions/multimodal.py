@@ -606,15 +606,6 @@ def gif_frame_rects(b: bytes) -> list[tuple]:
     return list(_gif_walk_frames(b))
 
 
-@_codec_guard
-def decode_gif_frames(b: bytes) -> list[list[int]]:
-    """All frames of an (animated) GIF as gray-pixel lists — REAL video-
-    style frame extraction from a real multi-frame container. Frames are
-    returned in their own rects (no disposal-method compositing: samplers
-    want per-frame content, and the fixtures use full-size frames)."""
-    return [px for *_rect, px in _gif_walk_frames(b)]
-
-
 def encode_gif_anim(width: int, height: int, frames) -> bytes:
     """REAL animated-GIF encoder: one global 256-gray color table, one
     full-size image block per frame (each its own LZW stream), NETSCAPE

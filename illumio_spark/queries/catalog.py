@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from illumio_spark.operators.relational import windowed_growth
+
 # ---------------------------------------------------------------------------
 # helpers
 # ---------------------------------------------------------------------------
@@ -390,12 +392,8 @@ A9_SQL = """
 
 def a9_growth_window(spark, sf_dir):
     # reference: logs in last 1h/24h windows (db_stats.py:68-85)
-    ev = load(spark, sf_dir, "events")
-    cutoff = ev.agg((F.max("ts") - F.expr("INTERVAL 1 DAY")).alias("cut"))
-    return (
-        ev.join(F.broadcast(cutoff))
-        .filter(F.col("ts") >= F.col("cut"))
-        .agg(F.count(F.lit(1)).alias("n_24h"))
+    return windowed_growth(load(spark, sf_dir, "events"), "ts", "1 DAY").agg(
+        F.count(F.lit(1)).alias("n_24h")
     )
 
 

@@ -1018,10 +1018,10 @@ def td_decode_stats(spark, sf_dir):
 )
 def td_sessionize(spark, sf_dir):
     """Per-conversation session rollup via the sessionizer's batch oracle
-    (streaming/stateful.py:113) — the applyInPandasWithState streaming path
-    is asserted equal to this batch path in tests/test_streaming.py /
-    test_stateful_relational.py; here the batch semantics themselves get a
-    cross-engine DuckDB check (events stands in as the turn stream:
+    (stateful.sessionize_batch) — the closed sessions of the streaming
+    sessionize_stream are asserted equal to this batch path in
+    tests/test_stateful_relational.py; here the batch semantics themselves
+    get a cross-engine DuckDB check (events stands in as the turn stream:
     conv=user_id, text=props)."""
     from illumio_spark.streaming.stateful import sessionize_batch
 
@@ -1477,8 +1477,8 @@ _SESSION_GAPS_SQL = """
 @q("td_session_gaps", _SESSION_GAPS_SQL)
 def td_session_gaps(spark, sf_dir):
     """Batch gap-sessionization via F.session_window (new r5) — the same
-    Tungsten session operator the streaming fast path uses
-    (sessionize_stream_native), cross-engine-checked against the classic
+    Tungsten session operator the streaming sessionizer uses
+    (sessionize_stream), cross-engine-checked against the classic
     gap-and-islands SQL (lag → break flag → running sum → group).
     Semantics pinned by the oracle: sessions are half-open, so an event
     exactly gap after its predecessor starts a NEW session (>= in the

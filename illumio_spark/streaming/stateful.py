@@ -1,115 +1,22 @@
-"""Custom stateful streaming operator: per-conversation session tracking.
+"""Streaming operators: per-conversation sessionization, exact dedup and
+the near-dup frontier streams.
 
 The reference keeps per-log-type mutable counters and an in-flight queue
 as process state (app/health_reporter.py:31-33, app/log_processor.py:95).
-The Spark-native analog for *keyed* state is ``applyInPandasWithState``:
-this operator tracks, per conversation, a running turn count, byte volume,
-and last-seen timestamp, emitting a session summary row when the
-conversation goes quiet for `gap` (event-time timeout) — the standard
-sessionization shape a transcript pipeline needs (e.g. "close out a
-conversation and emit its rollup once no turn arrives for 30 min").
+The Spark-native analog for *keyed* state is the JVM session_window
+aggregation: `sessionize_stream` tracks, per conversation, a turn count,
+byte volume and first/last timestamp, and emits a session summary row
+once the conversation goes quiet for `gap` — the sessionization shape a
+transcript pipeline needs (e.g. "close out a conversation and emit its
+rollup once no turn arrives for 30 min").
 
-Batch fallback: `sessionize_batch` computes identical summaries with a
-window/groupBy (used by tests as the oracle for the stateful path).
+Batch oracle: `sessionize_batch` computes the same summaries with one
+groupBy (tests assert closed stream sessions equal it).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable
-
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-SESSION_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("n_turns", T.LongType(), False),
-        T.StructField("n_chars", T.LongType(), False),
-        T.StructField("first_ts", T.TimestampType(), True),
-        T.StructField("last_ts", T.TimestampType(), True),
-        T.StructField("closed", T.BooleanType(), False),
-    ]
-)
-
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("n_turns", T.LongType(), False),
-        T.StructField("n_chars", T.LongType(), False),
-        T.StructField("first_ts_us", T.LongType(), True),
-        T.StructField("last_ts_us", T.LongType(), True),
-    ]
-)
-
-
-def _session_fn(key, batches: Iterable[pd.DataFrame], state: GroupState, gap_ms: int = 30 * 60 * 1000):
-    (conv_id,) = key
-    if state.hasTimedOut:
-        n_turns, n_chars, first_us, last_us = state.get
-        state.remove()
-        yield pd.DataFrame(
-            {
-                "conv_id": [conv_id],
-                "n_turns": [n_turns],
-                "n_chars": [n_chars],
-                "first_ts": [pd.Timestamp(first_us, unit="us")],
-                "last_ts": [pd.Timestamp(last_us, unit="us")],
-                "closed": [True],
-            }
-        )
-        return
-
-    n_turns, n_chars, first_us, last_us = state.get if state.exists else (0, 0, None, None)
-    for pdf in batches:
-        n_turns += len(pdf)
-        n_chars += int(pdf["text"].str.len().fillna(0).sum())
-        ts_us = pdf["ts"].astype("datetime64[us]").astype("int64")
-        first_us = int(ts_us.min()) if first_us is None else min(first_us, int(ts_us.min()))
-        last_us = int(ts_us.max()) if last_us is None else max(last_us, int(ts_us.max()))
-
-    state.update((n_turns, n_chars, first_us, last_us))
-    state.setTimeoutTimestamp(last_us // 1000 + gap_ms)  # ms: last + gap
-    yield pd.DataFrame(
-        {
-            "conv_id": [conv_id],
-            "n_turns": [n_turns],
-            "n_chars": [n_chars],
-            "first_ts": [pd.Timestamp(first_us, unit="us")],
-            "last_ts": [pd.Timestamp(last_us, unit="us")],
-            "closed": [False],
-        }
-    )
-
-
-def _parse_duration_ms(d: str) -> int:
-    n, unit = d.split()
-    return int(n) * {"second": 1000, "minute": 60_000, "hour": 3_600_000}[unit.rstrip("s")]
-
-
-def sessionize_stream(
-    stream: DataFrame, watermark: str = "30 minutes", gap: str = "30 minutes"
-) -> DataFrame:
-    """applyInPandasWithState sessionizer over a transcript stream.
-
-    `gap` is the quiet period that closes a session (event-time timeout).
-    It has its own explicit default — a watermark delay (late-data
-    tolerance) and a session gap are unrelated quantities, so tuning one
-    never silently changes the other (same contract as
-    sessionize_stream_native)."""
-    import functools
-
-    gap_ms = _parse_duration_ms(gap)
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            functools.partial(_session_fn, gap_ms=gap_ms),
-            outputStructType=SESSION_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
+from pyspark.sql import DataFrame, functions as F
 
 
 def sessionize_batch(df: DataFrame) -> DataFrame:
@@ -122,26 +29,17 @@ def sessionize_batch(df: DataFrame) -> DataFrame:
     )
 
 
-def sessionize_stream_native(
+def sessionize_stream(
     stream: DataFrame, watermark: str = "30 minutes", gap: str = "30 minutes"
 ) -> DataFrame:
-    """JVM-native streaming sessionizer via ``F.session_window`` — the
-    fast path when sessions only need AGGREGATES (count/sum/min/max): the
-    whole operator stays in Tungsten state management, no Python worker,
-    no pandas group invocations, no state ser/de.
+    """Streaming sessionizer via ``F.session_window``: the whole operator
+    stays in Tungsten state management, so its cost is per-row JVM.
 
-    Measured (BENCH/streaming_point.json): the applyInPandasWithState
-    path pays ~14× batch cost on 75 k small groups because its cost is
-    per-GROUP Python; this plan's cost is per-row JVM. Use
-    ``sessionize_stream`` only when the session logic genuinely needs
-    imperative per-turn state (custom timeout actions, per-turn lineage);
-    emits one row per CLOSED session (append mode — watermark must pass
-    the session gap before a row appears, the session_window contract).
-
-    ``watermark`` (how long to wait for late data) and ``gap`` (idle time
-    that closes a session) are unrelated quantities — each has its own
-    default; tune them independently (r5 ADVICE: gap no longer silently
-    aliases the watermark delay)."""
+    Emits one row per CLOSED session (append mode): a row appears once
+    the watermark passes the session's last turn + `gap`, the
+    session_window contract. ``watermark`` (how long to wait for late
+    data) and ``gap`` (idle time that closes a session) are unrelated
+    quantities — each has its own default; tune them independently."""
     return (
         stream.withWatermark("ts", watermark)
         .groupBy(F.session_window(F.col("ts"), gap), F.col("conv_id"))
@@ -210,7 +108,7 @@ def neardup_stream(
     batch (output_path-style batch=<id> dirs) for downstream
     compaction.
 
-    Why not a stateful operator: per-band applyInPandasWithState could
+    Why not a stateful operator: a per-band keyed state operator could
     flag band collisions, but the keep decision needs a per-DOC verdict
     over all its bands plus connected components over the collision
     graph — a second keyed stateful stage, and CC is iterative (not

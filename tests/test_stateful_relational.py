@@ -1,5 +1,5 @@
-"""applyInPandasWithState sessionizer vs its batch oracle, and the
-salted two-phase aggregation under a hot key."""
+"""Streaming sessionizer vs its batch oracle, and the salted two-phase
+aggregation under a hot key."""
 
 import os
 import tempfile
@@ -15,66 +15,6 @@ from illumio_spark.streaming.stateful import sessionize_batch, sessionize_stream
 @pytest.fixture(scope="module")
 def pdf():
     return synth.generate_pandas(50, hot_frac=0.3)
-
-
-def test_stateful_sessionizer_matches_batch(spark, pdf):
-    input_dir = tempfile.mkdtemp(prefix="sess_in_")
-    synth.write_parquet(pdf, os.path.join(input_dir, "part-0.parquet"))
-    out_dir = tempfile.mkdtemp(prefix="sess_out_")
-    ckpt = tempfile.mkdtemp(prefix="sess_ckpt_")
-
-    from illumio_spark import schema as S
-
-    stream = spark.readStream.schema(S.TRANSCRIPT_SCHEMA).parquet(input_dir)
-    # update-mode output → memory sink (parquet sink is append-only)
-    q = (
-        sessionize_stream(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("sessions")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    got = spark.sql("select * from sessions").toPandas()
-    # keep the LAST update per conversation (update mode emits progressive rows)
-    got = got.sort_values(["conv_id", "n_turns"]).groupby("conv_id").tail(1)
-    want = sessionize_batch(spark.createDataFrame(pdf)).toPandas()
-
-    merged = got.merge(want, on="conv_id", suffixes=("_got", "_want"))
-    assert len(merged) == len(want)
-    assert (merged["n_turns_got"] == merged["n_turns_want"]).all()
-    assert (merged["n_chars_got"] == merged["n_chars_want"]).all()
-    assert (merged["last_ts_got"] == merged["last_ts_want"]).all()
-
-
-def test_sessionizer_gap_parameter(spark, pdf):
-    """The gap knob must thread into the state function: a tiny gap closes
-    every conversation (all turn deltas are ≥ 1 s > 0-minute gap window),
-    while the default 30-minute gap leaves in-progress sessions open."""
-    input_dir = tempfile.mkdtemp(prefix="gap_in_")
-    synth.write_parquet(pdf, os.path.join(input_dir, "part-0.parquet"))
-    ckpt = tempfile.mkdtemp(prefix="gap_ckpt_")
-
-    from illumio_spark import schema as S
-
-    stream = spark.readStream.schema(S.TRANSCRIPT_SCHEMA).parquet(input_dir)
-    q = (
-        sessionize_stream(stream, watermark="0 seconds", gap="1 second")
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("gap_sessions")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = spark.sql("select * from gap_sessions").toPandas()
-    # with a 1 s gap and a watermark that has advanced past every event,
-    # closed session-summary rows must appear (timeout fired)
-    assert got["closed"].any()
 
 
 def test_salted_agg_hot_key(spark, pdf):
@@ -157,20 +97,46 @@ def test_committed_days_propagates_corrupt_manifest(spark, tmp_path):
         committed_days(spark, io).count()
 
 
-def test_sessionize_stream_native_matches_batch_for_closed_sessions(spark):
-    """JVM session_window path: closed sessions must equal the batch
-    aggregate exactly, and a >gap quiet period must split a conversation
-    into two session rows. A late sentinel conversation in a second file
-    (maxFilesPerTrigger=1 → second micro-batch) advances the watermark so
-    conv A's sessions close and emit in append mode."""
+def _closed_sessions(spark, input_dir: str, name: str, **kw):
+    """Run sessionize_stream over input_dir one file per micro-batch
+    (append mode, memory sink) and return the closed sessions."""
+    from illumio_spark import schema as S
+
+    stream = (
+        spark.readStream.schema(S.TRANSCRIPT_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(input_dir)
+    )
+    q = (
+        sessionize_stream(stream, **kw)
+        .writeStream.outputMode("append")
+        .format("memory")
+        .queryName(name)
+        .option("checkpointLocation", tempfile.mkdtemp(prefix=f"{name}_ckpt_"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+    return (
+        spark.sql(f"select * from {name}").toPandas()
+        .sort_values(["conv_id", "session_start"]).reset_index(drop=True)
+    )
+
+
+def test_sessionize_stream_matches_batch_for_closed_sessions(spark, pdf):
+    """JVM session_window sessionizer: closed sessions must equal the
+    batch aggregate exactly, and a >gap quiet period must split a
+    conversation into two session rows. A late sentinel conversation in a
+    second file (maxFilesPerTrigger=1 → second micro-batch) advances the
+    watermark so the sessions before it close and emit in append mode."""
     import numpy as np
     import pandas as pd
 
-    from illumio_spark.streaming.stateful import sessionize_stream_native
+    from illumio_spark import schema as S
 
     t0 = pd.Timestamp("2026-01-10 12:00:00")
 
-    def mk(conv, times, start_idx=0):
+    def mk(conv, times, start_idx=0, base=t0):
         return pd.DataFrame(
             {
                 "conv_id": conv,
@@ -179,12 +145,12 @@ def test_sessionize_stream_native_matches_batch_for_closed_sessions(spark):
                 "text": [f"turn {i}" for i in range(len(times))],
                 "tool": None,
                 "ts": pd.Series(
-                    [t0 + pd.Timedelta(seconds=s) for s in times]
+                    [base + pd.Timedelta(seconds=s) for s in times]
                 ).astype("datetime64[us]"),
             }
         )
 
-    input_dir = tempfile.mkdtemp(prefix="native_sess_in_")
+    input_dir = tempfile.mkdtemp(prefix="sess_in_")
     # conv A: burst 1 (0,10,20 s), quiet 120 s > 60 s gap, burst 2 (140,150 s)
     synth.write_parquet(
         pd.concat([mk("conv-A", [0, 10, 20]), mk("conv-A", [140, 150], 3)]),
@@ -193,27 +159,8 @@ def test_sessionize_stream_native_matches_batch_for_closed_sessions(spark):
     # sentinel a day later pushes the watermark past conv A entirely
     synth.write_parquet(mk("conv-Z", [86400]), os.path.join(input_dir, "part-1.parquet"))
 
-    from illumio_spark import schema as S
-
-    stream = (
-        spark.readStream.schema(S.TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
-    ckpt = tempfile.mkdtemp(prefix="native_sess_ckpt_")
-    q = (
-        sessionize_stream_native(stream, watermark="0 seconds", gap="60 seconds")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("native_sessions")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = (
-        spark.sql("select * from native_sessions").toPandas()
-        .sort_values("session_start").reset_index(drop=True)
+    got = _closed_sessions(
+        spark, input_dir, "gap_sessions", watermark="0 seconds", gap="60 seconds"
     )
     a = got[got.conv_id == "conv-A"]
     assert len(a) == 2, f"expected 2 closed sessions for conv-A, got\n{got}"
@@ -225,3 +172,22 @@ def test_sessionize_stream_native_matches_batch_for_closed_sessions(spark):
     ]
     # the sentinel's own session is still open (nothing after it) → absent
     assert (got.conv_id == "conv-Z").sum() == 0
+
+    # skewed synth corpus (one hot conversation): turn gaps are 1-300 s,
+    # under the default 30-minute gap, so every conversation is exactly one
+    # session and must equal the batch rollup of the same file
+    corpus_dir = tempfile.mkdtemp(prefix="sess_corpus_in_")
+    corpus = os.path.join(corpus_dir, "part-0.parquet")
+    synth.write_parquet(pdf, corpus)
+    synth.write_parquet(
+        mk("conv-Z", [0], base=pdf["ts"].max() + pd.Timedelta(days=1)),
+        os.path.join(corpus_dir, "part-1.parquet"),
+    )
+    got = _closed_sessions(spark, corpus_dir, "corpus_sessions", watermark="0 seconds")
+    want = (
+        sessionize_batch(spark.read.schema(S.TRANSCRIPT_SCHEMA).parquet(corpus))
+        .toPandas().sort_values("conv_id").reset_index(drop=True)
+    )
+    assert len(want) == 50
+    cols = ["conv_id", "n_turns", "n_chars", "first_ts", "last_ts"]
+    pd.testing.assert_frame_equal(got[cols], want[cols], check_dtype=False)
