@@ -7,7 +7,7 @@ the key layout of the committed BENCH/<file>.json history.
 
 Usage: python BENCH/points.py <point>   (run alone: each point loads the
 whole host). Points: sf1, dedup_scale, assembly_scale, compact_frontier,
-incremental_neardup, neardup_stream, compact_embedding, ann_768,
+cc_regimes, incremental_neardup, neardup_stream, compact_embedding, ann_768,
 streaming, hw_ceiling, scaling.
 
 ann_768, hw_ceiling and scaling measure an N -> 4N core pair with
@@ -448,6 +448,61 @@ def compact_frontier(spark) -> dict:
         "arms": [a, b],
         "data_ratio": round(b["n_docs"] / a["n_docs"], 2),
         "time_ratio_508k_over_50k": ratios(a, b)["compact"],
+    }
+
+
+CC_EDGES = (1_000_000, 4_000_000, 8_000_000)
+
+
+@point("cc_regimes.json", footer=("cpus",))
+def cc_regimes(spark) -> dict:
+    """neardup_components in both regimes, driver finish (one Arrow
+    collect + numpy) and distributed star contraction, on seeded
+    clustered graphs straddling DRIVER_CC_MAX_EDGES: n edges drawn
+    inside n/16 clusters of 16 ids (the near-dup shape: many small
+    components). Each regime is forced by setting the bound; `default`
+    names the regime the shipped bound picks. The edge table is written
+    to parquet first (untimed); the timed job reads it, labels every id
+    and counts the components. `driver_py_peak_mb` is the driver
+    process's RSS high-water mark after the driver arm (sizes ascend, so
+    it is that arm's peak)."""
+    import resource
+
+    from illumio_spark.operators import dedup as D
+
+    shipped = D.DRIVER_CC_MAX_EDGES
+
+    def arm(n: int) -> dict:
+        edges_dir = tempfile.mkdtemp(prefix=f"cc_regimes_{n}_")
+        cluster = F.pmod(F.xxhash64("id", F.lit(1)), F.lit(n // 16)) * 16
+        spark.range(n).select(
+            (cluster + F.pmod(F.xxhash64("id", F.lit(2)), F.lit(16))).alias("id_a"),
+            (cluster + F.pmod(F.xxhash64("id", F.lit(3)), F.lit(16))).alias("id_b"),
+        ).write.mode("overwrite").parquet(edges_dir)
+        nodes = spark.range(n).withColumnRenamed("id", "doc_id")
+        out: dict = {"edges": n, "default": "driver" if n <= shipped else "distributed"}
+        try:
+            for regime, bound in (("distributed", -1), ("driver", n)):
+                D.DRIVER_CC_MAX_EDGES = bound
+                out[f"{regime}_s"], out[f"{regime}_components"] = clock(
+                    lambda: D.neardup_components(nodes, spark.read.parquet(edges_dir))
+                    .select(F.countDistinct("component")).first()[0]
+                )
+        finally:
+            D.DRIVER_CC_MAX_EDGES = shipped
+        out["driver_py_peak_mb"] = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss // 1024
+        shutil.rmtree(edges_dir, ignore_errors=True)
+        return out
+
+    arm(100_000)  # warm every plan shape
+    arms = [arm(n) for n in CC_EDGES]
+    return {
+        "metric": "cc_regimes",
+        "driver_cc_max_edges": shipped,
+        "arms": arms,
+        "distributed_over_driver": [
+            round(a["distributed_s"] / a["driver_s"], 1) for a in arms
+        ],
     }
 
 

@@ -17,7 +17,10 @@ Scale notes:
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql.types import StructField, StructType
 
 from illumio_spark.functions import repartition_by
 
@@ -675,7 +678,10 @@ def compact_neardup_frontier(
     pairs — CC runs over per-bucket star edges (_band_star_edges: M-1
     edges per M-member bucket, identical components). Measured at 508 k
     docs: the pairwise form feeds CC 32.8 M edges and runs ~3 min; the
-    star form feeds it ≤ 2 M. No text, no minhashing, no all-pairs."""
+    star form feeds it ≤ 2 M. That is under DRIVER_CC_MAX_EDGES (4 M),
+    so neardup_components labels it from one Arrow collect instead of
+    distributed star-contraction rounds. No text, no minhashing, no
+    all-pairs."""
     b = bands.select(id_col, "band_idx", "band_key").distinct()
     # materialize the deduped band table ONCE: the star-edge aggregate, the
     # node list, and CC's round-0 labels all read it — uncheckpointed, each
@@ -736,6 +742,41 @@ def _star_phase(edges: DataFrame, large: bool, dedup: bool = True) -> DataFrame:
     return out.distinct() if dedup else out
 
 
+# Edge count up to which neardup_components labels on the driver (one
+# Arrow collect + numpy) instead of distributed star contraction. A
+# driver-memory cap set from `python BENCH/points.py cc_regimes`: the
+# driver finish won at every measured size, and peaked at ~0.6 GB of
+# driver RSS at 4 M edges (README "Dual paths"). -1 forces star
+# contraction for every graph.
+DRIVER_CC_MAX_EDGES = 4_000_000
+
+
+def _min_root_labels(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Connected components of the edge list (a[i], b[i]) on the driver →
+    (ids, component) over every edge endpoint, component = min id.
+
+    Vectorised min-root hooking: ids are ranked by np.unique (rank order
+    = id order), every root is hooked to the smallest root across its
+    edges (np.minimum.at), then pointer jumping runs until every rank
+    points at a root. Parents only ever decrease, so no cycle can form,
+    and each round with a cross-root edge removes at least one root."""
+    ids, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    ea, eb = inv[: len(a)], inv[len(a):]
+    parent = np.arange(len(ids))
+    while True:
+        ra, rb = parent[ea], parent[eb]
+        if np.array_equal(ra, rb):
+            return ids, ids[parent]
+        lo = np.minimum(ra, rb)
+        np.minimum.at(parent, ra, lo)
+        np.minimum.at(parent, rb, lo)
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+
+
 def neardup_components(
     nodes: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
     max_iters: int = 20,
@@ -746,24 +787,41 @@ def neardup_components(
     component; dropping `id_b` of every pair over-keeps on chains like
     a-b, b-c only by accident of id ordering).
 
-    Algorithm (r8): alternating large-star / small-star contraction
-    (Kiveris et al. 2014, "Connected Components in MapReduce and
-    Beyond") instead of min-label propagation with pointer jumping.
-    The r1-r7 label-propagation loop was measured at 17 rounds on the
-    sf1.0 bench graph (diameter ≥ 38): a label usually points at a
-    LOCAL minimum that already believes itself a root, so pointer
-    jumping shortcuts nothing and the global min crawls edge-by-edge —
-    and each extra jump per round doubled the un-materialized hook
-    subtree instead of helping. Star contraction rewrites the EDGES
-    each phase (every node re-links its larger / its smaller-or-equal
-    neighbors, plus itself, to its min neighbor), so the graph itself
-    contracts toward min-centered stars: measured 6 rounds instead of
-    17 on the same graph, 9.3 s → ~3 s for the CC stage, identical
-    labels. Each phase is one groupBy + one join + one distinct, all
-    id-keyed (never edge cross-products), with the edge table
-    checkpointed per phase; the edge count is bounded by m + n per
-    phase (each node adds at most its own re-link edge) and shrinks in
-    practice — no quadratic fan-out at any scale.
+    Two regimes, chosen per call by the size of the canonical edge table
+    (README "Dual paths"):
+
+    Driver finish. One count of the edge table (which materializes its
+    checkpoint) picks the regime; a table of at most DRIVER_CC_MAX_EDGES
+    edges is then collected once through Arrow, labelled by vectorised
+    numpy min-root hooking + pointer jumping (_min_root_labels) and
+    returned through one createDataFrame — instead of a star-contraction
+    round, its convergence aggregate and their checkpoints (one Spark job
+    per eager step). This covers the benchmark's ~7.3 k star edges and
+    frontier compactions up to millions of edges. `python BENCH/points.py
+    cc_regimes` (4 cores, clustered graphs) measured the driver finish
+    4-7x faster than star contraction at 1 M, 4 M and 8 M edges, so the
+    bound is a driver-memory cap, not a time crossover: the driver
+    process peaked at ~130 B per edge (587 MB at 4 M, 1,028 MB at 8 M).
+    max_iters is not consulted here: the driver loop always runs to its
+    fixpoint.
+
+    Star contraction (more than DRIVER_CC_MAX_EDGES edges):
+    alternating large-star / small-star contraction (Kiveris et al.
+    2014, "Connected Components in MapReduce and Beyond") instead of
+    min-label propagation with pointer jumping. The r1-r7 label-
+    propagation loop was measured at 17 rounds on the sf1.0 bench graph
+    (diameter ≥ 38): a label usually points at a LOCAL minimum that
+    already believes itself a root, so distributed pointer jumping
+    shortcuts nothing and the global min crawls edge-by-edge. Star
+    contraction rewrites the EDGES each phase (every node re-links its
+    larger / its smaller-or-equal neighbors, plus itself, to its min
+    neighbor), so the graph itself contracts toward min-centered stars:
+    measured 6 rounds instead of 17 on the same graph, 9.3 s → ~3 s for
+    the CC stage, identical labels. Each phase is one groupBy + one join
+    + one distinct, all id-keyed (never edge cross-products), with the
+    edge table checkpointed per phase; the edge count is bounded by
+    m + n per phase (each node adds at most its own re-link edge) and
+    shrinks in practice — no quadratic fan-out at any scale.
 
     Convergence is detected EXACTLY, not probabilistically: the
     algorithm's fixpoint is a disjoint union of stars centered at
@@ -776,8 +834,8 @@ def neardup_components(
     decomposition. Labels then read off the stars: leaf → its center,
     everything else → itself.
 
-    Duplicate pairs are tolerated (the first distinct normalizes).
-    Raises RuntimeError if max_iters rounds (one large-star + one
+    Duplicate pairs are tolerated in both regimes. Star contraction
+    raises RuntimeError if max_iters rounds (one large-star + one
     small-star each) pass without reaching the star state — truncated
     (split) components must never be returned silently."""
     edges = pairs.select(
@@ -791,38 +849,51 @@ def neardup_components(
     # `pairs` lineage (e.g. the whole minhash-LSH pipeline) would
     # otherwise re-execute per phase — measured 2× on the driver row
     # (r6); the GraphX equivalent is its mandatory edge cache. The lazy
-    # checkpoint materializes under the isEmpty probe — one action.
+    # checkpoint materializes under the count that picks the regime; only
+    # a graph within DRIVER_CC_MAX_EDGES is then collected.
     edges = edges.localCheckpoint(eager=False)
-    converged = edges.isEmpty()
-    for _ in range(max_iters):
-        if converged:
-            break
-        # one eager checkpoint per phase: the small-star phase references
-        # its input three times (two sym branches + the min aggregate),
-        # so the large-star output must be MATERIALIZED, not merely
-        # persist()ed — a lazy cache under one fused job lets concurrent
-        # stages race past the unfilled cache and re-execute the phase
-        # subtree (tried in r8: fusing both phases + the aggregate into
-        # one action regressed the CC stage 4.1 s → 7.7 s)
-        edges = _star_phase(edges, large=True, dedup=False).localCheckpoint(
-            eager=True
+    n_edges = edges.count()
+    if n_edges <= DRIVER_CC_MAX_EDGES:
+        local = edges.toPandas()
+        ids, comp = _min_root_labels(local["id_a"].to_numpy(), local["id_b"].to_numpy())
+        leaf = ids != comp
+        id_type = edges.schema["id_a"].dataType
+        lab = edges.sparkSession.createDataFrame(
+            pd.DataFrame({id_col: ids[leaf], "__c": comp[leaf]}),
+            StructType([StructField(id_col, id_type), StructField("__c", id_type)]),
         )
-        edges = _star_phase(edges, large=False).localCheckpoint(eager=True)
-        ends = edges.selectExpr("id_b AS __n", "1 AS __leaf", "false AS __ctr").unionByName(
-            edges.selectExpr("id_a AS __n", "0 AS __leaf", "true AS __ctr")
-        )
-        per_node = ends.groupBy("__n").agg(
-            F.sum("__leaf").alias("__leaves"), F.max("__ctr").alias("__center")
-        )
-        not_star = (F.col("__leaves") > 1) | ((F.col("__leaves") > 0) & F.col("__center"))
-        converged = per_node.agg(F.count(F.when(not_star, 1))).first()[0] == 0
-    if not converged:
-        raise RuntimeError(
-            f"neardup_components did not converge in {max_iters} iterations "
-            "— component labels would be split; raise max_iters "
-            "(star contraction needs O(log² n) rounds worst-case)"
-        )
-    lab = edges.select(F.col("id_b").alias(id_col), F.col("id_a").alias("__c"))
+    else:
+        converged = n_edges == 0
+        for _ in range(max_iters):
+            if converged:
+                break
+            # one eager checkpoint per phase: the small-star phase
+            # references its input three times (two sym branches + the
+            # min aggregate), so the large-star output must be
+            # MATERIALIZED, not merely persist()ed — a lazy cache under
+            # one fused job lets concurrent stages race past the unfilled
+            # cache and re-execute the phase subtree (tried in r8: fusing
+            # both phases + the aggregate into one action regressed the CC
+            # stage 4.1 s → 7.7 s)
+            edges = _star_phase(edges, large=True, dedup=False).localCheckpoint(
+                eager=True
+            )
+            edges = _star_phase(edges, large=False).localCheckpoint(eager=True)
+            ends = edges.selectExpr("id_b AS __n", "1 AS __leaf", "false AS __ctr").unionByName(
+                edges.selectExpr("id_a AS __n", "0 AS __leaf", "true AS __ctr")
+            )
+            per_node = ends.groupBy("__n").agg(
+                F.sum("__leaf").alias("__leaves"), F.max("__ctr").alias("__center")
+            )
+            not_star = (F.col("__leaves") > 1) | ((F.col("__leaves") > 0) & F.col("__center"))
+            converged = per_node.agg(F.count(F.when(not_star, 1))).first()[0] == 0
+        if not converged:
+            raise RuntimeError(
+                f"neardup_components did not converge in {max_iters} iterations "
+                "— component labels would be split; raise max_iters "
+                "(star contraction needs O(log² n) rounds worst-case)"
+            )
+        lab = edges.select(F.col("id_b").alias(id_col), F.col("id_a").alias("__c"))
     labels = (
         nodes.select(F.col(id_col))
         .join(lab, id_col, "left")
@@ -955,78 +1026,55 @@ def cut_verbatim_spans(
     copy), leaving the rest of the document intact — the alternative to
     dropping whole documents that contain one shared block.
 
-    Plan, all codegen DataFrame ops:
-      1. spans → per-doc cut intervals [pos_b, pos_b + span_tokens) on the
-         id_b side, keeping only runs >= min_span_tokens (cut only real
-         duplication, not chance k-gram hits);
-      2. merge overlapping/adjacent intervals per doc (gap-and-islands:
-         running max of interval end over a pos-ordered window);
-      3. tokenize affected docs, posexplode, range anti-condition against
-         the doc's merged intervals, rebuild text in token order.
-    Shuffle keys are doc ids throughout; untouched docs pass through
-    without explode cost (left_anti split). Whitespace is normalized to
-    single spaces in REBUILT docs only (tokenization is whitespace-based,
-    same as the detector's)."""
-    iv = (
+    Plan, all codegen DataFrame ops, one projection over `df`:
+      1. spans → one `__cuts` array of [pos_b, pos_b + span_tokens)
+         intervals per id_b, keeping only runs >= min_span_tokens (cut
+         only real duplication, not chance k-gram hits). Overlapping and
+         adjacent intervals are NOT merged: a token is cut iff any
+         interval covers it, so merging would change nothing;
+      2. left-join `__cuts` to `df` (the aggregate is doc-keyed and
+         small, so it is typically broadcast);
+      3. affected rows rebuild their text as the whitespace tokens whose
+         index no interval covers, joined by single spaces; a row whose
+         every token is cut drops (full-duplication remediation ==
+         removal).
+    Untouched rows keep their text byte for byte and extra columns pass
+    through unchanged. Tokenization is whitespace-based, the same as the
+    detector's."""
+    cuts = (
         spans.filter(F.col("span_tokens") >= min_span_tokens)
+        .groupBy(F.col("id_b").alias(id_col))
+        .agg(
+            F.collect_list(
+                F.struct(
+                    F.col("pos_b").alias("__start"),
+                    (F.col("pos_b") + F.col("span_tokens")).alias("__end"),
+                )
+            ).alias("__cuts")
+        )
+    )
+    untouched = F.col("__cuts").isNull()
+    kept = F.when(
+        ~untouched,
+        F.filter(
+            F.split(F.trim(F.col(text_col)), r"\s+"),
+            lambda t, i: ~F.exists(
+                "__cuts", lambda c: (i >= c["__start"]) & (i < c["__end"])
+            ),
+        ),
+    )
+    return (
+        df.join(cuts, id_col, "left")
+        .withColumn("__kept", kept)
+        .filter(untouched | (F.size("__kept") > 0))
         .select(
-            F.col("id_b").alias(id_col),
-            F.col("pos_b").alias("__start"),
-            (F.col("pos_b") + F.col("span_tokens")).alias("__end"),
-        )
-        .distinct()
-    )
-    w_ord = Window.partitionBy(id_col).orderBy("__start", "__end")
-    run_end = F.max("__end").over(
-        w_ord.rowsBetween(Window.unboundedPreceding, -1)
-    )
-    merged = (
-        iv.withColumn(
-            "__new_island",
-            F.when(
-                run_end.isNull() | (F.col("__start") > run_end), 1
-            ).otherwise(0),
-        )
-        .withColumn(
-            "__isl",
-            F.sum("__new_island").over(
-                w_ord.rowsBetween(Window.unboundedPreceding, 0)
-            ),
-        )
-        .groupBy(id_col, "__isl")
-        .agg(F.min("__start").alias("__start"), F.max("__end").alias("__end"))
-    )
-    cuts = merged.groupBy(id_col).agg(
-        F.collect_list(F.struct("__start", "__end")).alias("__cuts")
-    )
-    affected = df.join(cuts, id_col, "inner")
-    untouched = df.join(cuts.select(id_col), id_col, "left_anti")
-    # hash(id)-partition the affected docs before the explode (r8): the
-    # rebuild groupBy is id-keyed, so this replaces its token-level
-    # exchange with a doc-level one and parallelizes the tokenize (the
-    # cuts join is typically broadcast, leaving the one-task scan's
-    # partitioning in place otherwise)
-    affected = repartition_by(affected, F.col(id_col))
-    toks = affected.select(
-        id_col,
-        "__cuts",
-        *[c for c in df.columns if c not in (id_col, text_col)],
-        F.posexplode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("__pos", "__tok"),
-    )
-    keep = toks.filter(
-        ~F.exists(
-            "__cuts",
-            lambda c: (F.col("__pos") >= c["__start"]) & (F.col("__pos") < c["__end"]),
+            *[
+                F.when(untouched, F.col(text_col))
+                .otherwise(F.array_join("__kept", " "))
+                .alias(text_col)
+                if c == text_col
+                else F.col(c)
+                for c in df.columns
+            ]
         )
     )
-    passthru = [c for c in df.columns if c not in (id_col, text_col)]
-    rebuilt = keep.groupBy(id_col, *passthru).agg(
-        F.concat_ws(
-            " ",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("__pos", "__tok"))),
-                lambda s: s["__tok"],
-            ),
-        ).alias(text_col)
-    )
-    return untouched.unionByName(rebuilt.select(*df.columns))

@@ -1525,8 +1525,9 @@ _COMPONENTS_SQL = f"""
 @q("td_neardup_components", _COMPONENTS_SQL)
 def td_neardup_components(spark, sf_dir):
     """Transitivity-correct near-dup grouping (new r5): minhash-LSH
-    candidate pairs → connected components by min-label propagation
-    (the GraphX recipe as plain DataFrame joins), checked against a
+    candidate pairs → connected components (neardup_components: a
+    driver finish for small edge tables, star contraction otherwise),
+    checked against a
     DuckDB RECURSIVE-CTE transitive closure. component = MIN reachable
     id, so labels are deterministic and hash-comparable; singleton docs
     carry their own id."""
@@ -1951,8 +1952,8 @@ def td_cut_spans(spark, sf_dir):
     anti-filter -> ordered string_agg, so the rebuilt TEXT is
     byte-compared, not just counted. Docs cut to zero tokens drop
     (full-duplication remediation == removal); untouched docs pass
-    through with original whitespace. Shuffle keys are doc ids
-    throughout; untouched docs never pay the explode."""
+    through with original whitespace. The Spark side cuts without a
+    merge: one per-doc interval array, left-joined, one projection."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     spans = D.verbatim_overlap_spans(docs, k=4, hash_fn="md5")
     return D.cut_verbatim_spans(docs, spans, min_span_tokens=6)

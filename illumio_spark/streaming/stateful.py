@@ -39,7 +39,14 @@ def sessionize_stream(
     the watermark passes the session's last turn + `gap`, the
     session_window contract. ``watermark`` (how long to wait for late
     data) and ``gap`` (idle time that closes a session) are unrelated
-    quantities — each has its own default; tune them independently."""
+    quantities — each has its own default; tune them independently.
+
+    Bounded inputs: there is no end-of-input flush. On an availableNow
+    (or any finite) input, the watermark stops at the last event time
+    minus ``watermark``, so every session still open when the input ends
+    is never emitted — the sf0.1 `streaming` bench point reports 74,999
+    rows for 75,000 conversations. A backfill over a finite input
+    belongs to ``sessionize_batch``."""
     return (
         stream.withWatermark("ts", watermark)
         .groupBy(F.session_window(F.col("ts"), gap), F.col("conv_id"))

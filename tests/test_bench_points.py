@@ -19,6 +19,7 @@ OUTPUTS = {
     "dedup_scale": "dedup_scale.json",
     "assembly_scale": "assembly_scale.json",
     "compact_frontier": "compact_frontier.json",
+    "cc_regimes": "cc_regimes.json",
     "incremental_neardup": "incremental_neardup.json",
     "neardup_stream": "neardup_stream_point.json",
     "compact_embedding": "compact_embedding.json",

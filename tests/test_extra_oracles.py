@@ -317,6 +317,67 @@ def test_cut_verbatim_spans_remediation(spark):
     assert verbatim_overlap_pairs(cleaned, k=50).count() == 0
 
 
+def _cut_reference(rows, spans, min_span_tokens):
+    """Pure-Python cut_verbatim_spans: drop every token of an id_b doc whose
+    index any qualifying span covers, rebuild with single spaces, drop a
+    doc left with no tokens; untouched docs pass through unchanged."""
+    import re
+
+    cuts = {}
+    for id_b, pos_b, span_tokens in spans:
+        if span_tokens >= min_span_tokens:
+            cuts.setdefault(id_b, []).append((pos_b, pos_b + span_tokens))
+    out = {}
+    for doc_id, text, *rest in rows:
+        if doc_id not in cuts:
+            out[doc_id] = (text, *rest)
+            continue
+        kept = [
+            t for i, t in enumerate(re.split(r"\s+", text.strip(" ")))
+            if not any(s <= i < e for s, e in cuts[doc_id])
+        ]
+        if kept:
+            out[doc_id] = (" ".join(kept), *rest)
+    return out
+
+
+def test_cut_verbatim_spans_edge_cases_match_reference(spark):
+    """Hand-built spans against the pure-Python reference: overlapping and
+    adjacent intervals on one doc (cut without any merge step), a doc
+    whose every token is cut drops, a span below min_span_tokens is
+    ignored, an extra column passes through, and untouched docs keep
+    their original whitespace byte for byte."""
+    from illumio_spark.operators.dedup import cut_verbatim_spans
+
+    toks = " ".join(f"t{i}" for i in range(20))
+    rows = [
+        (1, "keep  this\ttext\n as  is ", "a"),  # untouched, odd whitespace
+        (2, toks, "b"),  # overlapping [2,8) + [5,11) and adjacent [11,14)
+        (3, "x0 x1 x2 x3 x4 x5", "c"),  # [0,3) + [3,6): every token cut
+        (4, toks, "d"),  # only a short span: untouched
+        (5, "  lead y0  y1   y2 y3 tail", None),  # [1,4) on a spaced doc
+    ]
+    spans = [
+        (2, 2, 6), (2, 5, 6), (2, 11, 3), (2, 5, 6),
+        (3, 0, 3), (3, 3, 3),
+        (4, 0, 2),
+        (5, 1, 3),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string, src string")
+    sdf = spark.createDataFrame(
+        [(0, i, 0, p, 1, n) for i, p, n in spans],
+        "id_a long, id_b long, pos_a long, pos_b long, n_windows long, span_tokens long",
+    )
+    out = cut_verbatim_spans(df, sdf, min_span_tokens=3)
+    assert out.columns == df.columns
+    got = {r.doc_id: (r.text, r.src) for r in out.collect()}
+    want = _cut_reference(rows, spans, 3)
+    assert got == want
+    assert got[1] == rows[0][1:] and got[4] == rows[3][1:] and 3 not in got
+    assert got[2][0] == "t0 t1 t14 t15 t16 t17 t18 t19"
+    assert got[5] == ("lead y3 tail", None)
+
+
 def test_text_pipeline_cut_spans_stage(spark, tmp_path):
     """--cut-spans K wires the ExactSubstr remediation into the curation
     CLI between near-dup drop and decontamination: the stage appears in

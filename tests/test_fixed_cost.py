@@ -23,6 +23,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # broadcast job and every read of a committed run inferred its schema
 # from the parquet footers in a job of its own.
 JOB_BUDGET = 6
+DEDUP_JOB_BUDGET = 28
 
 
 def _plan(df) -> str:
@@ -40,6 +41,55 @@ def test_run_pipeline_job_budget(spark, tmp_path):
     finally:
         sc.setJobGroup(None, None)
     assert 0 < len(jobs) <= JOB_BUDGET, f"{len(jobs)} jobs: {sorted(jobs)}"
+
+
+def _neardup_corpus(seed: int = 3):
+    """120 seeded random docs, 25 near-dups (one extra token) and 15 exact
+    dups; every fifth base doc also carries a shared 12-token block."""
+    import random
+
+    rng = random.Random(seed)
+    words = [f"w{i}" for i in range(300)]
+    block = " ".join(f"blk{i}" for i in range(12))
+    rows = []
+    for i in range(120):
+        text = " ".join(rng.choice(words) for _ in range(rng.randint(40, 80)))
+        rows.append((i, f"{text} {block}" if i % 5 == 0 else text))
+    rows += [(1_000_000 + i, rows[i][1] + " zq") for i in range(25)]
+    rows += [(1_000_000 + i, rows[i][1]) for i in range(25, 40)]
+    return rows
+
+
+def test_dedup_curation_job_budget(spark):
+    """Spark jobs of one warm near-dup keep + verbatim spans + span cut,
+    the shape of perfbench's dedup_curation operation at toy size, on
+    local[4]. It ran 43 jobs while neardup_components always ran a
+    distributed star-contraction round (with its convergence aggregate
+    and checkpoints) and cut_verbatim_spans merged intervals in a window,
+    split the corpus with two joins and exploded and regrouped tokens.
+    Finishing the small CC graph on the driver and cutting in one
+    projection leave 28 (the edge count that picks the CC regime runs
+    two jobs under AQE)."""
+    from illumio_spark.operators import dedup as D
+
+    sc = spark.sparkContext
+    df = spark.createDataFrame(_neardup_corpus(), "doc_id long, text string")
+
+    def op():
+        kept = D.neardup_keepers(df).count()
+        spans = D.verbatim_overlap_spans(df, k=4)
+        n_cut = D.cut_verbatim_spans(df, spans, min_span_tokens=6).count()
+        return kept, spans.count(), n_cut
+
+    op()
+    sc.setJobGroup("fixed-cost-dedup", "dedup curation job budget")
+    try:
+        kept, n_spans, n_cut = op()
+        jobs = sc.statusTracker().getJobIdsForGroup("fixed-cost-dedup")
+    finally:
+        sc.setJobGroup(None, None)
+    assert (kept, n_spans, n_cut) == (120, 528, 141)
+    assert 0 < len(jobs) <= DEDUP_JOB_BUDGET, f"{len(jobs)} jobs: {sorted(jobs)}"
 
 
 def test_small_frames_are_local_relations(spark):

@@ -4,7 +4,10 @@ Runs every queries() entry at sf0.01 on Spark AND its oracle_sql() on
 DuckDB over the same parquet, then compares row count + order-insensitive
 values under sorted column names — approximating CORRECTNESS_r{N}.json.
 
-Usage: python tools/selfcheck.py [--sf /root/testdata/sf0.01] [-k substr]
+Usage: python tools/selfcheck.py [--sf SF_DIR] [-k substr[,substr...]]
+
+-k keeps the queries whose name contains any of the comma-separated
+substrings, so one JVM checks a family: -k td_neardup,td_cut,td_compact
 """
 
 from __future__ import annotations
@@ -71,9 +74,13 @@ def compare(got: pd.DataFrame, want: pd.DataFrame) -> str | None:
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
-    ap.add_argument("-k", default="", help="substring filter on query name")
+    ap.add_argument(
+        "-k", default="",
+        help="comma-separated substrings; keep queries whose name contains any",
+    )
     ap.add_argument("--skip-pipeline", action="store_true")
     args = ap.parse_args()
+    keys = [k for k in args.k.split(",") if k]
 
     import __spark_entry__ as entry_mod
     from illumio_spark.session import build_session
@@ -92,7 +99,7 @@ def main():
     n_pass = n_fail = n_rowsonly = 0
     failures = []
     for name, fn in qs.items():
-        if args.k and args.k not in name:
+        if keys and not any(k in name for k in keys):
             continue
         if args.skip_pipeline and name.startswith("pipeline_"):
             continue
