@@ -12,7 +12,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, functions as F, types as T
 
-from illumio_spark.functions import parallelize_scan, repartition_by
 from pyspark.sql.functions import pandas_udf
 
 # ---------------------------------------------------------------------------
@@ -149,15 +148,10 @@ def simhash_blocks_df(
     the array — per-row HOFs cost ~24 µs/element on this box (the minhash
     shingle-build lesson); '' maps to null so zero-token docs survive the
     explode with null sums → all-zero blocks, same as the array version."""
-    # Hash(id)-partition the NARROW doc rows before the explode (r8, guide
-    # §2.3/§3.3): the token-level distinct and the per-doc groupBy are both
-    # keyed by id, so pre-clustering one row per doc replaces BOTH their
-    # exchanges (HashPartitioning(id) satisfies ClusteredDistribution for
-    # (id, tok) and (id) alike) — the whole signature now costs ONE shuffle
-    # of doc rows instead of two shuffles of exploded token rows, and the
-    # explode/md5 work parallelizes instead of running inside the scan
-    # task (single-row-group inputs scan as ONE task).
-    df = repartition_by(df, F.col(id_col))
+    # shuffle the narrow doc rows before the explode: hash(id) satisfies
+    # both the (id, tok) distinct and the per-doc groupBy, so the signature
+    # costs one shuffle of doc rows instead of two of token rows
+    df = df.repartition(F.col(id_col))
     # explode_outer keeps zero-token docs (null token → null sums → blocks 0)
     t = df.select(
         id_col,
@@ -304,11 +298,9 @@ def bigram_lm_scores(
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    # hash(id)-partition doc rows before the explode (r8): the bigram
-    # window is id-keyed, so this replaces its token-level exchange with a
-    # doc-level one and parallelizes the tokenize (single-row-group inputs
-    # otherwise explode inside a one-task scan stage)
-    df = repartition_by(df, F.col(id_col))
+    # shuffle the narrow doc rows before the explode: the bigram window is
+    # id-keyed, so this replaces its token-level exchange
+    df = df.repartition(F.col(id_col))
     toks = df.select(
         id_col,
         F.posexplode_outer(F.split(F.trim(F.col(text_col)), r"\s+")).alias("__pos", "__tok"),
@@ -403,11 +395,9 @@ def repetition_signals(
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    # hash(id)-partition doc rows once (r8): both explode branches and all
-    # their per-doc groupBys key on id, so they share ONE doc-level
-    # exchange (ReusedExchange) instead of shuffling exploded rows twice,
-    # and the explodes parallelize off the one-task scan
-    df = repartition_by(df, F.col(id_col))
+    # shuffle the narrow doc rows before the explodes: both branches' per-doc
+    # groupBys key on id and share this one exchange
+    df = df.repartition(F.col(id_col))
     lines = df.select(
         id_col, F.explode(F.split(F.col(text_col), "\n")).alias("__line")
     ).filter(F.trim("__line") != "")
@@ -468,11 +458,9 @@ def c4_quality_signals(
     all JVM expressions, no UDF."""
     from pyspark.sql import functions as F
 
-    # hash(id)-partition doc rows once (r8): the scalar regex projection,
-    # both explode branches, their per-doc groupBys, and the id-keyed
-    # joins below all share ONE doc-level exchange — and the regex/explode
-    # work parallelizes off the one-task scan of single-row-group inputs
-    df = repartition_by(df, F.col(id_col))
+    # shuffle the narrow doc rows before the explodes: both branches' per-doc
+    # groupBys and the id-keyed joins below share this one exchange
+    df = df.repartition(F.col(id_col))
     text = F.col(text_col)
     scalars = df.select(
         id_col,
@@ -538,10 +526,9 @@ def doc_url_stats(
     regexp_extract_all + explode, one per-doc groupBy (map-side combined)."""
     from pyspark.sql import functions as F
 
-    # hash(id)-partition doc rows before the regex extract + explode (r8):
-    # the per-doc groupBy then needs no further exchange and the regex
-    # parallelizes off the one-task scan
-    df = repartition_by(df, F.col(id_col))
+    # shuffle the narrow doc rows before the explode: the per-doc groupBy
+    # then needs no further exchange
+    df = df.repartition(F.col(id_col))
     urls = df.select(
         id_col,
         F.explode_outer(
@@ -565,10 +552,6 @@ def domain_counts(
     bigram-LM hot-token joins)."""
     from pyspark.sql import functions as F
 
-    # parallelize the regex extract off the one-task scan (r8); the domain
-    # groupBy shuffles by domain regardless, but its partial aggregation
-    # now runs on many tasks (conditional: a many-split scan passes through)
-    df = parallelize_scan(df, F.col(id_col))
     urls = df.select(
         id_col,
         F.explode(

@@ -50,16 +50,6 @@ def mixture_weights(
     tot = sum(targets.values()) or 1.0
     norm = [(k, float(v) / tot) for k, v in sorted(targets.items())]
     tgt = df.sparkSession.createDataFrame(norm, f"{source_col} string, target_frac double")
-    # conditional scan parallelization (r8): the tokenize inside the
-    # partial aggregate otherwise runs in the one-task scan of compacted
-    # single-row-group inputs; both sums are INTEGERS, so repartitioning
-    # cannot perturb the (order-independent) aggregates or the fractions
-    # derived from them. Keyed on (source, text) — source alone has too
-    # few distinct values to spread; the text component spreads evenly.
-    # A many-split scan passes through untouched.
-    from illumio_spark.functions import parallelize_scan
-
-    df = parallelize_scan(df, F.col(source_col), F.col(text_col))
     per = df.groupBy(source_col).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(TX.token_count(F.col(text_col)).cast("bigint")).alias("n_tokens"),

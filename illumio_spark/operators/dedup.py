@@ -22,7 +22,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.types import StructField, StructType
 
-from illumio_spark.functions import repartition_by
 
 N_MINHASH = 8
 N_BANDS = 4  # rows per band = N_MINHASH / N_BANDS
@@ -116,14 +115,9 @@ def exploded_shingles(
     with_pos=True additionally returns __pos, the 0-based token offset of
     the shingle's first token — the span-locating input of
     verbatim_overlap_spans."""
-    # Establish the window's hash(id) partitioning on the NARROW doc rows
-    # BEFORE the explode (guide §2.3/§3.3: explode multiplies the shuffle;
-    # shuffle first, explode after). This moves strictly fewer bytes at any
-    # scale — one row per doc instead of one per token — and parallelizes
-    # the tokenize/explode itself, which otherwise runs inside the scan
-    # stage (a single task on compacted single-row-group inputs). The
-    # window/groupBy downstream then needs NO further exchange.
-    df = repartition_by(df, F.col(id_col))
+    # shuffle the narrow doc rows before the explode: the id-keyed window
+    # and groupBy downstream then need no further exchange
+    df = df.repartition(F.col(id_col))
     toks = df.select(
         id_col,
         F.posexplode_outer(F.split(F.trim(F.col(text_col)), r"\s+")).alias("__pos", "__tok"),
@@ -242,7 +236,7 @@ def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     long = _band_stack(sigs, id_col)
     # materialize via an exchange: the self-join's two sides then share ONE
     # ReusedExchange instead of each recomputing the full signature tree
-    long = repartition_by(long, "band_key")
+    long = long.repartition("band_key")
     a = long.alias("a")
     b = long.alias("b")
     return (
@@ -309,9 +303,9 @@ def simhash_neardup_pairs(
     # materialize the signature table ONCE: the group aggregate, the member
     # re-attach, and the banded self-join all read it — uncheckpointed,
     # each consumer re-executes the whole explode/bit-sum pipeline
-    sigs = repartition_by(
-        simhash_blocks_df(df, id_col, text_col, hash_fn=hash_fn), id_col
-    ).localCheckpoint(eager=True)
+    sigs = simhash_blocks_df(df, id_col, text_col, hash_fn=hash_fn).localCheckpoint(
+        eager=True
+    )
     blocks = ["b0", "b1", "b2", "b3"]
     groups = sigs.groupBy(*blocks).agg(
         F.min(id_col).alias("__rep"), F.count(F.lit(1)).alias("__n")
@@ -326,7 +320,7 @@ def simhash_neardup_pairs(
         "__rep", "b0", "b1", "b2", "b3",
         "stack(4, 0, b0, 1, b1, 2, b2, 3, b3) as (block_idx, block_val)",
     )
-    long = repartition_by(long, "block_idx", "block_val")
+    long = long.repartition("block_idx", "block_val")
     a, b = long.alias("a"), long.alias("b")
     hamming = functools.reduce(
         operator.add,
@@ -618,7 +612,7 @@ def _band_star_edges(bands: DataFrame, id_col: str) -> DataFrame:
     keeper selection, frontier compaction), NOT as the user-facing
     candidate-pair list (minhash_lsh_pairs stays pairwise by design).
     Input must be pre-distinct on (id, band_idx, band_key)."""
-    b = repartition_by(bands, "band_idx", "band_key")
+    b = bands.repartition("band_idx", "band_key")
     bucket_min = b.groupBy("band_idx", "band_key").agg(
         F.min(id_col).alias("__bmin")
     )

@@ -11,7 +11,6 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
 
-from illumio_spark.functions import parallelize_scan, repartition_by
 
 LSH_SEED = 42
 
@@ -120,10 +119,6 @@ def brute_force_topk(
     scanned once — at 100 TB this is one map-side pass per query batch,
     then a top-k per query (window over a small shuffled slice)."""
     e = emb.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("v"))
-    # parallelize the broadcast-nested-loop scoring off the one-task scan
-    # (r8): without an exchange the q×n cosine grid runs inside the scan
-    # stage on a single core for single-row-group inputs
-    e = parallelize_scan(e, F.col(id_col))
     qn = queries.select(F.col(qid_col), F.col(qvec_col).cast("array<double>").alias("qv"))
     scored = (
         e.join(F.broadcast(qn), F.col(id_col) != F.col(qid_col))
@@ -191,14 +186,7 @@ def lsh_buckets_pandas_multi(vec, n_planes: int, dim: int, seeds: list[int]) -> 
 
 def _bucketed_long(df: DataFrame, id_alias: str, vec_alias: str,
                    n_planes: int, dim: int, n_tables: int) -> DataFrame:
-    """(id, vec) → exploded (id, vec, table_idx, bucket) over L hash tables.
-
-    Repartitions the (id, vec) rows first (r8): bucket assignment — the
-    plane matmul or the literal fold — otherwise runs inside the scan
-    stage, which is ONE task on compacted single-row-group inputs; a
-    narrow pre-explode shuffle parallelizes it and moves one row per
-    vector instead of one per (vector, table)."""
-    df = parallelize_scan(df, F.col(id_alias))
+    """(id, vec) → exploded (id, vec, table_idx, bucket) over L hash tables."""
     v = F.col(vec_alias)
     if n_tables * n_planes * dim > LSH_LITERAL_BUDGET:
         buckets = lsh_buckets_pandas_multi(
@@ -792,10 +780,6 @@ def ivf_topk(
     if centroids is None:
         centroids = ivf_train_centroids(emb, vec_col, n_centroids, order_col=id_col)
     ev = emb.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("v"))
-    # parallelize the cell-assignment matmul and the re-attach join off the
-    # one-task scan (r8): both consumers of ev share this one narrow
-    # exchange (ReusedExchange) instead of re-scanning serially
-    ev = parallelize_scan(ev, F.col(id_col))
     qv = queries.select(F.col(qid_col), F.col(qvec_col).cast("array<double>").alias("qv"))
     e = ev.select(
         id_col, F.get(_ivf_cells_pandas(F.col("v"), centroids, 1), 0).alias("cell")
@@ -841,11 +825,10 @@ def hashing_embed(
     DOC (not per token), negligible at any corpus size. Docs with zero
     tokens embed as the zero vector (cosine against it is NULL — callers
     treat that as 'no signal', same as a dead letter)."""
-    # hash(id)-partition doc rows before the explode (r8): both downstream
-    # groupBys key on id (or id+bucket), so this one narrow exchange
-    # replaces both token-level exchanges and parallelizes the tokenize
-    # off the one-task scan of single-row-group inputs
-    df = repartition_by(df, F.col(id_col))
+    # shuffle the narrow doc rows before the explode: both downstream
+    # groupBys key on id (or id+bucket), so this one exchange replaces both
+    # token-level exchanges
+    df = df.repartition(F.col(id_col))
     toks = df.select(
         F.col(id_col),
         F.explode_outer(

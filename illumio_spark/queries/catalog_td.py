@@ -12,7 +12,6 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from illumio_spark.operators import dedup as D
 from illumio_spark.operators import similarity as SIM
-from illumio_spark.functions import parallelize_scan
 from illumio_spark.functions import text as TX
 from illumio_spark.queries.catalog import QUERIES, load, q
 
@@ -732,9 +731,7 @@ TOKEN_COUNT_SQL = """
 
 
 def td_token_count(spark, sf_dir):
-    # map-only row: repartition so the regex/split work leaves the
-    # one-task scan stage (r8, same rationale as td_pii_scrub)
-    d = parallelize_scan(load(spark, sf_dir, "documents"), F.col("doc_id"))
+    d = load(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
         TX.token_count(F.col("text")).alias("n_tokens"),
@@ -1112,11 +1109,7 @@ def td_pii_scrub(spark, sf_dir):
     redacted), and the redacted text itself is equality-gated via md5 —
     the oracle re-runs the identical replace chain in DuckDB (the patterns
     are written to parse identically under Java regex and RE2)."""
-    # repartition before the regex chain (r8): this row is map-only, so
-    # without an exchange the whole 8-regex pass runs inside the scan
-    # stage — ONE task on single-row-group inputs (measured 4.8 s serial
-    # at sf1.0). One narrow doc-level shuffle buys full-core parallelism.
-    d = parallelize_scan(load(spark, sf_dir, "documents"), F.col("doc_id"))
+    d = load(spark, sf_dir, "documents")
     cols = TX.pii_counts(F.col("text"))
     return d.select(
         "doc_id",

@@ -1,8 +1,13 @@
 """SparkSession factory with scale-oriented defaults.
 
 Confs chosen for the 100 TB design point (SURVEY.md §4):
-  - AQE on (coalesce partitions, skew-join splitting) — replaces the
-    reference's dead adaptive-rate code (app/log_processor.py:517-540).
+  - One partitioning rule, set here and nowhere else: every shuffle
+    (groupBy, join, window, column repartition) starts at
+    spark.sql.shuffle.partitions, and AQE coalesces small partitions and
+    splits skewed joins at run time. Operators name shuffle keys, never
+    partition counts; only sink layouts that set a file count
+    (ordered_for_sink, shard writes) pass one. This replaces the reference's dead adaptive-rate code
+    (app/log_processor.py:517-540).
   - Arrow execution for pandas UDFs (the mandated vectorized path).
   - UTC session timezone so timestamp semantics match the oracle/DuckDB.
   - Iceberg extensions are attached only when the runtime jar is present
@@ -11,22 +16,16 @@ Confs chosen for the 100 TB design point (SURVEY.md §4):
 
 from __future__ import annotations
 
+import glob
 import os
 
+import pyspark
 from pyspark.sql import SparkSession
 
 
 def iceberg_available() -> bool:
-    try:
-        import importlib.util  # noqa: F401
-        from pyspark.sql import SparkSession as _S  # noqa: F401
-        import glob
-        import pyspark
-
-        jars = glob.glob(os.path.join(os.path.dirname(pyspark.__file__), "jars", "*iceberg*"))
-        return bool(jars)
-    except Exception:
-        return False
+    jars = os.path.join(os.path.dirname(pyspark.__file__), "jars", "*iceberg*")
+    return bool(glob.glob(jars))
 
 
 def _default_driver_memory() -> str:

@@ -24,19 +24,23 @@ from illumio_spark.session import iceberg_available
 
 
 def read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
-    """spark.read.parquet(path), or None iff the path does not exist —
-    the frontier-read idiom shared by every cross-run/streaming dedup
-    state table. ONLY path-not-found means "first run"; any other
-    analysis failure (corrupt footer, permissions, schema problems)
-    re-raises — swallowing it would silently disable cross-run dedup
-    and re-keep previously-seen content (r6 ADVICE)."""
+    """spark.read.parquet(path), or None iff the path holds no committed
+    file — the frontier-read idiom shared by every cross-run/streaming
+    dedup state table. "First run" is either a missing path or one whose
+    only contents are hidden (a first write that died before its commit
+    leaves just `_temporary/`, and Spark cannot infer a schema from
+    nothing). Any other failure (corrupt footer, permissions, schema
+    problems) re-raises — swallowing it would silently disable cross-run
+    dedup and re-keep previously-seen content (r6 ADVICE)."""
     from pyspark.errors import AnalysisException
 
     try:
         return spark.read.parquet(path)
     except AnalysisException as e:
         cls = (e.getCondition() or "") if hasattr(e, "getCondition") else ""
-        if "PATH_NOT_FOUND" not in cls and "Path does not exist" not in str(e):
+        if cls not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA") and (
+            "Path does not exist" not in str(e)
+        ):
             raise
         return None
 

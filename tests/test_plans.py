@@ -1,7 +1,9 @@
 """Physical-plan quality gates (SURVEY.md §4): the optimizations the
 reference hand-codes must appear in Catalyst's plan for free —
 predicate pushdown to the parquet scan, column pruning, broadcast joins
-for enrich, and no extra exchange after the pipeline's narrow shuffle."""
+for enrich, no extra exchange after the pipeline's narrow shuffle, and
+one partitioning rule (column repartitions sized by the session's
+shuffle partitions and AQE, no RDD or private-plan probes)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -448,3 +450,41 @@ def test_chunk_shard_topfrac_plans(spark):
         if "Exchange" in l and "BroadcastExchange" not in l
     ]
     assert len(shuffles) == 2, shuffles
+
+
+def test_signature_builders_shuffle_once_by_id_key(spark):
+    # each signature builder shuffles its narrow doc rows once, by id, as
+    # a column repartition AQE may coalesce (never a pinned partition
+    # count), and every id-keyed window/groupBy after it reuses that
+    # partitioning
+    from illumio_spark.functions.text import simhash_blocks_df
+    from illumio_spark.operators.dedup import minhash_signatures_df
+    from illumio_spark.operators.similarity import hashing_embed
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
+    for build in (minhash_signatures_df, simhash_blocks_df, hashing_embed):
+        shuffles = [
+            l for l in _plan(build(docs)).splitlines()
+            if "Exchange" in l and "BroadcastExchange" not in l
+        ]
+        assert len(shuffles) == 1, (build.__name__, shuffles)
+        assert "hashpartitioning(doc_id#" in shuffles[0], (build.__name__, shuffles)
+        assert "REPARTITION_BY_COL" in shuffles[0], (build.__name__, shuffles)
+
+
+def test_package_stays_on_the_dataframe_api():
+    # partition counts come from spark.sql.shuffle.partitions and AQE, not
+    # from probing private plan objects or RDD partitions
+    import pathlib
+    import re
+
+    repo = pathlib.Path(__file__).resolve().parents[1]
+    banned = re.compile(r"\.rdd\b|_jdf")
+    hits = [
+        f"{path.relative_to(repo)}:{n}"
+        for top in ("illumio_spark", "jobs")
+        for path in sorted((repo / top).rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if banned.search(line)
+    ]
+    assert hits == []

@@ -8,10 +8,7 @@ pin the internal contracts the optimizations rely on:
     all-pairs hamming computation on a duplicate-heavy corpus;
   - py_strip edge probe: byte-equality with str.strip() on edge cases that
     exercise the probe (whitespace edges, interior-only whitespace,
-    unicode whitespace, empty/null);
-  - parallelize_scan: repartitions an under-parallel narrow scan, passes a
-    shuffle- or broadcast-bearing lineage through without launching eager
-    jobs.
+    unicode whitespace, empty/null).
 """
 
 from __future__ import annotations
@@ -116,35 +113,6 @@ def test_py_strip_edge_probe_byte_equality(spark):
     got = [r.out for r in df.select(py_strip(F.col("s")).alias("out")).collect()]
     want = [c.strip() if isinstance(c, str) else None for c in cases]
     assert got == want
-
-
-def test_parallelize_scan_narrow_vs_shuffled(spark, tmp_path):
-    from illumio_spark.functions import parallelize_scan
-
-    p = str(tmp_path / "one_file.parquet")
-    spark.range(1000).selectExpr("id", "id * 2 as v").coalesce(1).write.parquet(p)
-    narrow = spark.read.parquet(p)
-    out = parallelize_scan(narrow, F.col("id"))
-    assert "repartitionbyexpression" in out._jdf.queryExecution().analyzed().toString().lower()
-
-    # shuffle-bearing lineage: passes through unchanged AND the probe
-    # launches no eager jobs (df.rdd on an AQE plan would execute stages)
-    sc = spark.sparkContext
-    shuffled = narrow.groupBy((F.col("id") % 10).alias("k")).count()
-    # a broadcast join over the one-file scan: its only exchange is a
-    # BroadcastExchange, which df.rdd would also execute eagerly
-    small = spark.createDataFrame([(i, f"n{i}") for i in range(10)], "id long, name string")
-    broadcast = narrow.join(F.broadcast(small), "id")
-    assert "BroadcastExchange" in broadcast._jdf.queryExecution().executedPlan().toString()
-    for group, lineage in (("ps-probe", shuffled), ("ps-probe-bc", broadcast)):
-        sc.setJobGroup(group, "parallelize_scan probe")
-        try:
-            out2 = parallelize_scan(lineage, F.col(lineage.columns[0]))
-            jobs = sc.statusTracker().getJobIdsForGroup(group)
-        finally:
-            sc.setJobGroup(None, None)
-        assert list(jobs) == [], group
-        assert out2 is lineage
 
 
 def test_neardup_stream_replay_poisoning_fixed(spark, tmp_path):

@@ -191,3 +191,52 @@ def test_sessionize_stream_matches_batch_for_closed_sessions(spark, pdf):
     assert len(want) == 50
     cols = ["conv_id", "n_turns", "n_chars", "first_ts", "last_ts"]
     pd.testing.assert_frame_equal(got[cols], want[cols], check_dtype=False)
+
+
+_FRONTIER_DOCS = [
+    (1, "alpha beta gamma delta epsilon zeta"),
+    (2, "alpha beta gamma delta epsilon zeta"),
+    (3, "completely different text content here now"),
+]
+
+
+def test_neardup_stream_first_batch_replays_over_uncommitted_frontier(spark, tmp_path):
+    """A first micro-batch that died inside its frontier write leaves only
+    the committer's batch=0/_temporary/ tree. No row was committed, so the
+    replay must run as a clean first batch, not fail schema inference."""
+    from illumio_spark.streaming.stateful import _neardup_stream_batch
+
+    docs = spark.createDataFrame(_FRONTIER_DOCS, "doc_id long, text string")
+    clean_out = str(tmp_path / "clean_out")
+    _neardup_stream_batch(docs, 0, str(tmp_path / "clean_frontier"), clean_out)
+
+    frontier = tmp_path / "frontier"
+    attempt = frontier / "batch=0" / "_temporary" / "0" / "_temporary" / "attempt_0"
+    docs.write.parquet(str(tmp_path / "staged"))
+    attempt.mkdir(parents=True)
+    for f in (tmp_path / "staged").glob("part-*.parquet"):
+        f.rename(attempt / f.name)
+    out = str(tmp_path / "out")
+    _neardup_stream_batch(docs, 0, str(frontier), out)
+
+    def ids(path):
+        return sorted(r.doc_id for r in spark.read.parquet(path).collect())
+
+    assert ids(f"{out}/batch=0") == ids(f"{clean_out}/batch=0") == [1, 3]
+    assert ids(str(frontier)) == ids(str(tmp_path / "clean_frontier"))
+
+
+def test_neardup_stream_corrupt_frontier_file_still_raises(spark, tmp_path):
+    """Only a commit-less frontier reads as empty: a committed part file
+    that is not parquet must fail the batch instead of silently dropping
+    the cross-batch dedup state."""
+    from py4j.protocol import Py4JJavaError
+
+    from illumio_spark.streaming.stateful import _neardup_stream_batch
+
+    committed = tmp_path / "frontier" / "batch=0"
+    committed.mkdir(parents=True)
+    (committed / "part-00000.parquet").write_bytes(b"not a parquet file")
+    docs = spark.createDataFrame(_FRONTIER_DOCS, "doc_id long, text string")
+    with pytest.raises(Py4JJavaError, match="parquet"):
+        _neardup_stream_batch(docs, 1, str(tmp_path / "frontier"), str(tmp_path / "out"))
