@@ -722,11 +722,7 @@ def _ann_level(spark) -> dict:
     ivf = dict(k=10, n_centroids=64, n_probe=8)
     runs = {
         "lsh_topk_768": SIM.lsh_topk(emb, qs, **lsh),
-        # numpy batch re-rank instead of the interpreted aggregate
-        # expression walking 768 elements per candidate row
-        "lsh_topk_768_pandas": SIM.lsh_topk(emb, qs, **lsh, score="pandas"),
         "ivf_topk_768": SIM.ivf_topk(emb, qs, **ivf),
-        "ivf_topk_768_pandas": SIM.ivf_topk(emb, qs, **ivf, score="pandas"),
         "brute_force_768": SIM.brute_force_topk(emb, qs, k=10),
     }
     out: dict = {"cpus": spark.sparkContext.defaultParallelism, "n": ANN_N, "dim": ANN_DIM}

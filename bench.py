@@ -133,9 +133,6 @@ def bench_overrides() -> dict:
         # r7: embedding near-dup with the matmul verify (registry row keeps
         # verify='expr' so DuckDB reproduces the float summation order)
         "td_embedding_neardup": _embedding_neardup_fast,
-        # r7: IVF re-rank with the Arrow-batched numpy cosine (registry row
-        # keeps the expression score for oracle parity)
-        "td_ann_ivf_topk": _ivf_topk_fast,
     }
 
 
@@ -143,20 +140,6 @@ def _hash_embed_pairs_probe(spark, sf_dir):
     from illumio_spark.queries.catalog_td import td_hash_embed_pairs
 
     return td_hash_embed_pairs(spark, sf_dir)
-
-
-def _ivf_topk_fast(spark, sf_dir):
-    from illumio_spark.operators import similarity as SIM
-    from illumio_spark.queries.catalog_td import (
-        _ivf_centroids_int,
-        _ivf_int_corpus,
-    )
-
-    vecs, qs = _ivf_int_corpus(spark, sf_dir)
-    return SIM.ivf_topk(
-        vecs, qs, k=10, n_probe=3, centroids=_ivf_centroids_int(),
-        score="pandas",
-    )
 
 
 def _embedding_neardup_fast(spark, sf_dir):

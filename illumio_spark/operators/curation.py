@@ -332,7 +332,6 @@ def select_top_frac(
     stratum_col: str = "source",
     id_col: str = "doc_id",
     descending: bool = True,
-    approx_prefilter: bool = False,
 ) -> DataFrame:
     """Quantile-threshold quality selection: keep the top `frac` of each
     stratum's docs by score (the FineWeb/DCLM move — classifier or
@@ -341,83 +340,18 @@ def select_top_frac(
     the rest). Exact-count contract: rank by (score desc, id asc) — the
     id tiebreaker makes the order total and the selection deterministic
     — and keep rank <= ceil(frac * n_stratum), so every non-empty
-    stratum keeps >= 1 doc. Returns (stratum, id, score, rank,
-    n_stratum).
+    stratum keeps >= 1 doc; `frac` outside (0, 1] raises ValueError.
+    Returns (stratum, id, score, rank, n_stratum).
 
     Scale: ONE shuffle on the stratum key feeding both window functions
     (rank and stratum size share the partitioning); no global sort, no
-    driver-side threshold computation. At 100 TB with huge strata the
-    per-stratum window SORT dominates — pass approx_prefilter=True to
-    cut the sort input first: a per-stratum aggregate computes the
-    exact count and an approx_percentile score threshold at 2x the
-    target fraction, rows beyond the threshold are dropped before the
-    window, and the exact rank runs over the ~2*frac survivors. Ranks
-    among survivors equal global ranks (every row that could make the
-    cut survives the prefilter), so the output is IDENTICAL to the
-    plain mode — pytest-asserted. Superset guarantee: the percentile's
-    rank error is <= n/accuracy (Greenwald-Khanna bound); accuracy is
-    chosen as max(10000, 10/frac) so the error is <= frac*n/10, far
-    inside the frac*n margin between the 2*frac threshold and the
-    frac*n cutoff. Requires frac in (0, 0.5) to leave that margin —
-    falls back to the plain path (with a logged warning, since the
-    caller's knob silently did nothing) otherwise.
-
-    NULL-majority guard (r6 ADVICE): keep = ceil(frac * n_stratum)
-    counts NULL-score rows, but the threshold only guarantees
-    ~2*frac*n_nonnull NON-null survivors — when NULLs outnumber scores,
-    keep can exceed that floor and the prefilter would drop scored rows
-    the plain path ranks inside the cut. A stratum where
-    keep > floor(1.9 * frac * n_nonnull) (the guaranteed survivor count
-    after the GK error margin) therefore bypasses the prefilter
-    entirely — every one of its rows survives to the exact rank,
-    identical to the plain path.
+    driver-side threshold computation.
     """
+    if not 0.0 < frac <= 1.0:
+        raise ValueError(f"select_top_frac: frac must be in (0, 1], got {frac!r}")
     order = F.desc(score_col) if descending else F.asc(score_col)
     w_rank = Window.partitionBy(stratum_col).orderBy(order, F.asc(id_col))
     d = df.select(stratum_col, id_col, score_col)
-    if approx_prefilter and not 0.0 < frac < 0.5:
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "select_top_frac: approx_prefilter requires frac in (0, 0.5) "
-            "(got %s) — using the plain exact-rank path", frac,
-        )
-    if approx_prefilter and 0.0 < frac < 0.5:
-        accuracy = max(10000, int(10.0 / frac))
-        # score threshold at twice the kept fraction: for descending
-        # keep scores >= the (1 - 2*frac) quantile, ascending mirrored
-        q = 2.0 * frac
-        per = d.groupBy(stratum_col).agg(
-            F.count(F.lit(1)).alias("n_stratum"),
-            F.count(F.col(score_col)).alias("__n_nonnull"),
-            F.expr(
-                f"approx_percentile({score_col}, {1.0 - q if descending else q}, {accuracy})"
-            ).alias("__thr"),
-        )
-        # NULL scores sort last under either direction but would be
-        # dropped by the threshold comparison — keep them as survivors
-        # so the exact rank decides, exactly like the plain path
-        cmp = (
-            F.col(score_col) >= F.col("__thr")
-            if descending
-            else F.col(score_col) <= F.col("__thr")
-        )
-        keep = F.ceil(F.lit(float(frac)) * F.col("n_stratum")).cast("bigint")
-        # NULL-majority bypass: guaranteed non-null survivors number at
-        # least floor(1.9*frac*n_nonnull); if keep could exceed that,
-        # filtering anything would change the result — keep the whole
-        # stratum and let the exact rank do all the work
-        unsafe = keep > F.floor(F.lit(1.9 * float(frac)) * F.col("__n_nonnull"))
-        cond = (
-            cmp | F.col(score_col).isNull() | F.col("__thr").isNull() | unsafe
-        )
-        return (
-            d.join(F.broadcast(per), stratum_col)
-            .filter(cond)
-            .withColumn("rank", F.row_number().over(w_rank).cast("bigint"))
-            .filter(F.col("rank") <= keep)
-            .select(stratum_col, id_col, score_col, "rank", "n_stratum")
-        )
     w_all = Window.partitionBy(stratum_col)
     keep = F.ceil(F.lit(float(frac)) * F.col("n_stratum")).cast("bigint")
     return (

@@ -25,83 +25,10 @@ def l2_norm(vec) -> "F.Column":
     return F.sqrt(F.aggregate(vec, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
-def _score_fn(score: str):
-    """expr|pandas mode select — unknown strings RAISE instead of
-    silently running the expression path (a typo'd engine-mode knob must
-    not masquerade as a measurement of the fast path)."""
-    if score == "pandas":
-        return cosine_pandas
-    if score == "expr":
-        return cosine
-    raise ValueError(f"unknown score mode {score!r}: use 'expr' or 'pandas'")
-
-
 def cosine(a, b):
     # try_divide: a zero-norm vector yields NULL similarity instead of a
     # DIVIDE_BY_ZERO abort under Spark 4's default ANSI mode
     return F.try_divide(_dot(a, b), l2_norm(a) * l2_norm(b))
-
-
-# no signature type hints: pandas_udf's hint inference cannot resolve
-# string annotations under `from __future__ import annotations`
-def _cosine_batch(va, vb):
-    """cosine_pandas's Arrow batch: row-wise cosine of two vector Series.
-
-    NULL / ragged guard (r8, ADVICE r7): the expression cosine yields NULL
-    for a NULL vector and for mismatched lengths (zip_with); the numpy
-    conversion would instead raise inside the UDF. Any value that is not
-    a vector (None, a float NaN) takes the NULL path, as does a length
-    mismatch. Score only the valid rows, NULL the rest."""
-    import pandas as pd
-
-    def length(x):
-        return len(x) if isinstance(x, (list, tuple, np.ndarray)) else -1
-
-    la = va.map(length).to_numpy()
-    lb = vb.map(length).to_numpy()
-    valid = (la >= 0) & (la == lb)
-    result = pd.Series([None] * len(va), dtype="object")
-    if valid.any():
-        for L, idx in pd.Series(range(len(va)))[valid].groupby(la[valid]):
-            rows = idx.to_numpy()
-            A = np.array(va.iloc[rows].tolist(), dtype=np.float64)
-            B = np.array(vb.iloc[rows].tolist(), dtype=np.float64)
-            num = (A * B).sum(axis=1)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                out = num / (np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1))
-            # non-finite → NULL, not NaN: Spark sorts NaN FIRST under
-            # desc() (measured: [NaN, 0.5, NULL]), so a NaN cosine
-            # would rank a zero-norm vector as every query's top
-            # neighbor while try_divide's NULL correctly sorts last
-            vals = pd.Series(out, dtype="object").where(np.isfinite(out), None)
-            result.iloc[rows] = vals.to_numpy()
-    return result
-
-
-def cosine_pandas(a, b) -> "F.Column":
-    """Arrow-batched row-wise cosine — the engine-default alternative to
-    the `cosine` expression when a column of already-materialized
-    (vector, vector) rows must be scored: F.aggregate/zip_with execute
-    INTERPRETED per element, one numpy batch does the same math in C.
-    Float64 like the expression form, but numpy's summation order
-    differs from the left-fold, so oracle-parity paths (DuckDB
-    list_cosine_similarity reproduces the fold) keep `cosine`.
-    Zero-norm vectors yield NULL (non-finite outputs are mapped to None
-    in-UDF), exactly matching try_divide's NULL — NOT NaN, which Spark
-    would sort FIRST under desc() and crown a zero vector every
-    query's nearest neighbor.
-
-    Regime (measured, BENCH/NOTES.md r7): decisive when the scored row
-    volume is large (the per-bucket matmul cousin at 200 k vectors:
-    54×), a wash-to-modest-win at small volumes (sf0.1 IVF row:
-    ~1.1-1.2×), and a LOSS where one extra Python-worker stage meets
-    few rows at high dim (768-dim ANN bench, ~50 k candidates: IVF
-    2.9 s expr vs 4.1 s pandas). Both modes stay available for exactly
-    this reason."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
-    return pandas_udf(_cosine_batch, T.DoubleType())(a, b)
 
 
 def brute_force_topk(
@@ -213,13 +140,8 @@ def lsh_topk(
     dim: int = 64,
     n_tables: int = 3,
     broadcast_vectors: bool = False,
-    score: str = "expr",
 ) -> DataFrame:
     """Approximate top-k via multi-table random-hyperplane LSH.
-    score='expr'|'pandas' — same re-rank dual-path as ivf_topk: the
-    expression form is what the pytest oracle reproduces, the
-    Arrow-batched numpy form is the engine default at real dims (at
-    dim 768 the interpreted aggregate walks 768 elements per row).
 
     OR-construction over L independent hash tables fixes the single-probe
     boundary miss (a vector near a hyperplane flips sign under tiny
@@ -262,8 +184,7 @@ def lsh_topk(
     )
     evr = F.broadcast(ev) if broadcast_vectors else ev
     candidates = cand_ids.join(evr, id_col).join(F.broadcast(qv), qid_col)
-    score_fn = _score_fn(score)
-    scored = candidates.withColumn("cos", score_fn(F.col("v"), F.col("qv")))
+    scored = candidates.withColumn("cos", cosine(F.col("v"), F.col("qv")))
     w = Window.partitionBy(qid_col).orderBy(F.col("cos").desc(), F.col(id_col))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -499,15 +420,13 @@ def bucket_verified_pairs(
     (zip_with) and never passes the threshold, so grouping by length
     reproduces exactly the 'expr' semantics instead of raising
     ValueError inside the UDF."""
-    from collections.abc import Iterator  # noqa: F401
-
     import pandas as pd
 
     id_dt = dict(bucketed.dtypes)[id_col]
     if id_dt not in ("bigint", "int", "smallint", "tinyint"):
         raise TypeError(
             f"bucket_verified_pairs needs an integral id column, got "
-            f"{id_col}: {id_dt}; use verify/score='expr' paths for "
+            f"{id_col}: {id_dt}; use lsh_neardup_pairs(verify='expr') for "
             f"non-integral ids"
         )
     empty = {"id_a": pd.Series(dtype="int64"), "id_b": pd.Series(dtype="int64")}
@@ -758,18 +677,13 @@ def ivf_topk(
     n_centroids: int = 64,
     n_probe: int = 4,
     centroids: np.ndarray | None = None,
-    score: str = "expr",
 ) -> DataFrame:
     """Approximate top-k via IVF (inverted file): corpus vectors live in
     their single nearest-centroid cell, queries probe their n_probe
     nearest cells, candidates come from the (cell) equi-join, and exact
-    cosine re-ranks — the faiss IVF-Flat shape as a DataFrame plan.
-    score='expr' (default) re-ranks with the JVM cosine expression the
-    DuckDB oracle reproduces; score='pandas' scores the same candidate
-    rows with the Arrow-batched numpy cosine (cosine_pandas) — the
-    engine default bench.py measures (rank ties cannot flip between the
-    modes unless two candidates tie at float precision AT the same
-    cosine, where the id tiebreak already decides).
+    cosine re-ranks — the faiss IVF-Flat shape as a DataFrame plan. The
+    re-rank is the JVM cosine expression, whose left-fold summation
+    order DuckDB's list_cosine_similarity reproduces.
 
     100 TB scale shape: centroid training touches a bounded sample; cell
     assignment is a map-only matmul pass; the candidate join shuffles on
@@ -794,8 +708,7 @@ def ivf_topk(
         .dropDuplicates([qid_col, id_col])
     )
     candidates = cand_ids.join(ev, id_col).join(F.broadcast(qv), qid_col)
-    score_fn = _score_fn(score)
-    scored = candidates.withColumn("cos", score_fn(F.col("v"), F.col("qv")))
+    scored = candidates.withColumn("cos", cosine(F.col("v"), F.col("qv")))
     w = Window.partitionBy(qid_col).orderBy(F.col("cos").desc(), F.col(id_col))
     return (
         scored.withColumn("rank", F.row_number().over(w))

@@ -517,30 +517,6 @@ def td_decontaminate(spark, sf_dir):
     return D.decontaminate(train, ev, k=13).select("doc_id").orderBy("doc_id")
 
 
-def _ivf_int_corpus(spark, sf_dir):
-    """The deterministic integer-valued clustered corpus td_ann_ivf_topk
-    runs on (8 block clusters over dim=16, closed form from event_id) —
-    shared by the driver row, its bench.py engine-mode override, and the
-    scorer-parity pytest so a calibration tweak cannot desynchronize
-    them."""
-    ids = load(spark, sf_dir, "events").filter(F.col("event_id") < 200).select(
-        F.col("event_id").alias("vec_id")
-    )
-    j = F.sequence(F.lit(0), F.lit(15))
-    vec = F.transform(
-        j,
-        lambda jj: (
-            (F.col("vec_id") * 7 + jj * 13) % 9 - 4
-            + F.when((jj / 2).cast("int") == F.col("vec_id") % 8, 6).otherwise(0)
-        ).cast("double"),
-    )
-    vecs = ids.select("vec_id", vec.alias("embedding"))
-    qs = vecs.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    return vecs, qs
-
-
 def _ivf_centroids_int(dim: int = 16, n_clusters: int = 8, n_decoys: int = 4):
     """Fixed integer codebook: one centroid per 2-dim block cluster plus
     low-energy decoys. Integer components keep every dot product EXACT in
@@ -617,10 +593,23 @@ def td_ann_ivf_topk(spark, sf_dir):
     full assignment → cell equi-join → n_probe → exact-cosine-rank
     machinery. Integer components make every dot/norm exact in doubles,
     so both engines rank identically with no FP tolerance needed."""
-    cents = _ivf_centroids_int()
-    vecs, qs = _ivf_int_corpus(spark, sf_dir)
+    ids = load(spark, sf_dir, "events").filter(F.col("event_id") < 200).select(
+        F.col("event_id").alias("vec_id")
+    )
+    j = F.sequence(F.lit(0), F.lit(15))
+    vec = F.transform(
+        j,
+        lambda jj: (
+            (F.col("vec_id") * 7 + jj * 13) % 9 - 4
+            + F.when((jj / 2).cast("int") == F.col("vec_id") % 8, 6).otherwise(0)
+        ).cast("double"),
+    )
+    vecs = ids.select("vec_id", vec.alias("embedding"))
+    qs = vecs.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
+    )
     return SIM.ivf_topk(
-        vecs, qs, k=10, n_probe=3, centroids=cents
+        vecs, qs, k=10, n_probe=3, centroids=_ivf_centroids_int()
     ).orderBy("qid", "rank")
 
 

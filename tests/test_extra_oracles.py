@@ -852,6 +852,28 @@ def test_cli_top_frac_stage(spark, tmp_path):
     assert got == want
 
 
+def test_cli_top_frac_rejects_negative_frac(spark, tmp_path):
+    """--top-frac -0.5 is truthy, so the stage runs; it must fail rather
+    than write an empty corpus."""
+    import argparse
+    import os
+
+    import pytest
+
+    from jobs.run_text_pipeline import run
+
+    out = tmp_path / "o"
+    args = argparse.Namespace(
+        input=f"{SF}/documents.parquet", output=str(out), seen=None,
+        eval=None, ngram=13, near_dups=False, quality="off",
+        min_sentences=0, min_alpha_frac=0.8, cut_spans=0, top_frac=-0.5,
+        mix_targets=None, pack_len=0, token_budget=0,
+    )
+    with pytest.raises(ValueError, match="frac"):
+        run(spark, args)
+    assert not os.path.exists(out)
+
+
 def test_incremental_neardup_cli_two_run_frontier(spark, tmp_path):
     """CLI --near-dups --seen-sigs: run 1 drops within-batch near-dups
     and records every processed doc's bands; run 2 over near-duplicates
@@ -1132,59 +1154,45 @@ def test_select_top_frac_matches_oracle(spark):
 
 
 def test_select_top_frac_prefilter_identical(spark):
-    """approx_prefilter cuts the window-sort input but must return the
-    EXACT same rows/ranks as the plain path — every row that could make
-    the cut survives the 2x-frac threshold, so survivor ranks equal
-    global ranks. Checked at two fracs, both directions."""
+    """NULL scores rank last (descending) yet still count toward
+    keep = ceil(frac * n_stratum), so a NULL-heavy stratum keeps NULL
+    rows once its scored rows run out."""
     from illumio_spark.operators.curation import select_top_frac
 
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    for frac in (0.1, 0.3):
-        for desc in (True, False):
-            plain = select_top_frac(docs, frac, "n_chars", descending=desc)
-            fast = select_top_frac(
-                docs, frac, "n_chars", descending=desc, approx_prefilter=True
-            )
-            assert plain.exceptAll(fast).isEmpty() and fast.exceptAll(plain).isEmpty(), (
-                f"frac={frac} desc={desc}"
-            )
-
-    # NULL-heavy scores: plain ranks NULLs last and can still keep some;
-    # the prefilter must not silently drop them (1 of 10 scores non-null,
-    # frac 0.4 forces NULL-score rows into the kept set)
+    # 1 of 10 scores non-null, frac 0.4 forces NULL-score rows into the
+    # kept set, ranked after the one scored row
     rows = [(i, "s", 100 if i == 0 else None) for i in range(10)]
     nulls = spark.createDataFrame(rows, "doc_id int, source string, score int")
-    plain = select_top_frac(nulls, 0.4, "score")
-    fast = select_top_frac(nulls, 0.4, "score", approx_prefilter=True)
-    assert plain.count() == 4
-    assert plain.exceptAll(fast).isEmpty() and fast.exceptAll(plain).isEmpty()
+    kept = select_top_frac(nulls, 0.4, "score").orderBy("rank").collect()
+    assert [(r.doc_id, r.score, r.rank) for r in kept] == [
+        (0, 100, 1), (1, None, 2), (2, None, 3), (3, None, 4)
+    ]
 
-    # NULL-MAJORITY strata (r6 ADVICE): 10 scored + 30 NULL rows at
-    # frac=0.4 → keep = 16 counts the NULLs, but the 2*frac threshold
-    # only guarantees ~8 non-null survivors — without the bypass the
-    # prefilter would drop scored rows the plain path keeps. Mix safe
-    # and unsafe strata so both code paths run in one plan, and check
-    # the threshold-droppable scored rows (many non-null, all needed)
-    # in the same sweep.
+    # NULL-MAJORITY stratum: 10 scored + 30 NULL rows at frac=0.4 →
+    # keep = 16 counts the NULLs; every scored row is kept, then 6 NULLs
     rows = (
         [(i, "nullheavy", i if i < 10 else None) for i in range(40)]
         + [(i, "allscored", i * 3 % 17) for i in range(40)]
         + [(i, "bigsafe", i * 7 % 101) for i in range(400)]
     )
     mixed = spark.createDataFrame(rows, "doc_id int, source string, score int")
-    for frac in (0.2, 0.4):
-        plain = select_top_frac(mixed, frac, "score")
-        fast = select_top_frac(mixed, frac, "score", approx_prefilter=True)
-        assert plain.exceptAll(fast).isEmpty() and fast.exceptAll(plain).isEmpty(), (
-            f"null-majority frac={frac}"
-        )
-    # in the null-heavy stratum every scored row must be kept (plain
-    # semantics: 16 kept = 10 scored + 6 NULLs) — pin it explicitly
-    kept = select_top_frac(mixed, 0.4, "score", approx_prefilter=True).filter(
-        "source = 'nullheavy'"
-    )
+    kept = select_top_frac(mixed, 0.4, "score").filter("source = 'nullheavy'")
     assert kept.filter("score IS NOT NULL").count() == 10
     assert kept.count() == 16
+
+
+def test_select_top_frac_rejects_frac_outside_unit_interval(spark):
+    """keep = ceil(frac * n) is <= 0 for frac <= 0, which would drop
+    every doc without a word, and frac > 1 has no meaning: both raise."""
+    import pytest
+
+    from illumio_spark.operators.curation import select_top_frac
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    for frac in (0.0, -0.5, 1.5):
+        with pytest.raises(ValueError, match="frac"):
+            select_top_frac(docs, frac, "n_chars")
+    assert select_top_frac(docs, 1.0, "n_chars").count() == docs.count()
 
 
 SHARD_SQL = """

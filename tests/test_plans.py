@@ -438,19 +438,6 @@ def test_chunk_shard_topfrac_plans(spark):
     read_schema = [l for l in plan.splitlines() if "ReadSchema" in l][0]
     assert "n_chars" in read_schema and "text" not in read_schema
 
-    # approx_prefilter mode: the tiny per-stratum (count, threshold)
-    # aggregate broadcasts back and FILTERS the rows before the window
-    # sort — one extra agg shuffle, but the sort input shrinks to
-    # ~2*frac of the stratum at 100 TB
-    plan = _plan(select_top_frac(docs, 0.3, "n_chars", approx_prefilter=True))
-    assert "BroadcastHashJoin" in plan
-    assert "approx_percentile" in plan
-    shuffles = [
-        l for l in plan.splitlines()
-        if "Exchange" in l and "BroadcastExchange" not in l
-    ]
-    assert len(shuffles) == 2, shuffles
-
 
 def test_signature_builders_shuffle_once_by_id_key(spark):
     # each signature builder shuffles its narrow doc rows once, by id, as

@@ -206,13 +206,12 @@ def test_embedding_stream_replay_and_torn_frontier(spark, tmp_path):
 
 
 def test_matmul_and_pandas_cosine_null_ragged_vectors(spark):
-    """ADVICE r7 (low): the numpy paths must tolerate NULL and
-    mismatched-length vectors exactly like the expression paths (NULL
+    """ADVICE r7 (low): the numpy matmul path must tolerate NULL and
+    mismatched-length vectors exactly like the expression cosine (NULL
     cosine -> excluded), instead of raising ValueError in the UDF."""
     from illumio_spark.operators.similarity import (
         bucket_verified_pairs,
         cosine,
-        cosine_pandas,
     )
 
     rows = [
@@ -244,35 +243,10 @@ def test_matmul_and_pandas_cosine_null_ragged_vectors(spark):
         "a array<double>, b array<double>",
     )
     from pyspark.sql import functions as F2
-    got_p = [r.c for r in pairs.select(cosine_pandas(F2.col("a"), F2.col("b")).alias("c")).collect()]
     want_e = [r.c for r in pairs.select(cosine(F2.col("a"), F2.col("b")).alias("c")).collect()]
     # the expr path gives NULL for null/zero-norm; for the ragged row
     # zip_with pads with NULL so the fold is NULL too
-    assert got_p[0] == 1.0 and want_e[0] == 1.0
-    assert got_p[1:] == [None, None, None, None]
-    assert want_e[1:] == [None, None, None, None]
-
-
-def test_pandas_cosine_non_sequence_is_null(monkeypatch):
-    """ADVICE r8: cosine_pandas's NULL probe treated only None as NULL;
-    any other non-vector (a float NaN from a pandas null) raised
-    TypeError in len(x) and failed the whole batch. Captures the batch
-    function cosine_pandas hands to pandas_udf and runs it directly."""
-    import numpy as np
-    import pandas as pd
-    import pyspark.sql.functions as PF
-
-    from illumio_spark.operators.similarity import cosine_pandas
-
-    captured = []
-    monkeypatch.setattr(
-        PF, "pandas_udf", lambda fn, _type: captured.append(fn) or (lambda *cols: None)
-    )
-    cosine_pandas(None, None)
-    (batch,) = captured
-    va = pd.Series([np.array([1.0, 0.0]), float("nan"), np.array([3.0, 4.0]), None])
-    vb = pd.Series([np.array([1.0, 0.0]), np.array([1.0, 0.0]), float("nan"), [3.0, 4.0]])
-    assert batch(va, vb).tolist() == [1.0, None, None, None]
+    assert want_e == [1.0, None, None, None, None]
 
 
 def test_matmul_block_bound_adapts(spark):
