@@ -7,8 +7,8 @@ the key layout of the committed BENCH/<file>.json history.
 
 Usage: python BENCH/points.py <point>   (run alone: each point loads the
 whole host). Points: sf1, dedup_scale, assembly_scale, compact_frontier,
-cc_regimes, incremental_neardup, neardup_stream, compact_embedding, ann_768,
-streaming, hw_ceiling, scaling.
+cc_regimes, incremental_neardup, neardup_stream, compact_embedding,
+verify_regimes, ann_768, streaming, hw_ceiling, scaling.
 
 ann_768, hw_ceiling and scaling measure an N -> 4N core pair with
 N = cpu_count // 4 and 4N = cpu_count, one JVM per level: the parent
@@ -690,6 +690,80 @@ def compact_embedding(spark) -> dict:
         "time_ratio_200k_over_20k": ratios(a, b)["compact"],
         "dim": DIM,
         "threshold": THRESHOLD,
+    }
+
+
+# (planes, vector counts): 16 buckets per table crowd every bucket (the
+# matmul side), 1,024 leave a few pairs per bucket until ~10 k vectors
+VERIFY_ARMS = ((4, (1_000, 2_000, 5_000)), (10, (2_000, 5_000, 10_000, 20_000, 100_000)))
+
+
+@point("verify_regimes.json", footer=("cpus",))
+def verify_regimes(spark) -> dict:
+    """lsh_neardup_pairs in both verify regimes of bucket_verified_pairs,
+    the (tbl, bucket) id join and the per-bucket blocked matmul, on
+    synth_vectors (dim 64, 3 tables, threshold 0.9) bucketed 16 and
+    1,024 ways per table, and on bench.py's td_embedding_neardup corpus
+    at sf0.1 (256 buckets × 9 tables). Each regime is forced by setting
+    MATMUL_MIN_PAIRS_PER_BUCKET; `default` names the regime the shipped
+    bound picks (whether its plan holds the pandas group), and
+    `pairs_per_bucket` is the occupancy it picks from: Σ M(M−1)/2 over
+    the non-empty (tbl, bucket) groups, per group. The corpus is
+    checkpointed first (untimed); each regime's time is the best of 2
+    `count()` runs, regimes alternated, after one warm arm."""
+    from illumio_spark.operators import similarity as SIM
+    from illumio_spark.queries.catalog_td import embedding_neardup_corpus
+
+    shipped = SIM.MATMUL_MIN_PAIRS_PER_BUCKET
+    forced = (("join", float("inf")), ("matmul", -1))
+
+    def arm(df, n_planes: int, n_tables: int = 3, **label) -> dict:
+        df = df.localCheckpoint(eager=True)
+
+        def pairs():
+            return SIM.lsh_neardup_pairs(
+                df, "vec_id", "v", threshold=THRESHOLD,
+                n_planes=n_planes, dim=DIM, n_tables=n_tables,
+            )
+
+        m = F.col("count")
+        n_buckets, n_cand = (
+            SIM._bucketed_long(df, "vec_id", "v", n_planes, DIM, n_tables)
+            .groupBy("tbl", "bucket").count()
+            .agg(F.count("*"), F.sum(m * (m - 1) / 2)).first()
+        )
+        plan = pairs()._jdf.queryExecution().optimizedPlan().toString()
+        out: dict = {
+            **label, "buckets_per_table": 1 << n_planes, "n_tables": n_tables,
+            "vectors": df.count(), "pairs_per_bucket": round(n_cand / n_buckets, 1),
+            "default": "matmul" if "FlatMapGroupsInPandas" in plan else "join",
+        }
+        try:
+            for _ in range(2):
+                for regime, bound in forced:
+                    SIM.MATMUL_MIN_PAIRS_PER_BUCKET = bound
+                    t, out[f"{regime}_pairs"] = clock(lambda: pairs().count())
+                    out[f"{regime}_s"] = min(t, out.get(f"{regime}_s", t))
+        finally:
+            SIM.MATMUL_MIN_PAIRS_PER_BUCKET = shipped
+        out["faster"] = "matmul" if out["matmul_s"] < out["join_s"] else "join"
+        return out
+
+    def synth(n: int):
+        return synth_vectors(spark, n).withColumnRenamed("embedding", "v")
+
+    arm(synth(500), 4)  # warm every plan shape
+    arms = [arm(synth(n), planes) for planes, sizes in VERIFY_ARMS for n in sizes]
+    # the join-side workload: bench.py's td_embedding_neardup row
+    arms.append(arm(embedding_neardup_corpus(spark, SF01), 8, 9,
+                    corpus="td_embedding_neardup sf0.1"))
+    return {
+        "metric": "verify_regimes",
+        "matmul_min_pairs_per_bucket": shipped,
+        "dim": DIM,
+        "threshold": THRESHOLD,
+        "arms": arms,
+        "join_over_matmul": [round(a["join_s"] / a["matmul_s"], 2) for a in arms],
     }
 
 

@@ -130,9 +130,6 @@ def bench_overrides() -> dict:
         "td_split_grouped": _split_grouped_fast,
         # r7: frontier compaction (star-edge CC) on the engine-default hash
         "td_compact_frontier": _compact_frontier_fast,
-        # r7: embedding near-dup with the matmul verify (registry row keeps
-        # verify='expr' so DuckDB reproduces the float summation order)
-        "td_embedding_neardup": _embedding_neardup_fast,
     }
 
 
@@ -140,27 +137,6 @@ def _hash_embed_pairs_probe(spark, sf_dir):
     from illumio_spark.queries.catalog_td import td_hash_embed_pairs
 
     return td_hash_embed_pairs(spark, sf_dir)
-
-
-def _embedding_neardup_fast(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from illumio_spark.operators import similarity as SIM
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    base = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    near = emb.filter(F.col("vec_id") < 20).select(
-        (F.col("vec_id") + 1000000).alias("vec_id"),
-        F.transform(
-            F.col("embedding").cast("array<double>"), lambda x: x + 0.05
-        ).alias("v"),
-    )
-    corpus = base.unionByName(near)
-    return SIM.lsh_neardup_pairs(
-        corpus, threshold=0.9, n_planes=8, n_tables=9, verify="matmul"
-    )
 
 
 def _compact_frontier_fast(spark, sf_dir):

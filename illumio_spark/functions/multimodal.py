@@ -6,9 +6,8 @@ over ``mapInPandas``. Every container format the sniffer recognizes has a
 REAL pixel/sample codec implemented here from the specs (no codec
 libraries in this container): PNG (zlib IDAT + all five scanline
 filters), GIF (full LZW), baseline JPEG (canonical Huffman + IDCT), WAV
-(PCM16). The only remaining fake is ``embed_stub`` for binary-payload
-MODEL embeddings (torch not in container); text embeddings are real
-(operators/similarity.hashing_embed).
+(PCM16). Binary-payload MODEL embeddings are out of scope (torch not
+in container); text embeddings are real (operators/similarity.hashing_embed).
 """
 
 from __future__ import annotations
@@ -17,68 +16,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, types as T
-
-DECODE_META_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("n_bytes", T.LongType(), True),
-        T.StructField("fake_width", T.IntegerType(), True),
-        T.StructField("fake_height", T.IntegerType(), True),
-    ]
-)
-
-
-def decode_meta(df: DataFrame) -> DataFrame:
-    """binary payload → typed metadata, one Arrow batch at a time.
-
-    STUB: a real deployment would call PIL/ffmpeg here; this container has
-    neither, so dimensions are a deterministic function of the byte length
-    (keeps the oracle checkable)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = pdf["payload"].map(lambda b: len(b) if b is not None else None)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": n.astype("Int64"),
-                    "fake_width": (n % 640).astype("Int32"),
-                    "fake_height": (n % 480).astype("Int32"),
-                }
-            )
-
-    return df.mapInPandas(run, schema=DECODE_META_SCHEMA)
-
-
-FRAME_SAMPLE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("frame_idx", T.IntegerType(), False),
-        T.StructField("frame_bytes", T.BinaryType(), True),
-    ]
-)
-
-
-def frame_sample(df: DataFrame, every_n_bytes: int = 64) -> DataFrame:
-    """Video-style frame sampling stub: slice the payload every N bytes.
-
-    Demonstrates the 1→many mapInPandas shape (UDTF-style explode) a real
-    frame sampler needs; a real codec would seek keyframes instead."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"doc_id": [], "frame_idx": [], "frame_bytes": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                for i, off in enumerate(range(0, len(payload), every_n_bytes)):
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(i)
-                    rows["frame_bytes"].append(bytes(payload[off : off + every_n_bytes]))
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(run, schema=FRAME_SAMPLE_SCHEMA)
-
 
 # ---------------------------------------------------------------------------
 # REAL header parsing — pure byte inspection, no codec libraries needed.
@@ -641,8 +578,7 @@ def sample_gif_frames(df: DataFrame, every_n: int = 1) -> DataFrame:
     """(doc_id, payload) → one row per sampled frame of an animated GIF,
     each re-encoded as a standalone grayscale PNG — REAL video-style
     keyframe sampling (1→many mapInPandas explode) over a real
-    multi-frame container, replacing the byte-slicing frame_sample stub
-    for the GIF case. Non-GIF payloads contribute no rows."""
+    multi-frame container. Non-GIF payloads contribute no rows."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1413,37 +1349,3 @@ def resize_images(df: DataFrame, out_w: int, out_h: int,
             )
 
     return df.mapInPandas(run, schema=RESIZE_SCHEMA)
-
-
-def embed_stub(df: DataFrame, dim: int = 8) -> DataFrame:
-    """Feature-extraction stub: binary payload → fixed-dim float vector.
-
-    STUB: a real vision/audio model would run here (torch not in
-    container). The fake embedding is a deterministic byte-histogram
-    projection so tests can assert shape + determinism. For TEXT columns
-    no stub is needed — operators/similarity.hashing_embed is a REAL
-    (feature-hashing) embedder whose output feeds lsh_topk /
-    lsh_neardup_pairs end-to-end."""
-    import numpy as np
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("feature", T.ArrayType(T.FloatType()), True),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for payload in pdf["payload"]:
-                if payload is None:
-                    feats.append(None)
-                    continue
-                arr = np.frombuffer(bytes(payload), dtype=np.uint8)
-                hist = np.bincount(arr % dim, minlength=dim).astype(np.float32)
-                norm = np.linalg.norm(hist)
-                feats.append((hist / norm if norm else hist).tolist())
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "feature": feats})
-
-    return df.mapInPandas(run, schema=schema)

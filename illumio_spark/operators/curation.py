@@ -331,16 +331,17 @@ def select_top_frac(
     score_col: str,
     stratum_col: str = "source",
     id_col: str = "doc_id",
-    descending: bool = True,
 ) -> DataFrame:
     """Quantile-threshold quality selection: keep the top `frac` of each
     stratum's docs by score (the FineWeb/DCLM move — classifier or
     heuristic scores exist, the corpus keeps only the best slice,
     thresholded per stratum so one high-scoring source can't crowd out
-    the rest). Exact-count contract: rank by (score desc, id asc) — the
-    id tiebreaker makes the order total and the selection deterministic
-    — and keep rank <= ceil(frac * n_stratum), so every non-empty
-    stratum keeps >= 1 doc; `frac` outside (0, 1] raises ValueError.
+    the rest). Higher scores are better. Exact-count contract: rank by
+    (score desc nulls last, id asc) — unscored docs rank below every
+    scored one, and the id tiebreaker makes the order total and the
+    selection deterministic — and keep rank <= ceil(frac * n_stratum),
+    so every non-empty stratum keeps >= 1 doc; `frac` outside (0, 1]
+    raises ValueError.
     Returns (stratum, id, score, rank, n_stratum).
 
     Scale: ONE shuffle on the stratum key feeding both window functions
@@ -349,8 +350,7 @@ def select_top_frac(
     """
     if not 0.0 < frac <= 1.0:
         raise ValueError(f"select_top_frac: frac must be in (0, 1], got {frac!r}")
-    order = F.desc(score_col) if descending else F.asc(score_col)
-    w_rank = Window.partitionBy(stratum_col).orderBy(order, F.asc(id_col))
+    w_rank = Window.partitionBy(stratum_col).orderBy(F.desc(score_col), F.asc(id_col))
     d = df.select(stratum_col, id_col, score_col)
     w_all = Window.partitionBy(stratum_col)
     keep = F.ceil(F.lit(float(frac)) * F.col("n_stratum")).cast("bigint")

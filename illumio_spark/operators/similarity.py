@@ -201,78 +201,15 @@ def lsh_neardup_pairs(
     n_planes: int = 4,
     dim: int = 64,
     n_tables: int = 3,
-    broadcast_vectors: bool = False,
-    verify: str = "expr",
 ) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs, LSH-bucketed (never O(n²)).
-
-    verify='expr' (default, the oracle-parity mode): candidates come
-    from the multi-table (table, bucket) self-equi-join of id rows ONLY
-    — the measured bottleneck of the naive version was dragging two
-    dim-sized arrays per pair through the join + dedup (2.8 s → 0.9 s at
-    sf0.1 for the same output). Vectors re-attach via two equi-joins on
-    the ids (auto-broadcast when small), then the exact cosine ≥
-    threshold verifies each deduped candidate once — as a JVM expression
-    whose float summation order DuckDB's list_cosine_similarity
-    reproduces.
-
-    verify='matmul' (the engine default at scale, same dual-path
-    discipline as hash_fn md5/xxhash64): candidates and verify run as
-    one per-bucket blocked numpy matmul (bucket_verified_pairs) — each
-    vector crosses Arrow once per bucket membership instead of once per
-    candidate pair, and the cosine costs a C matmul instead of an
-    interpreted aggregate expression (54× at 200 k vectors,
-    BENCH/compact_embedding.json). Pair-set equality between the modes
-    is pytest-asserted; only float ties exactly AT the threshold could
-    ever differ (summation order), which is why the oracle row stays on
-    'expr'."""
-    if verify not in ("expr", "matmul"):
-        raise ValueError(
-            f"unknown verify mode {verify!r}: use 'expr' or 'matmul'"
-        )
+    """Embedding-cosine near-duplicate pairs (id_a < id_b), LSH-bucketed
+    (never O(n²)): every vector gets one bucket per hash table, and
+    bucket_verified_pairs verifies each same-bucket pair at exact cosine
+    >= threshold, choosing its algorithm from the bucket occupancy. Any
+    id type works; integral ids are needed only for the matmul verify."""
     ev = df.select(F.col(id_col), F.col(vec_col).alias("__v"))
-    if verify == "matmul":
-        bv = _bucketed_long(ev, id_col, "__v", n_planes, dim, n_tables).select(
-            id_col, "tbl", "bucket", "__v"
-        )
-        return bucket_verified_pairs(
-            bv, id_col=id_col, vec_col="__v", threshold=threshold
-        )
-    # repartition on the join key: the self-join's two sides then share ONE
-    # ReusedExchange instead of each recomputing the bucket expressions
-    eb = (
-        _bucketed_long(ev, id_col, "__v", n_planes, dim, n_tables)
-        .select(id_col, "tbl", "bucket")
-        .repartition("tbl", "bucket")
-    )
-    a, b = eb.alias("a"), eb.alias("b")
-    cand_ids = (
-        a.join(
-            b,
-            (F.col("a.tbl") == F.col("b.tbl"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    # broadcast_vectors=True hints the vector re-attach joins for broadcast:
-    # Catalyst misestimates array column sizes and may sort-merge-join the
-    # pairs twice (measured 2× slower than even the naive vector-carrying
-    # join at small scale) — but an unconditional hint would OOM on a
-    # corpus that doesn't fit in executor memory, so the 100 TB-safe
-    # default is False and AQE picks the strategy from runtime sizes.
-    def _maybe_b(d):
-        return F.broadcast(d) if broadcast_vectors else d
-
-    va = _maybe_b(ev.select(F.col(id_col).alias("id_a"), F.col("__v").alias("va")))
-    vb = _maybe_b(ev.select(F.col(id_col).alias("id_b"), F.col("__v").alias("vb")))
-    return (
-        cand_ids.join(va, "id_a")
-        .join(vb, "id_b")
-        .filter(cosine(F.col("va"), F.col("vb")) >= threshold)
-        .select("id_a", "id_b")
-    )
+    bv = _bucketed_long(ev, id_col, "__v", n_planes, dim, n_tables)
+    return bucket_verified_pairs(bv, id_col=id_col, vec_col="__v", threshold=threshold)
 
 
 def incremental_embedding_neardup(
@@ -313,11 +250,9 @@ def incremental_embedding_neardup(
 
     Scale shape: buckets holding no new doc are semi-join-pruned before
     any vector moves, so per-run cost is O(batch + collisions), never
-    O(history); candidate generation + exact verify run as ONE
-    per-bucket blocked numpy matmul (bucket_verified_pairs, new-vs-all
-    mask) — each touched vector crosses Arrow once per bucket
-    membership instead of once per candidate pair; CC runs on the
-    batch-induced subgraph."""
+    O(history); bucket_verified_pairs verifies the new-vs-all pairs
+    (probe = new) with the algorithm the bucket occupancy picks; CC
+    runs on the batch-induced subgraph."""
     from illumio_spark.operators.dedup import _seen_wins
 
     ev = new_df.select(
@@ -343,12 +278,8 @@ def incremental_embedding_neardup(
                 F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
             )
         )
-    # candidates + verify as ONE per-bucket blocked matmul (new rows ×
-    # all rows), restricted to buckets holding at least one new doc —
-    # the join-then-verify form materializes every candidate pair with
-    # both vector payloads and runs the cosine as an interpreted
-    # aggregate expression (measured 54× slower at 200k vectors,
-    # BENCH/compact_embedding.json)
+    # verify new rows × all rows, restricted to buckets holding at least
+    # one new doc
     new_keys = nb.select("tbl", "bucket").distinct()
     new_flag = nb.select(id_col).distinct().withColumn("__new", F.lit(True))
     bv = (
@@ -370,70 +301,127 @@ def incremental_embedding_neardup(
     return kept, nb, new_df.select(id_col, vec_col)
 
 
+# bucket_verified_pairs' two verify algorithms emit the same pairs and
+# pay for different things. The join (ids self-joined per bucket,
+# vectors re-attached by id, the cosine expression) pays per candidate
+# pair; the blocked numpy matmul pays a fixed cost per non-empty bucket
+# (one pandas group, ~1.4 ms) and next to nothing per pair, so the
+# ratio of the two counts picks. `python BENCH/points.py verify_regimes`
+# (4 cores, dim 64, BENCH/verify_regimes.json) forced each side: the
+# join won at 3.6, 17.6 and 36.9 pairs per bucket (2.1× at 36.9, the
+# td_embedding_neardup corpus), the matmul from 66 up (1.07-1.3× at 66,
+# 8.5× at 6,400). The bound sits between 36.9 and 66.
+MATMUL_MIN_PAIRS_PER_BUCKET = 48
+# rows of the matmul's row side per sims block (block × bucket rows)
+VERIFY_BLOCK = 1024
+# a pandas group holds all of a bucket's vectors in one worker (M × dim
+# × 8 bytes: 20 M members at dim 64 would be ~10 GB), so buckets above
+# this many rows take the distributed join, which spills instead
+HOT_BUCKET_ROWS = 200_000
+
+
 def bucket_verified_pairs(
     bucketed: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "__v",
     threshold: float = 0.9,
-    block: int = 1024,
     probe_col: str | None = None,
-    hot_bucket_rows: int = 200_000,
 ) -> DataFrame:
-    """(tbl, bucket, id, vec) rows → exact-cosine-verified candidate
-    pairs (id_a < id_b), computed per bucket with a BLOCKED numpy
-    matmul inside applyInPandas instead of materializing the pairwise
-    join. Why: a bucket of M members implies M²/2 candidate pairs, and
-    the join-then-verify form ships both vectors with EVERY pair (~1 KB
-    per pair at dim 64) through an interpreted aggregate/zip_with
-    cosine; this form moves each vector once per bucket through Arrow
-    and verifies with C-speed matmul. Row blocks of `block` bound the
-    in-UDF matrix at block×M. Zero-norm vectors normalize to NaN and
-    never pass the >= threshold comparison — same outcome as the
-    expression form's try_divide NULL. Cross-table duplicate pairs are
-    distinct-ed here. Requires an integral id column (the pair schema
-    and the numpy min/max are typed); use the expression paths for
-    string ids.
+    """(tbl, bucket, id, vec) rows → the distinct id pairs (id_a < id_b)
+    that share a bucket and pass exact cosine >= threshold. The one
+    verify entry point of the embedding near-dup family
+    (lsh_neardup_pairs, incremental_embedding_neardup,
+    compact_embedding_frontier and the embedding stream).
 
-    probe_col (boolean column) restricts the matmul's ROW side to
-    flagged members — the new-vs-all shape of the incremental frontier:
-    probe × all instead of all × all, emitting exactly the >=1-probe
-    pairs. Without it, the full upper triangle.
+    probe_col (boolean column) restricts the pairs to those with >= 1
+    flagged member — the new-vs-all shape of the incremental frontier.
 
-    Hot-bucket guard: a pandas group materializes ALL of a bucket's
-    vectors in one worker (M × dim × 8 bytes — 20 M degenerate members
-    at dim 64 would be ~10 GB), so buckets over `hot_bucket_rows` rows
-    are split off to the DISTRIBUTED join-then-verify path (expression
-    cosine, spills instead of OOMs; quadratic work is intrinsic to a
-    hot bucket either way — the real mitigation is the LSH design,
-    more planes/doc-freq capping, same class as verbatim's
-    stop-shingles). The size split costs one count aggregate over the
-    band rows. The per-block sims matrix is additionally bounded by
-    `target_cells` (r8, ADVICE r7): `block` shrinks so block×M stays
-    ≤ target_cells (~128 MB of float64 at the default) — a bucket just
-    under hot_bucket_rows could otherwise allocate block×M ≈ 1.6 GB in
-    one worker. Identical pairs (row-block partitioning cannot change
-    the pair set; pinned by the existing block<bucket pytest).
+    The algorithm is picked per call from one aggregate over the bucket
+    sizes (non-empty buckets, candidate pairs Σ M(M−1)/2 or Σ probe × M,
+    any bucket over HOT_BUCKET_ROWS):
+      - join (_join_verified_pairs): when the buckets average at most
+        MATMUL_MIN_PAIRS_PER_BUCKET candidate pairs, when the ids are
+        not integral, and for hot buckets. Its cosine is the JVM
+        expression whose float summation order DuckDB's
+        list_cosine_similarity reproduces.
+      - blocked matmul (_matmul_verified_pairs): every other bucket.
+        Each vector crosses Arrow once per bucket membership and the
+        cosine is a C matmul; float ties exactly AT the threshold are
+        the only pairs the two could disagree on.
+    Both drop NULL, zero-norm and mixed-length pairs, as the expression
+    cosine's NULL does. The measured regimes are
+    BENCH/verify_regimes.json (`python BENCH/points.py verify_regimes`)."""
+    cols = ["tbl", "bucket", id_col, vec_col] + ([probe_col] if probe_col else [])
+    # materialize ONCE: the size aggregate and every verify branch read
+    # it — uncheckpointed, each re-executes the caller's bucketing tree
+    b = bucketed.select(*cols).localCheckpoint(eager=True)
+    args = (id_col, vec_col, threshold, probe_col)
+    if dict(b.dtypes)[id_col] not in ("bigint", "int", "smallint", "tinyint"):
+        return _join_verified_pairs(b, *args)
+    m = F.col("__bn")
+    sizes = b.groupBy("tbl", "bucket").agg(
+        F.count("*").alias("__bn"),
+        *([F.count_if(probe_col).alias("__bp")] if probe_col else []),
+    )
+    cand = F.col("__bp") * m if probe_col else m * (m - 1) / 2
+    n_buckets, n_pairs, any_hot = sizes.agg(
+        F.count("*"), F.sum(cand), F.max(m) > HOT_BUCKET_ROWS
+    ).first()
+    if not n_pairs or n_pairs <= MATMUL_MIN_PAIRS_PER_BUCKET * n_buckets:
+        return _join_verified_pairs(b, *args)
+    if not any_hot:
+        return _matmul_verified_pairs(b, *args).distinct()
+    hot_keys = sizes.filter(m > HOT_BUCKET_ROWS).select("tbl", "bucket")
+    cold = b.join(hot_keys, ["tbl", "bucket"], "left_anti")
+    hot = b.join(hot_keys, ["tbl", "bucket"], "left_semi")
+    return (
+        _matmul_verified_pairs(cold, *args)
+        .unionByName(_join_verified_pairs(hot, *args))
+        .distinct()
+    )
 
-    NULL / ragged vectors (r8, ADVICE r7): rows with a NULL vector are
-    dropped and the matmul runs per distinct vector LENGTH — a
-    mixed-length pair scores NULL under the expression cosine
-    (zip_with) and never passes the threshold, so grouping by length
-    reproduces exactly the 'expr' semantics instead of raising
-    ValueError inside the UDF."""
+
+def _join_verified_pairs(rows: DataFrame, id_col: str, vec_col: str,
+                         threshold: float, probe_col: str | None) -> DataFrame:
+    """The distributed verify: the (tbl, bucket) self-join moves ids
+    ONLY, deduplicated across tables, so each candidate pair is scored
+    once; the vectors re-attach by two id equi-joins."""
+    ids = rows.drop(vec_col)
+    a, b = ids.alias("a"), ids.alias("b")
+    ia, ib = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
+    same_bucket = (F.col("a.tbl") == F.col("b.tbl")) & (F.col("a.bucket") == F.col("b.bucket"))
+    if probe_col:
+        cond = same_bucket & F.col(f"a.{probe_col}") & (ia != ib)
+        ia, ib = F.least(ia, ib), F.greatest(ia, ib)
+    else:
+        cond = same_bucket & (ia < ib)
+    cand = a.join(b, cond).select(ia.alias("id_a"), ib.alias("id_b")).distinct()
+    vecs = rows.select(id_col, vec_col).dropDuplicates([id_col])
+    va = vecs.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"))
+    vb = vecs.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
+    return (
+        cand.join(va, "id_a")
+        .join(vb, "id_b")
+        .filter(cosine(F.col("__va"), F.col("__vb")) >= threshold)
+        .select("id_a", "id_b")
+    )
+
+
+def _matmul_verified_pairs(rows: DataFrame, id_col: str, vec_col: str,
+                           threshold: float, probe_col: str | None) -> DataFrame:
+    """The per-bucket verify: one applyInPandas group per bucket
+    normalizes its vectors and scores row blocks against all members
+    with one matmul each. A block is VERIFY_BLOCK rows, shrunk so block
+    × M stays within target_cells (~128 MB of float64). Zero-norm
+    vectors normalize to NaN and never pass; NULL vectors are dropped
+    and the matmul runs per distinct vector length. Pairs repeat across
+    tables (the caller distincts)."""
     import pandas as pd
 
-    id_dt = dict(bucketed.dtypes)[id_col]
-    if id_dt not in ("bigint", "int", "smallint", "tinyint"):
-        raise TypeError(
-            f"bucket_verified_pairs needs an integral id column, got "
-            f"{id_col}: {id_dt}; use lsh_neardup_pairs(verify='expr') for "
-            f"non-integral ids"
-        )
+    id_dt = dict(rows.dtypes)[id_col]
     empty = {"id_a": pd.Series(dtype="int64"), "id_b": pd.Series(dtype="int64")}
-    cols = ["tbl", "bucket", id_col, vec_col] + (
-        [probe_col] if probe_col else []
-    )
-    target_cells = 16_000_000  # ≈128 MB float64 per in-flight sims block
+    block = VERIFY_BLOCK
+    target_cells = 16_000_000
 
     def one_group(pdf: "pd.DataFrame", out_a: list, out_b: list) -> None:
         n = len(pdf)
@@ -479,52 +467,7 @@ def bucket_verified_pairs(
         return pd.DataFrame({"id_a": np.concatenate(out_a),
                              "id_b": np.concatenate(out_b)})
 
-    # materialize ONCE: the size split (anti + semi), the pandas groups,
-    # and the hot join all traverse this frame — uncheckpointed, each
-    # consumer re-executes the caller's bucket/vector join tree
-    # (measured ~4 extra executions per incremental call)
-    b = bucketed.select(*cols).localCheckpoint(eager=True)
-    sizes = b.groupBy("tbl", "bucket").agg(F.count("*").alias("__bn"))
-    hot_keys = sizes.filter(F.col("__bn") > hot_bucket_rows).select(
-        "tbl", "bucket"
-    )
-    # the common case has NO hot buckets: checking costs one aggregate
-    # over the checkpointed frame and removes the anti/semi-join pair,
-    # the expression-cosine fallback subtree, and the union from the plan
-    # entirely (r8; the guard path itself is unchanged when it fires)
-    if hot_keys.isEmpty():
-        return (
-            b.groupBy("tbl", "bucket")
-            .applyInPandas(fn, f"id_a {id_dt}, id_b {id_dt}")
-            .distinct()
-        )
-    cold = b.join(hot_keys, ["tbl", "bucket"], "left_anti")
-    pairs = cold.groupBy("tbl", "bucket").applyInPandas(
-        fn, f"id_a {id_dt}, id_b {id_dt}"
-    )
-    hot = b.join(hot_keys, ["tbl", "bucket"], "left_semi")
-    ha = hot.filter(F.col(probe_col)) if probe_col else hot
-    ha = ha.select(
-        "tbl", "bucket", F.col(id_col).alias("__ida"), F.col(vec_col).alias("__va")
-    )
-    hb = hot.select(
-        "tbl", "bucket", F.col(id_col).alias("__idb"), F.col(vec_col).alias("__vb")
-    )
-    hot_cond = (
-        (F.col("__ida") != F.col("__idb"))
-        if probe_col
-        else (F.col("__ida") < F.col("__idb"))
-    )
-    hot_pairs = (
-        ha.join(hb, ["tbl", "bucket"])
-        .filter(hot_cond)
-        .filter(cosine(F.col("__va"), F.col("__vb")) >= threshold)
-        .select(
-            F.least("__ida", "__idb").alias("id_a"),
-            F.greatest("__ida", "__idb").alias("id_b"),
-        )
-    )
-    return pairs.unionByName(hot_pairs).distinct()
+    return rows.groupBy("tbl", "bucket").applyInPandas(fn, f"id_a {id_dt}, id_b {id_dt}")
 
 
 def embedding_state(
@@ -572,15 +515,10 @@ def compact_embedding_frontier(
     apply — bucket co-residence is only a candidate signal here, every
     edge must pass the exact cosine >= threshold verify, and A-min /
     B-min may both fail where A-B passes. The intrinsic cost is
-    sum(bucket_size²) dot products, the knob for which is the LSH
-    design (n_planes/n_tables at signature time) — but the CONSTANT
-    matters: verification runs as a per-bucket blocked numpy matmul
-    (bucket_verified_pairs), never as a materialized M²/2-row pair join
-    that ships two vector payloads per pair through an interpreted
-    aggregate expression. Measured at 200 k vectors / 1024-slot tables
-    (identical bucket occupancy): the join-then-verify form took 548 s;
-    the per-bucket matmul form 10.1 s — 54×, and 10× data now costs
-    1.53× time (BENCH/compact_embedding.json)."""
+    sum(bucket_size²) candidate pairs, the knob for which is the LSH
+    design (n_planes/n_tables at signature time); bucket_verified_pairs
+    picks the verify algorithm from that occupancy (20 k and 200 k
+    vectors in 1024-slot tables: BENCH/compact_embedding.json)."""
     from illumio_spark.operators.dedup import (
         canonical_and_retractions,
         neardup_components,
@@ -729,8 +667,7 @@ def hashing_embed(
     second independent hash picks ±1 sign, per-bucket signed counts,
     l2-normalized dense vector. No model weights needed, fully
     deterministic, and the output feeds lsh_neardup_pairs / lsh_topk
-    directly — raw text → embedding → ANN end-to-end without the fake
-    embed_stub.
+    directly — raw text → embedding → ANN end-to-end.
 
     Scale shape: explode tokens (codegen) → ONE groupBy(id, bucket) with
     map-side partial sums → ONE groupBy(id) assembling the dense vector

@@ -451,19 +451,25 @@ def td_incremental_embedding(spark, sf_dir):
     return kept.select("vec_id")
 
 
-@q("td_embedding_neardup", _emb_neardup_sql())
-def td_embedding_neardup(spark, sf_dir):
-    """Embedding-cosine near-duplicate detection, LSH-bucketed: candidates
-    from the multi-table hyperplane bucket equi-join (never an O(n²) cross
-    join), verified by exact cosine ≥ 0.9. The corpus injects deterministic
-    near-dups (+0.05 per component) so the operator has signal."""
+def embedding_neardup_corpus(spark, sf_dir):
+    """(vec_id, v array<double>): the embeddings table plus a +0.05
+    perturbed copy (id + 1,000,000) of each vec_id < 20."""
     emb = load(spark, sf_dir, "embeddings")
     base = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     near = emb.filter(F.col("vec_id") < 20).select(
         (F.col("vec_id") + 1000000).alias("vec_id"),
         F.transform(F.col("embedding").cast("array<double>"), lambda x: x + 0.05).alias("v"),
     )
-    corpus = base.unionByName(near)
+    return base.unionByName(near)
+
+
+@q("td_embedding_neardup", _emb_neardup_sql())
+def td_embedding_neardup(spark, sf_dir):
+    """Embedding-cosine near-duplicate detection, LSH-bucketed: candidates
+    from the multi-table hyperplane bucket equi-join (never an O(n²) cross
+    join), verified by exact cosine ≥ 0.9. The corpus injects deterministic
+    near-dups (+0.05 per component) so the operator has signal."""
+    corpus = embedding_neardup_corpus(spark, sf_dir)
     # LSH calibration, measured on this corpus: the injected near-dups sit
     # at cosine ≈ 0.92 (≈23°, plane-split prob ~0.13). 4 planes = 16
     # buckets put 18% of ALL pairs through the join (0.19·n² candidates);
@@ -471,10 +477,8 @@ def td_embedding_neardup(spark, sf_dir):
     # candidates — 5× fewer, and the gap widens with corpus growth. Both
     # engines share the seeded planes, so the candidate set (and hence the
     # output) is deterministic and identical cross-engine.
-    # broadcast_vectors: this corpus is a few MB — the known-small case
     return SIM.lsh_neardup_pairs(
-        corpus, "vec_id", "v", threshold=0.9, n_planes=8, dim=64, n_tables=9,
-        broadcast_vectors=True,
+        corpus, "vec_id", "v", threshold=0.9, n_planes=8, dim=64, n_tables=9
     ).orderBy("id_a", "id_b")
 
 
@@ -697,8 +701,7 @@ def td_hash_embed_pairs(spark, sf_dir):
     emb = SIM.hashing_embed(base.unionByName(near), hash_fn="md5")
     corpus = emb.select(F.col("doc_id").alias("vec_id"), F.col("embedding").alias("v"))
     pairs = SIM.lsh_neardup_pairs(
-        corpus, "vec_id", "v", threshold=0.9, n_planes=8, dim=64, n_tables=9,
-        broadcast_vectors=True,
+        corpus, "vec_id", "v", threshold=0.9, n_planes=8, dim=64, n_tables=9
     )
     return pairs.orderBy("id_a", "id_b")
 
@@ -988,7 +991,7 @@ def td_decode_stats(spark, sf_dir):
 # (the former td_multimodal_meta fake-decode query was folded away: header
 # metadata is covered by td_media_sniff above with REAL container parsing,
 # and pixel/sample decode by td_decode_stats below with REAL PNG-inflate /
-# WAV-PCM decoding; decode_meta/frame_sample plumbing stays pytest-covered)
+# WAV-PCM decoding; frames are sampled by sample_gif_frames, td_frame_sample)
 
 
 @q(

@@ -23,6 +23,7 @@ OUTPUTS = {
     "incremental_neardup": "incremental_neardup.json",
     "neardup_stream": "neardup_stream_point.json",
     "compact_embedding": "compact_embedding.json",
+    "verify_regimes": "verify_regimes.json",
     "ann_768": None,
     "streaming": "streaming_point.json",
     "hw_ceiling": "hw_ceiling.json",

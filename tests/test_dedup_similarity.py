@@ -688,11 +688,16 @@ def test_compact_embedding_frontier_no_bridge_no_retractions(spark):
     assert rets.count() == 0
 
 
-def test_bucket_verified_pairs_equals_expression_verify(spark):
+def _plans_matmul(pairs) -> bool:
+    return "FlatMapGroupsInPandas" in pairs._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_bucket_verified_pairs_equals_expression_verify(spark, monkeypatch):
     """The per-bucket blocked-matmul verifier must emit exactly the
     pairs the join-then-cosine-expression form does — including with a
-    block size smaller than the bucket (the hot-bucket memory path) and
-    a zero vector (NaN-normalized, never passes)."""
+    block size smaller than the bucket (the hot-bucket memory path), a
+    zero vector (NaN-normalized, never passes), hot buckets split off
+    to the join, a probe column, and string ids (join only)."""
     rng = np.random.Generator(np.random.PCG64(5))
     rows = []
     for c in range(6):
@@ -706,13 +711,16 @@ def test_bucket_verified_pairs_equals_expression_verify(spark):
     ev = df.select("vec_id", F.col("embedding").cast("array<double>").alias("__v"))
     bucketed = SIM._bucketed_long(ev, "vec_id", "__v", 4, 16, 3).select(
         "vec_id", "tbl", "bucket", "__v"
-    )
-    got = {
-        (r.id_a, r.id_b)
-        for r in SIM.bucket_verified_pairs(
-            bucketed, threshold=0.9, block=5
-        ).collect()
-    }
+    ).withColumn("__new", F.col("vec_id") % 2 == 0)
+
+    def verified(frame, **kw):
+        out = SIM.bucket_verified_pairs(frame, threshold=0.9, **kw)
+        return {(r.id_a, r.id_b) for r in out.collect()}, _plans_matmul(out)
+
+    monkeypatch.setattr(SIM, "VERIFY_BLOCK", 5)
+    monkeypatch.setattr(SIM, "MATMUL_MIN_PAIRS_PER_BUCKET", -1)  # force the matmul
+    got, matmul = verified(bucketed)
+    assert matmul
     a = bucketed.select(
         F.col("vec_id").alias("id_a"), "tbl", "bucket",
         F.col("__v").alias("va"),
@@ -733,25 +741,24 @@ def test_bucket_verified_pairs_equals_expression_verify(spark):
     }
     assert got == want and len(got) > 0
     assert not any(999 in p for p in got)
-    # hot-bucket fallback: forcing every bucket (hot_bucket_rows=1) or a
-    # mixed split (=8) through the distributed join path must not change
-    # the pair set
+    want_probe = {p for p in want if p[0] % 2 == 0 or p[1] % 2 == 0}
+    assert want_probe and want_probe != want
+    assert verified(bucketed, probe_col="__new") == (want_probe, True)
+    # hot-bucket fallback: every bucket (hot bound 1) or a mixed split
+    # (8) through the distributed join must not change the pair set
     for hot in (1, 8):
-        got_hot = {
-            (r.id_a, r.id_b)
-            for r in SIM.bucket_verified_pairs(
-                bucketed, threshold=0.9, block=5, hot_bucket_rows=hot
-            ).collect()
-        }
-        assert got_hot == want, f"hot_bucket_rows={hot}"
-    # non-integral id columns are rejected with a clear error
-    import pytest as _pytest
-
-    with _pytest.raises(TypeError, match="integral id column"):
-        SIM.bucket_verified_pairs(
-            bucketed.withColumn("vec_id", F.col("vec_id").cast("string")),
-            threshold=0.9,
-        )
+        monkeypatch.setattr(SIM, "HOT_BUCKET_ROWS", hot)
+        assert verified(bucketed)[0] == want, f"HOT_BUCKET_ROWS={hot}"
+        assert verified(bucketed, probe_col="__new")[0] == want_probe, hot
+    # the join regime, and non-integral ids (join whatever the bound)
+    monkeypatch.setattr(SIM, "MATMUL_MIN_PAIRS_PER_BUCKET", float("inf"))
+    assert verified(bucketed) == (want, False)
+    assert verified(bucketed, probe_col="__new") == (want_probe, False)
+    monkeypatch.setattr(SIM, "MATMUL_MIN_PAIRS_PER_BUCKET", -1)
+    str_ids = bucketed.withColumn("vec_id", F.col("vec_id").cast("string"))
+    got_str, matmul = verified(str_ids)
+    assert not matmul
+    assert {tuple(sorted(map(int, p))) for p in got_str} == want
 
 
 def test_pandas_score_zero_vector_ranks_like_expr(spark):
@@ -773,31 +780,58 @@ def test_pandas_score_zero_vector_ranks_like_expr(spark):
     assert 99 not in ranks or ranks[99] > max(real)
 
 
-def test_lsh_neardup_pairs_matmul_mode_equals_expr(spark):
-    """The engine-default verify='matmul' mode must produce the exact
-    pair set of the oracle-parity expression mode on the real
-    embeddings table (the td_embedding_neardup corpus)."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    base = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    near = emb.filter(F.col("vec_id") < 20).select(
-        (F.col("vec_id") + 1000000).alias("vec_id"),
-        F.transform(
-            F.col("embedding").cast("array<double>"), lambda x: x + 0.05
-        ).alias("v"),
-    )
-    corpus = base.unionByName(near)
+def _td_embedding_corpus(spark):
+    from illumio_spark.queries.catalog_td import embedding_neardup_corpus
+
+    return embedding_neardup_corpus(spark, "/root/testdata/sf0.001")
+
+
+def test_lsh_neardup_pairs_matmul_mode_equals_expr(spark, monkeypatch):
+    """Both verify regimes, each forced through the crossover bound,
+    must produce the exact same pair set on the real embeddings table
+    (the td_embedding_neardup corpus)."""
+    corpus = _td_embedding_corpus(spark)
     kw = dict(threshold=0.9, n_planes=8, dim=64, n_tables=9)
-    expr_pairs = {
-        (r.id_a, r.id_b)
-        for r in SIM.lsh_neardup_pairs(corpus, **kw).collect()
+    got = {}
+    for regime, bound in (("expr", float("inf")), ("matmul", -1)):
+        monkeypatch.setattr(SIM, "MATMUL_MIN_PAIRS_PER_BUCKET", bound)
+        pairs = SIM.lsh_neardup_pairs(corpus, **kw)
+        assert _plans_matmul(pairs) == (regime == "matmul")
+        got[regime] = {(r.id_a, r.id_b) for r in pairs.collect()}
+    assert got["matmul"] == got["expr"] and len(got["expr"]) > 0
+
+
+def test_lsh_neardup_pairs_verify_follows_bucket_occupancy(spark):
+    """The shipped bound picks the matmul for crowded buckets (16 per
+    table over 2,000 vectors: ~8,000 candidate pairs per bucket) and the
+    join for the registry corpus (256 per table × 9: ~3 pairs each)."""
+    rng = np.random.Generator(np.random.PCG64(11))
+    vecs = rng.standard_normal((2000, 64))
+    dense = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(vecs)], "vec_id long, v array<double>"
+    )
+    assert _plans_matmul(
+        SIM.lsh_neardup_pairs(dense, n_planes=4, dim=64, n_tables=3)
+    )
+    from illumio_spark.queries.catalog_td import td_embedding_neardup
+
+    assert not _plans_matmul(td_embedding_neardup(spark, "/root/testdata/sf0.001"))
+
+
+def test_lsh_neardup_pairs_string_ids_equal_long_ids(spark):
+    """A string id column verifies through the join and returns the
+    pairs the long ids do (each pair ordered by string comparison)."""
+    corpus = _td_embedding_corpus(spark)
+    kw = dict(threshold=0.9, n_planes=8, dim=64, n_tables=9)
+    want = {
+        (r.id_a, r.id_b) for r in SIM.lsh_neardup_pairs(corpus, **kw).collect()
     }
-    mm_pairs = {
-        (r.id_a, r.id_b)
-        for r in SIM.lsh_neardup_pairs(corpus, verify="matmul", **kw).collect()
+    as_str = corpus.withColumn("vec_id", F.col("vec_id").cast("string"))
+    got = {
+        tuple(sorted(map(int, (r.id_a, r.id_b))))
+        for r in SIM.lsh_neardup_pairs(as_str, **kw).collect()
     }
-    assert mm_pairs == expr_pairs and len(expr_pairs) > 0
+    assert got == want and len(want) > 0
 
 
 def test_incremental_neardup_random_split_sweep(spark):

@@ -205,10 +205,11 @@ def test_embedding_stream_replay_and_torn_frontier(spark, tmp_path):
     assert kept2 == set()  # near 11 -> seen wins
 
 
-def test_matmul_and_pandas_cosine_null_ragged_vectors(spark):
+def test_matmul_and_pandas_cosine_null_ragged_vectors(spark, monkeypatch):
     """ADVICE r7 (low): the numpy matmul path must tolerate NULL and
     mismatched-length vectors exactly like the expression cosine (NULL
     cosine -> excluded), instead of raising ValueError in the UDF."""
+    from illumio_spark.operators import similarity as SIM
     from illumio_spark.operators.similarity import (
         bucket_verified_pairs,
         cosine,
@@ -225,12 +226,15 @@ def test_matmul_and_pandas_cosine_null_ragged_vectors(spark):
     bv = spark.createDataFrame(
         rows, "vec_id long, tbl int, bucket long, __v array<double>"
     )
-    got = {
-        (r.id_a, r.id_b)
-        for r in bucket_verified_pairs(bv, threshold=0.9).collect()
-    }
-    # expr-parity: NULL drops out; ragged pairs only match same-length
-    assert got == {(1, 2), (1, 5), (2, 5), (4, 6)}
+    # expr-parity in both verify regimes: NULL drops out; ragged pairs
+    # only match same-length
+    for bound in (-1, float("inf")):  # forced matmul, forced join
+        monkeypatch.setattr(SIM, "MATMUL_MIN_PAIRS_PER_BUCKET", bound)
+        got = {
+            (r.id_a, r.id_b)
+            for r in bucket_verified_pairs(bv, threshold=0.9).collect()
+        }
+        assert got == {(1, 2), (1, 5), (2, 5), (4, 6)}, bound
 
     pairs = spark.createDataFrame(
         [

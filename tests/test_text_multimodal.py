@@ -46,12 +46,6 @@ def test_rolling_fingerprint_deterministic(spark):
     assert out[0] == out[1] != out[2]
 
 
-@pytest.fixture(scope="module")
-def payloads(spark):
-    rows = [(0, b"x" * 100), (1, b"y" * 130), (2, None)]
-    return spark.createDataFrame(rows, "doc_id long, payload binary")
-
-
 def _png(w, h):
     import struct
 
@@ -298,33 +292,6 @@ def test_decode_stats_df(spark):
     assert (out[1].media_format, out[1].n_values, out[1].val_sum) == ("wav", 3, 50)
     assert out[1].val_mean == pytest.approx(50 / 3, abs=1e-6)
     assert out[2].media_format is None and out[2].n_values is None
-
-
-def test_decode_meta(payloads):
-    out = {r.doc_id: r for r in MM.decode_meta(payloads).collect()}
-    assert out[0].n_bytes == 100 and out[0].fake_width == 100
-    assert out[1].n_bytes == 130
-    assert out[2].n_bytes is None
-
-
-def test_frame_sample(payloads):
-    frames = MM.frame_sample(payloads, every_n_bytes=64).collect()
-    by_doc = {}
-    for r in frames:
-        by_doc.setdefault(r.doc_id, []).append(r)
-    assert len(by_doc[0]) == 2  # 100 bytes / 64 → 2 frames
-    assert len(by_doc[1]) == 3  # 130 bytes / 64 → 3 frames
-    assert 2 not in by_doc  # null payload yields no frames
-    assert len(by_doc[0][0].frame_bytes) == 64
-    assert len(by_doc[0][1].frame_bytes) == 36
-
-
-def test_embed_stub(payloads):
-    out = {r.doc_id: r.feature for r in MM.embed_stub(payloads, dim=8).collect()}
-    assert len(out[0]) == 8
-    assert out[2] is None
-    norm = sum(x * x for x in out[0]) ** 0.5
-    assert abs(norm - 1.0) < 1e-5
 
 
 def test_bigram_lm_scores_rank_fluent_above_shuffled(spark):
