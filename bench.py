@@ -329,13 +329,14 @@ def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_of(sf_dir)
 
-    from illumio_spark.session import build_session
+    from illumio_spark.session import build_session, codegen_compile_count
     import __spark_entry__ as entry_mod
 
     with StderrCapture() as cap:
         spark = build_session(app_name="bench")
         spark.sparkContext.setLogLevel("ERROR")
         cpus = spark.sparkContext.defaultParallelism
+        compiles0 = codegen_compile_count(spark)
 
         queries: dict[str, float] = {}
 
@@ -353,6 +354,7 @@ def main():
 
         sf1 = sf1_arm(spark)
 
+        compiles = codegen_compile_count(spark) - compiles0
         spark.stop()
 
     total = round(sum(queries.values()), 3)
@@ -369,6 +371,8 @@ def main():
                 "cpus": cpus,
                 "disk_mb_s": disk_mb_s,
                 "codegen_fallback": cap.codegen_fallback(),
+                # generated classes compiled over the run (cache misses)
+                "codegen_compiles": compiles,
                 **({"sf1": sf1} if sf1 else {}),
             }
         )

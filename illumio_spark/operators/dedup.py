@@ -106,31 +106,35 @@ def exploded_shingles(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3,
     with_pos: bool = False,
 ) -> DataFrame:
-    """(id, __s) — one row per k-word shingle, fully codegen (posexplode +
-    window lead; see minhash_signatures_df's measured rationale for why
-    this beats HOF array building ~10×). Null __s rows mark positions
-    within k-1 of the end (and zero-token docs); filter or gate as the
-    consumer needs. ONE shuffle on id.
+    """(id, __s) — one row per k-word shingle, fully codegen and sort-free.
+    Null __s rows mark positions within k-1 of the end (and zero-token
+    docs); filter or gate as the consumer needs. ONE shuffle on id.
+
+    The token split is projected once; the shingles then come from one
+    posexplode_outer over arrays_zip(toks, slice(toks, 2, n), …,
+    slice(toks, k, n)): row i holds tokens i..i+k-1, and the last field is
+    null within k-1 of the end. Neither arrays_zip nor slice is a
+    higher-order function, so the whole build stays in generated code
+    with no Window and no sort (a window lead() over (id, pos) sorted
+    every token row).
 
     with_pos=True additionally returns __pos, the 0-based token offset of
     the shingle's first token — the span-locating input of
     verbatim_overlap_spans."""
-    # shuffle the narrow doc rows before the explode: the id-keyed window
-    # and groupBy downstream then need no further exchange
-    df = df.repartition(F.col(id_col))
-    toks = df.select(
-        id_col,
-        F.posexplode_outer(F.split(F.trim(F.col(text_col)), r"\s+")).alias("__pos", "__tok"),
+    if k < 1:
+        raise ValueError(f"shingle size k must be >= 1, got {k}")
+    # shuffle the narrow doc rows before the explode: the id-keyed groupBy
+    # downstream then needs no further exchange
+    toks = df.repartition(F.col(id_col)).select(
+        id_col, F.split(F.trim(F.col(text_col)), r"\s+").alias("__toks")
     )
-    if k == 1:
-        cols = [id_col, F.col("__tok").alias("__s")]
-        return toks.select(*(cols[:1] + ["__pos"] + cols[1:])) if with_pos else toks.select(*cols)
-    w = Window.partitionBy(id_col).orderBy("__pos")
-    leads = [F.lead("__tok", j).over(w) for j in range(1, k)]
-    shingle = F.when(leads[-1].isNotNull(), F.concat_ws(" ", F.col("__tok"), *leads))
-    if with_pos:
-        return toks.select(id_col, "__pos", shingle.alias("__s"))
-    return toks.select(id_col, shingle.alias("__s"))
+    t, n = F.col("__toks"), F.size("__toks")
+    zipped = F.arrays_zip(t, *[F.slice(t, j, n) for j in range(2, k + 1)])
+    z = toks.select(id_col, F.posexplode_outer(zipped).alias("__pos", "__z"))
+    # arrays_zip names the fields of non-attribute arguments by position
+    fields = [F.col("__z")["__toks"]] + [F.col("__z")[str(j)] for j in range(1, k)]
+    shingle = F.when(fields[-1].isNotNull(), F.concat_ws(" ", *fields)).alias("__s")
+    return z.select(id_col, "__pos", shingle) if with_pos else z.select(id_col, shingle)
 
 
 def decontaminate(
@@ -144,8 +148,8 @@ def decontaminate(
     k-word shingle with the evaluation corpus (the GPT-3-style 13-gram
     overlap rule). Returns the surviving training rows unchanged.
 
-    Scale shape: both sides explode to (id, shingle) with the codegen
-    window builder, shingles travel as 8-byte xxhash64 keys, the eval
+    Scale shape: both sides explode to (id, shingle) with
+    exploded_shingles, shingles travel as 8-byte xxhash64 keys, the eval
     side collapses to DISTINCT hashes (tiny vs the training corpus —
     AQE broadcasts it), and contaminated ids come from one semi-join +
     one anti-join. Never materializes shingle arrays per row; documents
@@ -170,7 +174,7 @@ def minhash_signatures_df(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     k: int = 3, n_hashes: int = N_MINHASH, hash_fn: str = "md5",
 ) -> DataFrame:
-    """(id, mh0..mh{n-1}) via posexplode → window lead → MIN aggregates.
+    """(id, mh0..mh{n-1}) via exploded_shingles → MIN aggregates.
 
     Two HOF traps avoided, both measured on this box (5k docs, sf0.1):
       - array_min(transform(shingles, h)) hashes in an INTERPRETED
@@ -179,17 +183,18 @@ def minhash_signatures_df(
       - even building the shingle ARRAY with transform(sequence)/element_at
         is interpreted and costs ~24 µs per shingle (6.2 s of the 7.2 s
         query was the shingle build alone).
-    Instead: posexplode the raw token split (codegen), form each shingle
-    with window lead() over (id, pos) — WindowExec is compiled JVM code —
-    and take n_hashes MIN aggregates. MIN over the shingle MULTISET equals
-    MIN over the distinct set, so skipping array_distinct changes nothing;
-    the groupBy reuses the window's hash partitioning on `id`, so the whole
-    thing costs ONE shuffle of (id, pos, token). Measured 6.2 s → 0.6 s
-    (xxhash64) / 0.9 s (md5) for the signature stage.
+    Instead: one row per shingle from exploded_shingles (posexplode of
+    arrays_zip/slice — generated code, no lambda), then n_hashes MIN
+    aggregates. MIN over the shingle MULTISET equals MIN over the distinct
+    set, so skipping array_distinct changes nothing; the groupBy reuses
+    the explode's hash partitioning on `id`, so the whole thing costs ONE
+    shuffle of the doc rows. The exploded form measured 6.2 s → 0.6 s
+    (xxhash64) / 0.9 s (md5) for the signature stage when its shingles
+    still came from a window lead().
 
-    posexplode_outer keeps zero-token docs (null token → null shingle →
-    null signature, same as array_min of an empty array); the trailing
-    k-1 positions gate on the furthest lead being non-null."""
+    posexplode_outer keeps zero-token docs (null shingle → null
+    signature, same as array_min of an empty array); the trailing k-1
+    positions carry null shingles and drop out of the MIN."""
     sh = exploded_shingles(df, id_col, text_col, k)
     s = F.col("__s")
     if hash_fn == "xxhash64":

@@ -10,6 +10,20 @@ Confs chosen for the 100 TB design point (SURVEY.md §4):
     (app/log_processor.py:517-540).
   - Arrow execution for pandas UDFs (the mandated vectorized path).
   - UTC session timezone so timestamp semantics match the oracle/DuckDB.
+  - Generated classes stay compiled for the life of the session: the
+    static conf spark.sql.codegen.cache.maxEntries is CODEGEN_CACHE_ENTRIES
+    (Spark's default is 100). A full `bench.py` sf0.1 run fills 614 cache
+    entries in one JVM (the codegen_compile_count delta with the cache set
+    far above it, so nothing was evicted; an entry is one generated class
+    per class loader, and in local mode a whole-stage class is compiled
+    for the driver and again for the executor threads); 1000 keeps all of
+    them plus headroom for plan shapes the bench does not run. At the
+    default of 100, one warm neardup_keepers + verbatim_overlap_spans +
+    cut_verbatim_spans operation over perfbench's dedup corpus (114
+    entries) recompiled 76-79 of them with Janino on every call, and the
+    fresh classes ran interpreted until the JIT compiled them again. The
+    cache holds generated classes only, so its size does not grow with
+    the data.
   - Iceberg extensions are attached only when the runtime jar is present
     (offline sandbox falls back to the parquet TableIO seam).
 """
@@ -21,6 +35,8 @@ import os
 
 import pyspark
 from pyspark.sql import SparkSession
+
+CODEGEN_CACHE_ENTRIES = 1000  # see the module docstring
 
 
 def iceberg_available() -> bool:
@@ -90,6 +106,7 @@ def build_session(
             "spark.sql.parquet.compression.codec",
             os.environ.get("SPARK_PARQUET_CODEC", "zstd"),
         )
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
@@ -107,3 +124,10 @@ def build_session(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def codegen_compile_count(spark: SparkSession) -> int:
+    """Generated classes Janino has compiled in this JVM so far (Spark's
+    CodegenMetrics); a cache hit does not count."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

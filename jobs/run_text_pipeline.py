@@ -399,6 +399,18 @@ def run(spark, args) -> dict:
     return report
 
 
+def _int_at_least(lo: int):
+    """argparse type: an int >= lo, else a usage error."""
+
+    def integer(text: str) -> int:
+        v = int(text)
+        if v < lo:
+            raise argparse.ArgumentTypeError(f"must be >= {lo}, got {v}")
+        return v
+
+    return integer
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--input", required=True, help="documents parquet path")
@@ -413,7 +425,7 @@ def main() -> None:
                          "dropped by quality/decontamination stays dropped "
                          "on later runs even if those thresholds change "
                          "(delete the seen table to re-evaluate old docs)")
-    ap.add_argument("--ngram", type=int, default=13,
+    ap.add_argument("--ngram", type=_int_at_least(1), default=13,
                     help="decontamination shingle size (GPT-3 rule: 13)")
     ap.add_argument("--near-dups", action="store_true",
                     help="also drop minhash-LSH near-duplicates")
@@ -431,7 +443,7 @@ def main() -> None:
                          "retractions (emitted docs whose component got "
                          "a smaller keeper via a later bridge doc) under "
                          "--output, then exits — no pipeline stages run")
-    ap.add_argument("--cut-spans", type=int, default=0, metavar="K",
+    ap.add_argument("--cut-spans", type=_int_at_least(0), default=0, metavar="K",
                     help="excise verbatim K-token spans from the higher-id "
                          "doc of each sharing pair (0 = off)")
     ap.add_argument("--quality", default="c4", choices=["c4", "off"],

@@ -1,7 +1,8 @@
 """In-process smoke test of the transcript-pipeline CLI
 (jobs/run_pipeline.py): a synthetic run prints one line per sink whose
 counts match the oracle, a --resume re-run finds nothing pending, and an
-unknown option is an argparse usage error."""
+unknown option is an argparse usage error. The text-pipeline CLI
+(jobs/run_text_pipeline.py) rejects out-of-range sizes the same way."""
 
 import re
 import sys
@@ -51,3 +52,15 @@ def test_run_pipeline_cli_sinks_resume_and_usage(shared_session_conf, tmp_path, 
         with pytest.raises(SystemExit) as exc:
             _main([*argv, *removed], monkeypatch, capsys)
         assert exc.value.code == 2
+
+
+@pytest.mark.parametrize("bad", [["--ngram", "0"], ["--ngram", "-3"], ["--cut-spans", "-1"]])
+def test_run_text_pipeline_rejects_bad_sizes(bad, tmp_path, monkeypatch, capsys):
+    from jobs.run_text_pipeline import main
+
+    argv = ["--input", str(tmp_path / "in.parquet"), "--output", str(tmp_path / "out"), *bad]
+    monkeypatch.setattr(sys, "argv", ["run_text_pipeline.py", *argv])
+    with pytest.raises(SystemExit) as exc:
+        main()
+    assert exc.value.code == 2
+    assert f"argument {bad[0]}: must be >= " in capsys.readouterr().err

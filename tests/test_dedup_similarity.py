@@ -1,6 +1,8 @@
 """Unit tests for dedup + similarity operators (SURVEY.md §5.1 style:
 tiny in-memory DataFrames vs hand-computed expectations)."""
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -191,6 +193,45 @@ def test_minhash_xxhash64_null_for_empty_docs(spark):
     df = spark.createDataFrame([(0, ""), (1, "a b c d")], "doc_id long, text string")
     out = {r.doc_id: r.mh0 for r in D.minhash_signatures_df(df, n_hashes=2, hash_fn="xxhash64").collect()}
     assert out[0] is None and out[1] is not None
+
+
+SHINGLE_TEXTS = [
+    (0, None),
+    (1, ""),
+    (2, "   "),
+    (3, " \t\n "),
+    (4, "one two"),  # fewer than 3 tokens
+    (5, "x y z"),  # exactly 3 tokens
+    (6, "p q r s"),  # exactly 4 tokens
+    (7, "\tlead tab then  double  spaces"),
+    (8, "a b a b a b a c"),  # repeated shingles keep every position
+]
+
+
+def _reference_shingles(rows, k, with_pos):
+    """(id, pos, shingle) rows the way Spark tokenizes: trim strips spaces
+    only, split on Java's ASCII \\s+ keeps leading/trailing empty tokens,
+    NULL text is one all-NULL row and the last k-1 positions are NULL."""
+    out = []
+    for doc_id, text in rows:
+        if text is None:
+            out.append((doc_id, None, None))
+            continue
+        toks = re.split(r"[ \t\n\x0b\f\r]+", text.strip(" "))
+        for i in range(len(toks)):
+            out.append((doc_id, i, " ".join(toks[i:i + k]) if i + k <= len(toks) else None))
+    return sorted(((r if with_pos else (r[0], r[2])) for r in out), key=repr)
+
+
+@pytest.mark.parametrize("k", [1, 3, 4])
+@pytest.mark.parametrize("with_pos", [False, True])
+def test_exploded_shingles_equal_python_reference(spark, k, with_pos):
+    df = spark.createDataFrame(SHINGLE_TEXTS, "doc_id long, text string")
+    got = D.exploded_shingles(df, k=k, with_pos=with_pos)
+    assert got.columns == (["doc_id", "__pos", "__s"] if with_pos else ["doc_id", "__s"])
+    assert sorted(map(tuple, got.collect()), key=repr) == _reference_shingles(
+        SHINGLE_TEXTS, k, with_pos
+    )
 
 
 def test_multi_table_pandas_buckets_agree(emb):

@@ -33,6 +33,15 @@ def test_minhash_pipeline_survives_short_docs(spark):
     assert by_id[1].mh0 is not None
 
 
+@pytest.mark.parametrize("k", [0, -1])
+def test_exploded_shingles_rejects_k_below_one(spark, k):
+    df = spark.createDataFrame([(0, "a b c")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="k must be >= 1"):
+        D.exploded_shingles(df, k=k)
+    with pytest.raises(ValueError, match="k must be >= 1"):
+        D.verbatim_overlap_spans(df, k=k)
+
+
 def test_quality_columns_empty_text(spark):
     df = spark.createDataFrame([(0, ""), (1, "hello, world!")], "doc_id long, text string")
     cols = TX.quality_columns(F.col("text"))

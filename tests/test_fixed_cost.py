@@ -69,8 +69,17 @@ def test_dedup_curation_job_budget(spark):
     split the corpus with two joins and exploded and regrouped tokens.
     Finishing the small CC graph on the driver and cutting in one
     projection leave 28 (the edge count that picks the CC regime runs
-    two jobs under AQE)."""
+    two jobs under AQE).
+
+    Warm ops also stop compiling generated classes: the op's plans need
+    more distinct classes than Spark's default codegen cache of 100
+    keeps, so at that default every call recompiled dozens of them with
+    Janino. A warm op can still meet a few classes for the first time,
+    because AQE can plan a stage differently from one call to the next (a
+    broadcast-join stage in probes of this op). So the check is that one
+    of up to four further warm ops compiles none."""
     from illumio_spark.operators import dedup as D
+    from illumio_spark.session import codegen_compile_count
 
     sc = spark.sparkContext
     df = spark.createDataFrame(_neardup_corpus(), "doc_id long, text string")
@@ -90,6 +99,12 @@ def test_dedup_curation_job_budget(spark):
         sc.setJobGroup(None, None)
     assert (kept, n_spans, n_cut) == (120, 528, 141)
     assert 0 < len(jobs) <= DEDUP_JOB_BUDGET, f"{len(jobs)} jobs: {sorted(jobs)}"
+    compiles = []
+    while len(compiles) < 4 and 0 not in compiles:
+        before = codegen_compile_count(spark)
+        op()
+        compiles.append(codegen_compile_count(spark) - before)
+    assert 0 in compiles, f"classes compiled per warm op: {compiles}"
 
 
 def test_small_frames_are_local_relations(spark):
