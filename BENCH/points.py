@@ -415,10 +415,37 @@ def compact_frontier(spark) -> dict:
     The band table and emitted keepers are prior runs' state, untimed;
     the timed job reads them, runs CC and counts canonical and retraction
     rows — the O(history) job whose cadence amortizes against the
-    O(batch) incremental path."""
+    O(batch) incremental path. Both arms fall under DRIVER_CC_MAX_EDGES
+    band rows, so they are labelled on the driver; the 508 k arm is timed
+    again with the cap at -1 (star edges and star contraction). The last
+    arm is a seeded band table of exactly DRIVER_CC_MAX_EDGES rows (one
+    doc in ten shares a bucket per band). `driver_py_peak_mb` is the
+    driver process's RSS high-water mark after each arm: the driver arms
+    ascend in band rows, so it is that arm's peak, and the star-edge arm
+    carries the 508 k driver arm's mark."""
+    import resource
+
     from illumio_spark.operators import dedup as D
 
-    def arm(mult: int) -> dict:
+    shipped = D.DRIVER_CC_MAX_EDGES
+
+    def timed(out: dict, bands, emitted, cap: int) -> dict:
+        def compact():
+            canonical, retractions = D.compact_neardup_frontier(bands, emitted)
+            out["canonical_rows"] = canonical.count()
+            out["retraction_rows"] = retractions.count()
+
+        D.DRIVER_CC_MAX_EDGES = cap
+        try:
+            out["compact_s"], _ = clock(compact)
+        finally:
+            D.DRIVER_CC_MAX_EDGES = shipped
+        out["frontier_band_rows"] = bands.count()
+        out["regime"] = "driver" if out["frontier_band_rows"] <= cap else "star_edges"
+        out["driver_py_peak_mb"] = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss // 1024
+        return out
+
+    def prepared(mult: int) -> tuple[dict, object, object]:
         corpus = docs_corpus(spark, mult)
         bands_dir = tempfile.mkdtemp(prefix=f"compact_bands_m{mult}_")
         emitted_dir = tempfile.mkdtemp(prefix=f"compact_emitted_m{mult}_")
@@ -426,28 +453,40 @@ def compact_frontier(spark) -> dict:
         D.neardup_keepers(corpus, hash_fn="xxhash64").select(
             "doc_id"
         ).write.mode("overwrite").parquet(emitted_dir)
+        out = {"mult": mult, "n_docs": corpus.count()}
+        return out, spark.read.parquet(bands_dir), spark.read.parquet(emitted_dir)
 
-        out: dict = {"mult": mult, "n_docs": corpus.count()}
-        bands = spark.read.parquet(bands_dir)
-
-        def compact():
-            canonical, retractions = D.compact_neardup_frontier(
-                bands, spark.read.parquet(emitted_dir)
-            )
-            out["canonical_rows"] = canonical.count()
-            out["retraction_rows"] = retractions.count()
-
-        out["compact_s"], _ = clock(compact)
-        out["frontier_band_rows"] = bands.count()
+    def at_cap() -> dict:
+        bands_dir = tempfile.mkdtemp(prefix="compact_bands_cap_")
+        n_docs = shipped // 4
+        ids = spark.range(n_docs).select(F.col("id").alias("doc_id"))
+        band = spark.range(4).select(F.col("id").alias("__b"))
+        shared = F.pmod(F.xxhash64("doc_id", "__b"), F.lit(10)) == 0
+        base = F.when(shared, F.col("doc_id") - F.pmod("doc_id", F.lit(4))).otherwise(
+            F.col("doc_id")
+        )
+        ids.crossJoin(band).select(
+            "doc_id",
+            F.concat(F.lit("band"), F.col("__b")).alias("band_idx"),
+            F.xxhash64(base, "__b").alias("band_key"),
+        ).write.mode("overwrite").parquet(bands_dir)
+        emitted = spark.range(0, n_docs, 100).select(F.col("id").alias("doc_id"))
+        out = timed({"n_docs": n_docs}, spark.read.parquet(bands_dir), emitted, shipped)
+        shutil.rmtree(bands_dir, ignore_errors=True)
         return out
 
-    arm(1)  # warm every plan shape
-    a, b = arm(10), arm(100)
+    timed(*prepared(1), shipped)  # warm every plan shape
+    a = timed(*prepared(10), shipped)
+    out, bands, emitted = prepared(100)
+    b = timed(out, bands, emitted, shipped)
+    forced = timed(dict(out), bands, emitted, -1)
     return {
         "metric": "compact_frontier_scale",
-        "arms": [a, b],
+        "driver_cc_max_edges": shipped,
+        "arms": [a, b, forced, at_cap()],
         "data_ratio": round(b["n_docs"] / a["n_docs"], 2),
         "time_ratio_508k_over_50k": ratios(a, b)["compact"],
+        "star_edges_over_driver_508k": round(forced["compact_s"] / b["compact_s"], 2),
     }
 
 

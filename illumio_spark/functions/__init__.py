@@ -30,3 +30,11 @@ def once_per_gateway(build: Callable[[], _T]) -> Callable[[], _T]:
 
     return get
 
+
+def check_hash_fn(hash_fn: str) -> None:
+    """Reject any hash_fn but md5 (the DuckDB-parity hex hash) and
+    xxhash64 (the engine-internal 8-byte hash). The builders branch on
+    one of the two names, so an unknown value would otherwise fall
+    through to whichever hash that builder's else-branch uses."""
+    if hash_fn not in ("md5", "xxhash64"):
+        raise ValueError(f"unknown hash_fn {hash_fn!r}; expected 'md5' or 'xxhash64'")

@@ -14,6 +14,8 @@ from pyspark.sql import Column, functions as F, types as T
 
 from pyspark.sql.functions import pandas_udf
 
+from illumio_spark.functions import check_hash_fn
+
 # ---------------------------------------------------------------------------
 # JVM-side building blocks
 # ---------------------------------------------------------------------------
@@ -148,6 +150,7 @@ def simhash_blocks_df(
     the array — per-row HOFs cost ~24 µs/element on this box (the minhash
     shingle-build lesson); '' maps to null so zero-token docs survive the
     explode with null sums → all-zero blocks, same as the array version."""
+    check_hash_fn(hash_fn)
     # shuffle the narrow doc rows before the explode: hash(id) satisfies
     # both the (id, tok) distinct and the per-doc groupBy, so the signature
     # costs one shuffle of doc rows instead of two of token rows

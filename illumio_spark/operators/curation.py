@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from illumio_spark.functions import text as TX
+from illumio_spark.functions import check_hash_fn, text as TX
 
 
 def mixture_weights(
@@ -383,13 +383,12 @@ def shuffle_shards(
     — one shuffle at write time; this operator itself is map-only
     (plan-asserted zero shuffle), so the tag can ride an existing scan.
     """
+    check_hash_fn(hash_fn)
     key = F.concat_ws(":", *[F.col(c) for c in key_cols])
     if hash_fn == "md5":
         h = F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("bigint")
-    elif hash_fn == "xxhash64":
-        h = F.xxhash64(key)
     else:
-        raise ValueError(f"unknown hash_fn: {hash_fn}")
+        h = F.xxhash64(key)
     return df.withColumn("sort_key", h).withColumn(
         "shard", F.pmod(F.col("sort_key"), F.lit(n_shards)).cast("int")
     )

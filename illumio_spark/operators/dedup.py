@@ -19,8 +19,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.types import StructField, StructType
+
+from illumio_spark.functions import check_hash_fn
 
 
 N_MINHASH = 8
@@ -90,6 +94,8 @@ def minhash_signature(
     interpreted (no codegen, no subexpression elimination), so inlined
     shingles get rebuilt n_hashes times per row (measured 8× ≈ 45 s vs
     6 s on 5k docs)."""
+
+    check_hash_fn(hash_fn)
 
     def salted(salt: str):
         if hash_fn == "xxhash64":
@@ -195,6 +201,7 @@ def minhash_signatures_df(
     posexplode_outer keeps zero-token docs (null shingle → null
     signature, same as array_min of an empty array); the trailing k-1
     positions carry null shingles and drop out of the MIN."""
+    check_hash_fn(hash_fn)
     sh = exploded_shingles(df, id_col, text_col, k)
     s = F.col("__s")
     if hash_fn == "xxhash64":
@@ -212,6 +219,7 @@ def lsh_bands(
     columns mh0..mh{n-1} exist). md5: hex of the concat (oracle-parity);
     xxhash64: one 8-byte long per band — smaller join keys, no string
     assembly."""
+    check_hash_fn(hash_fn)
     rows_per_band = n_hashes // n_bands
     bands = []
     for b in range(n_bands):
@@ -674,24 +682,85 @@ def compact_neardup_frontier(
     the canonical ids of its own fresh band table.
 
     Scale shape: deliberately O(history) in DOCUMENTS but never in
-    pairs — CC runs over per-bucket star edges (_band_star_edges: M-1
-    edges per M-member bucket, identical components). Measured at 508 k
-    docs: the pairwise form feeds CC 32.8 M edges and runs ~3 min; the
-    star form feeds it ≤ 2 M. That is under DRIVER_CC_MAX_EDGES (4 M),
-    so neardup_components labels it from one Arrow collect instead of
-    distributed star-contraction rounds. No text, no minhashing, no
-    all-pairs."""
+    pairs. Two regimes, chosen per call by the distinct band-row count
+    (README "Dual paths"):
+
+    Driver labelling (at most DRIVER_CC_MAX_EDGES band rows, ~1 M
+    documents at 4 bands each). The band table comes back in one Arrow
+    collect; each (band_idx, band_key) bucket links its members to its
+    minimum id on the driver, and _min_root_labels labels those edges.
+    The (id, component) frame returns through one createDataFrame. This
+    replaces the star-edge shuffle, its edge count and collect, the label
+    join and its checkpoint (12 of the 25 Spark jobs of perfbench's
+    dedup_curation op). At 4 M band rows the driver process peaked at
+    ~0.5 GB RSS with xxhash64 keys (the persisted frontier's) and ~0.8 GB
+    with 32-char md5 keys.
+
+    Star edges (more band rows): CC runs over per-bucket star edges
+    (_band_star_edges: M-1 edges per M-member bucket, identical
+    components), never over pairs. Measured at 508 k docs: the pairwise
+    form feeds CC 32.8 M edges and runs ~3 min; the star form feeds it
+    ≤ 2 M, and neardup_components picks its own regime from that edge
+    count. No text, no minhashing, no all-pairs."""
     b = bands.select(id_col, "band_idx", "band_key").distinct()
-    # materialize the deduped band table ONCE: the star-edge aggregate, the
-    # node list, and CC's round-0 labels all read it — uncheckpointed, each
-    # consumer re-executed the full upstream lineage (e.g. the signature
-    # pipeline when called on fresh bands: measured 3× re-execution,
-    # 16.1 s → 12.5 s at sf1.0 from this checkpoint alone)
-    b = b.localCheckpoint(eager=True)
-    pairs = _band_star_edges(b, id_col)
-    nodes = b.select(id_col).distinct()
-    comp = neardup_components(nodes, pairs, id_col)
+    # materialize the deduped band table ONCE, under the count that picks
+    # the regime: the collect, or the star-edge aggregate, the node list
+    # and CC's round-0 labels, all read it — uncheckpointed, each consumer
+    # re-executed the full upstream lineage (e.g. the signature pipeline
+    # when called on fresh bands: measured 3× re-execution, 16.1 s →
+    # 12.5 s at sf1.0 from this checkpoint alone)
+    b = b.localCheckpoint(eager=False)
+    if b.count() <= DRIVER_CC_MAX_EDGES:
+        comp = _driver_band_labels(b, id_col)
+    else:
+        comp = neardup_components(
+            b.select(id_col).distinct(), _band_star_edges(b, id_col), id_col
+        )
     return canonical_and_retractions(comp, emitted, id_col)
+
+
+def _driver_band_labels(b: DataFrame, id_col: str) -> DataFrame:
+    """(id, component) for every non-null id of a distinct band table,
+    labelled on the driver from one Arrow collect.
+
+    Every column is dictionary-encoded to int32 codes, so no per-row
+    Python object is made for ids, band indices or md5 keys. Ids are
+    ranked (rank order = id order); within each band, every band_key
+    bucket links its members to its minimum rank, and _min_root_labels
+    labels those edges. Rows with a null band_idx or band_key link
+    nothing, as the star-edge join never matches a null key."""
+    t = b.toArrow()
+
+    def codes(col: str) -> tuple[np.ndarray, pa.Array]:
+        enc = pc.dictionary_encode(t.column(col)).combine_chunks()
+        return pc.fill_null(enc.indices, -1).to_numpy(), enc.dictionary
+
+    idc, uniq = codes(id_col)
+    kc, keys = codes("band_key")
+    ic, _ = codes("band_idx")
+    n = len(uniq)
+    order = pc.sort_indices(uniq).to_numpy()
+    rank = np.empty(n, np.int32)
+    rank[order] = np.arange(n, dtype=np.int32)
+    linked = (idc >= 0) & (kc >= 0) & (ic >= 0)
+    r, kc, ic = rank[idc[linked]], kc[linked], ic[linked]
+    bmin = np.empty(len(keys), np.int32)
+    a = np.empty_like(r)
+    for j in np.unique(ic):
+        sel = ic == j
+        bmin.fill(n)
+        np.minimum.at(bmin, kc[sel], r[sel])
+        a[sel] = bmin[kc[sel]]
+    edge = a != r
+    ranks, roots = _min_root_labels(a[edge], r[edge])
+    comp = np.arange(n, dtype=np.int32)
+    comp[ranks] = roots
+    ids = uniq.take(order)
+    id_field = b.schema[id_col]
+    return b.sparkSession.createDataFrame(
+        pa.table({id_col: ids, "component": ids.take(comp)}),
+        StructType([id_field, StructField("component", id_field.dataType)]),
+    )
 
 
 def _star_phase(edges: DataFrame, large: bool, dedup: bool = True) -> DataFrame:
@@ -741,12 +810,15 @@ def _star_phase(edges: DataFrame, large: bool, dedup: bool = True) -> DataFrame:
     return out.distinct() if dedup else out
 
 
-# Edge count up to which neardup_components labels on the driver (one
-# Arrow collect + numpy) instead of distributed star contraction. A
-# driver-memory cap set from `python BENCH/points.py cc_regimes`: the
-# driver finish won at every measured size, and peaked at ~0.6 GB of
-# driver RSS at 4 M edges (README "Dual paths"). -1 forces star
-# contraction for every graph.
+# Rows collected to the driver for labelling: the edge count up to which
+# neardup_components labels on the driver (one Arrow collect + numpy)
+# instead of distributed star contraction, and the distinct band-row
+# count up to which compact_neardup_frontier labels its band table there
+# instead of forming star edges. A driver-memory cap set from
+# `python BENCH/points.py cc_regimes` and `compact_frontier`: the driver
+# finish won at every measured size, and peaked at ~0.6 GB of driver RSS
+# at 4 M edges and ~0.5 GB at 4 M xxhash64 band rows (README "Dual
+# paths"). -1 forces star edges and star contraction everywhere.
 DRIVER_CC_MAX_EDGES = 4_000_000
 
 
@@ -909,11 +981,20 @@ def neardup_keepers(
 ) -> DataFrame:
     """Corpus → rows surviving transitivity-correct near-dup removal: the
     rows whose id is a canonical keeper of compact_neardup_frontier over
-    the corpus's own band table (star edges per band bucket → connected
-    components → min id per component). A combined run and a frontier
-    compaction keep the same ids by definition, so they share one path."""
+    the corpus's own band table (each band bucket linked to its min id →
+    connected components → min id per component; labelled on the driver
+    for band tables of up to DRIVER_CC_MAX_EDGES rows, through star edges
+    above). A combined run and a frontier compaction keep the same ids by
+    definition, so they share one path."""
     bands = band_signatures(df, id_col, text_col, hash_fn=hash_fn)
     return df.join(compact_neardup_frontier(bands, id_col=id_col), id_col, "left_semi")
+
+
+def _shingle_hash(hash_fn: str) -> Column:
+    """The join key of the verbatim operators: md5 hex of the shingle
+    (oracle parity) or its 8-byte xxhash64."""
+    check_hash_fn(hash_fn)
+    return F.md5(F.col("__s")) if hash_fn == "md5" else F.xxhash64(F.col("__s"))
 
 
 def verbatim_overlap_pairs(
@@ -940,11 +1021,8 @@ def verbatim_overlap_pairs(
     windows are boilerplate (licenses, headers, templates), not the
     copying signal; a license shared by 1M docs must never fan out 10¹²
     pairs. None = exact, uncapped (the oracle mode)."""
+    key = _shingle_hash(hash_fn)
     sh = exploded_shingles(df, id_col, text_col, k).filter(F.col("__s").isNotNull())
-    if hash_fn == "md5":
-        key = F.md5(F.col("__s"))
-    else:
-        key = F.xxhash64(F.col("__s"))
     sh = sh.select(F.col(id_col), key.alias("__h")).distinct()
     if max_doc_freq is not None:
         hot = (
@@ -981,6 +1059,14 @@ def verbatim_overlap_spans(
     (pos_a - row_number), so a shared run of n_windows consecutive
     k-shingles collapses to one row spanning n_windows + k - 1 tokens.
 
+    The returned frame is lazily materialized (localCheckpoint(eager=
+    False)): the self-join and the window run once — with AQE on, their
+    shuffle stages run as the frame is built and the last stage with the
+    first action — and every later action reads the stored rows. A
+    caller that reads the spans and then cuts with them
+    (cut_verbatim_spans) pays for the join once, and a single consumer
+    runs no extra job (6 jobs for a span cut at sf0.01, as before).
+
     Scale shape: identical join/shuffle profile to verbatim_overlap_pairs
     (8-byte hash keys, only sharing docs ever meet) plus one window over
     (id_a, id_b, diag) — keys are pair-scoped, so partitions stay small
@@ -989,10 +1075,17 @@ def verbatim_overlap_spans(
     ubiquitous shingles). Within-doc repeats are kept (NO distinct):
     every (pos_a, pos_b) alignment of a repeated shingle is a genuine
     candidate diagonal."""
+    return _span_runs(df, id_col, text_col, k, hash_fn).localCheckpoint(eager=False)
+
+
+def _span_runs(
+    df: DataFrame, id_col: str, text_col: str, k: int, hash_fn: str
+) -> DataFrame:
+    """The unmaterialized plan behind verbatim_overlap_spans."""
+    key = _shingle_hash(hash_fn)
     sh = exploded_shingles(df, id_col, text_col, k, with_pos=True).filter(
         F.col("__s").isNotNull()
     )
-    key = F.md5(F.col("__s")) if hash_fn == "md5" else F.xxhash64(F.col("__s"))
     sh = sh.select(F.col(id_col), F.col("__pos").alias("__p"), key.alias("__h"))
     a = sh.select(F.col(id_col).alias("id_a"), F.col("__p").alias("pos_a"), "__h")
     b = sh.select(F.col(id_col).alias("id_b"), F.col("__p").alias("pos_b"), "__h")

@@ -11,6 +11,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
 
+from illumio_spark.functions import check_hash_fn
+
 
 LSH_SEED = 42
 
@@ -675,6 +677,7 @@ def hashing_embed(
     DOC (not per token), negligible at any corpus size. Docs with zero
     tokens embed as the zero vector (cosine against it is NULL — callers
     treat that as 'no signal', same as a dead letter)."""
+    check_hash_fn(hash_fn)
     # shuffle the narrow doc rows before the explode: both downstream
     # groupBys key on id (or id+bucket), so this one exchange replaces both
     # token-level exchanges

@@ -19,11 +19,13 @@ Confs chosen for the 100 TB design point (SURVEY.md §4):
     for the driver and again for the executor threads); 1000 keeps all of
     them plus headroom for plan shapes the bench does not run. At the
     default of 100, one warm neardup_keepers + verbatim_overlap_spans +
-    cut_verbatim_spans operation over perfbench's dedup corpus (114
+    cut_verbatim_spans operation over perfbench's dedup corpus (then 114
     entries) recompiled 76-79 of them with Janino on every call, and the
-    fresh classes ran interpreted until the JIT compiled them again. The
-    cache holds generated classes only, so its size does not grow with
-    the data.
+    fresh classes ran interpreted until the JIT compiled them again. That
+    operation fills 62 entries now that small band tables are labelled on
+    the driver, but it shares the cache with every other plan the session
+    runs. The cache holds generated classes only, so its size does not
+    grow with the data.
   - Iceberg extensions are attached only when the runtime jar is present
     (offline sandbox falls back to the parquet TableIO seam).
 """

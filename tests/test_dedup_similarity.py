@@ -1028,3 +1028,83 @@ def test_compact_frontier_equals_combined_keepers(spark):
     assert {r.doc_id for r in emitted.collect()} == want
     _, rets = D.compact_neardup_frontier(bands, emitted)
     assert rets.count() == 0
+
+
+def _seeded_band_rows(seed: int, str_ids: bool, md5_keys: bool) -> list:
+    """A distinct (id, band_idx, band_key) table over 300 seeded ids, four
+    bands each: unique keys (singleton buckets) except for a 40-member
+    hot bucket in band2, a 12-link chain whose consecutive links share a
+    key in alternating bands, and 15 random pairs sharing one band."""
+    import hashlib
+    import random
+
+    rng = random.Random(seed)
+    vals = rng.sample(range(100_000), 300)
+    keys = {(v, j): f"u{v}-{j}" for v in vals for j in range(4)}
+    for v in vals[:40]:
+        keys[(v, 2)] = "hot"
+    chain = vals[40:53]
+    for i, (x, y) in enumerate(zip(chain, chain[1:])):
+        keys[(x, i % 4)] = keys[(y, i % 4)] = f"chain{i}"
+    for i in range(15):
+        x, y = rng.sample(vals[53:], 2)
+        j = rng.randrange(4)
+        keys[(x, j)] = keys[(y, j)] = f"pair{i}-{j}"
+
+    def key(raw: str):
+        hexed = hashlib.md5(raw.encode()).hexdigest()
+        return hexed if md5_keys else int(hexed[:15], 16)
+
+    doc_id = (lambda v: f"d{v}") if str_ids else (lambda v: v)
+    return [(doc_id(v), f"band{j}", key(k)) for (v, j), k in keys.items()]
+
+
+@pytest.mark.parametrize(
+    "str_ids,md5_keys", [(False, False), (False, True), (True, False), (True, True)]
+)
+def test_compact_frontier_both_regimes_match_union_find(spark, monkeypatch, str_ids, md5_keys):
+    """compact_neardup_frontier against a pure-Python union-find over the
+    band buckets, with the band table labelled on the driver (cap = its
+    row count) and through star edges (cap -1): canonical ids and the
+    retractions of an emitted set that holds both keepers and dropped
+    ids. Replayed band rows change nothing. The driver regime must run
+    fewer Spark jobs: 6 here (the band count that picks the regime, the
+    Arrow collect, the canonical collect and the retraction join). It ran
+    17 while every band table went through star edges, their count and
+    collect, a label join and its checkpoint."""
+    import random
+
+    rows = _seeded_band_rows(11, str_ids, md5_keys)
+    buckets: dict = {}
+    for i, b, k in rows:
+        buckets.setdefault((b, k), []).append(i)
+    ids = sorted({i for i, _, _ in rows})
+    label = _union_find_labels(ids, [(m[0], v) for m in buckets.values() for v in m[1:]])
+    emitted_ids = random.Random(5).sample(ids, 120)
+    want_canonical = {i for i in ids if label[i] == i}
+    want_retractions = {(i, label[i]) for i in emitted_ids if label[i] != i}
+    assert 1 < len(want_canonical) < len(ids) - 40 and want_retractions
+
+    id_type = "string" if str_ids else "long"
+    key_type = "string" if md5_keys else "long"
+    bands = spark.createDataFrame(
+        rows + rows[::7], f"doc_id {id_type}, band_idx string, band_key {key_type}"
+    )
+    emitted = spark.createDataFrame([(i,) for i in emitted_ids], f"doc_id {id_type}")
+    sc = spark.sparkContext
+    jobs = {}
+    for regime, cap in (("driver", len(rows)), ("star_edges", -1)):
+        monkeypatch.setattr(D, "DRIVER_CC_MAX_EDGES", cap)
+        group = f"compact-regime-{regime}-{id_type}-{key_type}"
+        sc.setJobGroup(group, "compact_neardup_frontier regime")
+        try:
+            canonical, retractions = D.compact_neardup_frontier(bands, emitted)
+            got_canonical = {r.doc_id for r in canonical.collect()}
+            got_retractions = {(r.doc_id, r.component) for r in retractions.collect()}
+            jobs[regime] = len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setJobGroup(None, None)
+        assert got_canonical == want_canonical, regime
+        assert got_retractions == want_retractions, regime
+    assert jobs["driver"] < jobs["star_edges"], jobs
+    assert jobs["driver"] <= 8, jobs

@@ -8,6 +8,7 @@ text (divide-by-zero in quality_columns), zero-norm vectors (cosine).
 import pytest
 from pyspark.sql import functions as F
 
+from illumio_spark.operators import curation as CUR
 from illumio_spark.operators import dedup as D
 from illumio_spark.operators import similarity as SIM
 from illumio_spark.functions import text as TX
@@ -40,6 +41,32 @@ def test_exploded_shingles_rejects_k_below_one(spark, k):
         D.exploded_shingles(df, k=k)
     with pytest.raises(ValueError, match="k must be >= 1"):
         D.verbatim_overlap_spans(df, k=k)
+
+
+HASH_FN_ENTRY_POINTS = {
+    "minhash_signature": lambda df, h: D.minhash_signature(
+        D.word_shingles(F.col("text")), hash_fn=h
+    ),
+    "minhash_signatures_df": lambda df, h: D.minhash_signatures_df(df, hash_fn=h),
+    "lsh_bands": lambda df, h: D.lsh_bands(hash_fn=h),
+    "band_signatures": lambda df, h: D.band_signatures(df, hash_fn=h),
+    "neardup_keepers": lambda df, h: D.neardup_keepers(df, hash_fn=h),
+    "verbatim_overlap_pairs": lambda df, h: D.verbatim_overlap_pairs(df, k=2, hash_fn=h),
+    "verbatim_overlap_spans": lambda df, h: D.verbatim_overlap_spans(df, k=2, hash_fn=h),
+    "simhash_blocks_df": lambda df, h: TX.simhash_blocks_df(df, hash_fn=h),
+    "hashing_embed": lambda df, h: SIM.hashing_embed(df, hash_fn=h),
+    "shuffle_shards": lambda df, h: CUR.shuffle_shards(df, 4, ("doc_id",), hash_fn=h),
+}
+
+
+@pytest.mark.parametrize("entry", sorted(HASH_FN_ENTRY_POINTS))
+def test_unknown_hash_fn_raises(spark, entry):
+    """Every hash_fn entry point rejects an unknown name when the plan is
+    built; the minhash, band and simhash builders used to fall back to md5
+    and the verbatim operators and hashing_embed to xxhash64."""
+    df = spark.createDataFrame([(0, "a b c d"), (1, "a b c e")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="unknown hash_fn 'sha1'"):
+        HASH_FN_ENTRY_POINTS[entry](df, "sha1")
 
 
 def test_quality_columns_empty_text(spark):

@@ -23,7 +23,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # broadcast job and every read of a committed run inferred its schema
 # from the parquet footers in a job of its own.
 JOB_BUDGET = 6
-DEDUP_JOB_BUDGET = 28
+DEDUP_JOB_BUDGET = 16
 
 
 def _plan(df) -> str:
@@ -68,8 +68,10 @@ def test_dedup_curation_job_budget(spark):
     and checkpoints) and cut_verbatim_spans merged intervals in a window,
     split the corpus with two joins and exploded and regrouped tokens.
     Finishing the small CC graph on the driver and cutting in one
-    projection leave 28 (the edge count that picks the CC regime runs
-    two jobs under AQE).
+    projection left 28 (the edge count that picks the CC regime runs
+    two jobs under AQE). Labelling the small band table on the driver
+    (no star-edge shuffle, edge count, label join or label checkpoint)
+    and computing the spans once for both of their readers leave 16.
 
     Warm ops also stop compiling generated classes: the op's plans need
     more distinct classes than Spark's default codegen cache of 100

@@ -5,6 +5,8 @@ for enrich, no extra exchange after the pipeline's narrow shuffle, and
 one partitioning rule (column repartitions sized by the session's
 shuffle partitions and AQE, no RDD or private-plan probes)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -237,13 +239,19 @@ def test_new_r6_rows_have_scale_safe_plans(spark):
     # as bigram-LM's vocab); packing's window must partition by the
     # stratum, never an empty partition spec.
     from illumio_spark.operators.curation import mixture_weights, pack_chunks
+    from illumio_spark.operators.dedup import _span_runs
     from illumio_spark.queries.catalog_td import td_verbatim_spans
 
-    plan = _plan(td_verbatim_spans(spark, SF))
+    # the registry row reads the lazily materialized spans, so the self-
+    # join and the window are checked on the plan that fills them
+    assert "Scan ExistingRDD" in _plan(td_verbatim_spans(spark, SF))
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    plan = _plan(_span_runs(docs, "doc_id", "text", 4, "md5"))
+    assert re.search(r"(BroadcastHash|SortMerge|ShuffledHash)Join \[__h#", plan), plan
+    assert "Window [row_number()" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
     plan = _plan(pack_chunks(docs, 2048))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -258,6 +266,21 @@ def test_new_r6_rows_have_scale_safe_plans(spark):
     assert "CartesianProduct" not in plan
     # the only nested loop is the broadcast of the 1-row corpus total
     assert plan.count("BroadcastNestedLoopJoin") <= 1
+
+
+def test_cut_after_collected_spans_reuses_them(spark):
+    """Once the spans have been read, cutting with them re-runs neither
+    the hashed-shingle self-join nor the gap-and-islands window: the cut
+    plan starts from the stored span rows."""
+    from illumio_spark.operators.dedup import cut_verbatim_spans, verbatim_overlap_spans
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    spans = verbatim_overlap_spans(docs, k=4)
+    assert spans.collect()
+    plan = _plan(cut_verbatim_spans(docs, spans, min_span_tokens=6))
+    assert "Scan ExistingRDD" in plan
+    assert "__h#" not in plan, plan
+    assert "Window" not in plan, plan
 
 
 def test_mixture_materialization_plans(spark):
@@ -350,11 +373,26 @@ def test_incremental_neardup_plan(spark):
 
 
 def test_compact_frontier_plan_and_star_equivalence(spark):
-    """Frontier compaction: (1) the plan never degrades to a cartesian
-    or BNLJ; (2) star edges feed CC at most one edge per band row (the
-    no-quadratic-fan-out property); (3) randomized sweep — star-edge
-    components equal pairwise-closure components on corpora with planted
-    exact dups, near dups, chains, and hot boilerplate buckets."""
+    """Frontier compaction at the shipped cap, where these band tables
+    are labelled on the driver: (1) the plan never degrades to a
+    cartesian or BNLJ; (2) star edges feed CC at most one edge per band
+    row (the no-quadratic-fan-out property); (3) randomized sweep —
+    compaction components equal pairwise-closure components on corpora
+    with planted exact dups, near dups, chains, and hot boilerplate
+    buckets."""
+    _compact_frontier_plan_and_equivalence(spark)
+
+
+def test_compact_frontier_star_edges_plan_and_equivalence(spark, monkeypatch):
+    """The same checks with the cap at -1, so compaction forms star edges
+    and CC runs its distributed star contraction."""
+    from illumio_spark.operators import dedup as D
+
+    monkeypatch.setattr(D, "DRIVER_CC_MAX_EDGES", -1)
+    _compact_frontier_plan_and_equivalence(spark)
+
+
+def _compact_frontier_plan_and_equivalence(spark):
     import random
 
     from pyspark.sql import functions as F
