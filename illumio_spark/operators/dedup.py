@@ -490,7 +490,8 @@ def incremental_neardup(
     signatures. A new batch's band table is equi-joined against the
     union of the seen table and itself, restricted to pairs with at
     least one NEW side (new-vs-all, never the quadratic all-vs-all over
-    the full history); star edges over the touched buckets feed the
+    the full history); the touched band rows are labelled the way
+    compaction labels a band table (_band_components) and feed the
     shared keep rule (_seen_wins: min-id keeper per component, seen
     wins).
 
@@ -522,12 +523,12 @@ def incremental_neardup(
     keys) — the history-sized frontier STREAMS through one scan and is
     never shuffled; per-run cost is O(batch + collisions), not
     O(history). Buckets holding no new doc are semi-join-pruned before
-    any edge forms (their members' components were already resolved by
-    the runs that introduced them, and they cannot reach a new doc);
-    within the surviving buckets CC gets STAR edges to the bucket min
-    (_band_star_edges) — every bucket member genuinely collides with
-    every other, so stars preserve exactly the new-new connectivity and
-    new-to-seen reachability the keep decision reads. CC runs on the
+    any labelling (their members' components were already resolved by
+    the runs that introduced them, and they cannot reach a new doc).
+    The touched rows hold every bucket a new doc sits in, so their
+    components keep exactly the new-new connectivity and new-to-seen
+    reachability the keep decision reads, and label every new id;
+    _band_components picks the labelling regime. CC runs on the
     batch-induced subgraph, not the full corpus graph. State is n_bands
     small rows per document ever processed — the near-dup analog of the
     minimal exact-dedup frontier."""
@@ -546,31 +547,15 @@ def incremental_neardup(
         seen_ids = seen_bands.select(id_col).distinct()
     new_keys = new_bands.select("band_idx", "band_key").distinct()
     touched = all_bands.join(new_keys, ["band_idx", "band_key"], "left_semi")
-    # materialize the touched band rows (bounded by batch + collisions):
-    # the star-edge self-aggregate-join over a lineage mixing a
-    # checkpointed RDD with a union otherwise zips RDDs with mismatched
-    # partition counts (re-confirmed r8: removing this checkpoint fails
-    # the bridge-divergence pytest with 'Can't zip RDDs with unequal
-    # numbers of partitions' even with the star exchange pinned). No
-    # pre-distinct though (r8): band tables are distinct per
-    # (id, band_idx) by construction, the star aggregate's MIN is
-    # duplicate-tolerant, and _band_star_edges dedups its output — the
-    # old defensive distinct cost one full shuffle of the touched set.
-    touched = touched.localCheckpoint(eager=True)
-    # materialize the star edges too (r8): they feed CC's edge table AND
-    # appear twice in the node-list union — uncheckpointed, the final
-    # label join re-executed the star aggregate twice (measured ~1.5 s
-    # of the row's 9.6 s at sf1.0)
-    pairs = _band_star_edges(touched, id_col).localCheckpoint(eager=True)
-    kept, comp = _seen_wins(new_docs, pairs, seen_ids, id_col)
+    comp = _band_components(touched, id_col)
+    kept = _seen_wins(new_docs, comp, seen_ids, id_col)
     # merge events: seen docs whose induced component holds >= 2 seen
     # members — they are now known connected. These are merge
-    # CANDIDATES, not guaranteed-new information: star edges within a
-    # touched bucket can link two seen docs directly (bucket min = a
-    # seen doc), and such a pair was necessarily already same-component
-    # when the later of them was processed; the frontier stores no
-    # labels, so the caller dedupes candidates against its own
-    # keeper/label state during compaction.
+    # CANDIDATES, not guaranteed-new information: two seen docs sharing
+    # a touched bucket were necessarily already same-component when the
+    # later of them was processed; the frontier stores no labels, so the
+    # caller dedupes candidates against its own keeper/label state
+    # during compaction.
     seen_in_comp = comp.select("component", F.col(id_col))
     if seen_ids is None:
         return kept, new_bands, seen_in_comp.filter(F.lit(False))
@@ -585,31 +570,21 @@ def incremental_neardup(
 
 
 def _seen_wins(
-    new_df: DataFrame, edges: DataFrame, seen_ids: DataFrame | None, id_col: str
-) -> tuple[DataFrame, DataFrame]:
+    new_df: DataFrame, comp: DataFrame, seen_ids: DataFrame | None, id_col: str
+) -> DataFrame:
     """The frontier keep rule shared by the text and embedding frontiers
-    (incremental_neardup, similarity.incremental_embedding_neardup):
-    connected components over the new ids plus every edge endpoint; a
-    new row survives iff its id is its component's minimum AND the
-    component holds no seen id ('seen wins' — so within-batch near-dup
-    groups keep exactly one member, and anything near a previously-
-    processed doc drops). Returns (kept new rows, (id, component))."""
-    new_ids = new_df.select(id_col)
-    nodes = (
-        new_ids.unionByName(edges.select(F.col("id_a").alias(id_col)))
-        .unionByName(edges.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    comp = neardup_components(nodes, edges, id_col)
-    keep = comp.join(new_ids, id_col, "left_semi").filter(
-        F.col(id_col) == F.col("component")
-    )
+    (incremental_neardup, similarity.incremental_embedding_neardup), over
+    (id, component) labels that cover every new id: a new row survives
+    iff its id is its component's minimum AND the component holds no
+    seen id ('seen wins' — so within-batch near-dup groups keep exactly
+    one member, and anything near a previously-processed doc drops)."""
+    keep = comp.filter(F.col(id_col) == F.col("component"))
     if seen_ids is not None:
         seen_comps = (
             comp.join(seen_ids, id_col, "left_semi").select("component").distinct()
         )
         keep = keep.join(seen_comps, "component", "left_anti")
-    return new_df.join(keep.select(id_col), id_col, "left_semi"), comp
+    return new_df.join(keep.select(id_col), id_col, "left_semi")
 
 
 def _band_star_edges(bands: DataFrame, id_col: str) -> DataFrame:
@@ -682,26 +657,36 @@ def compact_neardup_frontier(
     the canonical ids of its own fresh band table.
 
     Scale shape: deliberately O(history) in DOCUMENTS but never in
-    pairs. Two regimes, chosen per call by the distinct band-row count
-    (README "Dual paths"):
+    pairs; _band_components picks the labelling regime. No text, no
+    minhashing, no all-pairs."""
+    return canonical_and_retractions(_band_components(bands, id_col), emitted, id_col)
+
+
+def _band_components(bands: DataFrame, id_col: str) -> DataFrame:
+    """(id, component) over a band table: every member of a (band_idx,
+    band_key) bucket is connected to every other, component = min id.
+    The one labelling path of frontier compaction, neardup_keepers and
+    incremental_neardup (on its touched band rows). Two regimes, chosen
+    per call by the distinct band-row count (README "Dual paths"):
 
     Driver labelling (at most DRIVER_CC_MAX_EDGES band rows, ~1 M
     documents at 4 bands each). The band table comes back in one Arrow
-    collect; each (band_idx, band_key) bucket links its members to its
-    minimum id on the driver, and _min_root_labels labels those edges.
-    The (id, component) frame returns through one createDataFrame. This
-    replaces the star-edge shuffle, its edge count and collect, the label
-    join and its checkpoint (12 of the 25 Spark jobs of perfbench's
-    dedup_curation op). At 4 M band rows the driver process peaked at
-    ~0.5 GB RSS with xxhash64 keys (the persisted frontier's) and ~0.8 GB
-    with 32-char md5 keys.
+    collect; each bucket links its members to its minimum id on the
+    driver, and _min_root_labels labels those edges. The (id, component)
+    frame returns through one createDataFrame. This replaces the
+    star-edge shuffle, its edge count and collect, the label join and its
+    checkpoint (12 of the 25 Spark jobs of perfbench's dedup_curation op;
+    incremental_neardup on a 25.8 k-doc batch against a 25 k-doc frontier
+    went from 24 jobs to 15). At 4 M band rows the driver process peaked
+    at ~0.5 GB RSS with xxhash64 keys (the persisted frontier's) and
+    ~0.8 GB with 32-char md5 keys.
 
     Star edges (more band rows): CC runs over per-bucket star edges
     (_band_star_edges: M-1 edges per M-member bucket, identical
     components), never over pairs. Measured at 508 k docs: the pairwise
     form feeds CC 32.8 M edges and runs ~3 min; the star form feeds it
     ≤ 2 M, and neardup_components picks its own regime from that edge
-    count. No text, no minhashing, no all-pairs."""
+    count."""
     b = bands.select(id_col, "band_idx", "band_key").distinct()
     # materialize the deduped band table ONCE, under the count that picks
     # the regime: the collect, or the star-edge aggregate, the node list
@@ -711,12 +696,10 @@ def compact_neardup_frontier(
     # 12.5 s at sf1.0 from this checkpoint alone)
     b = b.localCheckpoint(eager=False)
     if b.count() <= DRIVER_CC_MAX_EDGES:
-        comp = _driver_band_labels(b, id_col)
-    else:
-        comp = neardup_components(
-            b.select(id_col).distinct(), _band_star_edges(b, id_col), id_col
-        )
-    return canonical_and_retractions(comp, emitted, id_col)
+        return _driver_band_labels(b, id_col)
+    return neardup_components(
+        b.select(id_col).distinct(), _band_star_edges(b, id_col), id_col
+    )
 
 
 def _driver_band_labels(b: DataFrame, id_col: str) -> DataFrame:
@@ -813,8 +796,9 @@ def _star_phase(edges: DataFrame, large: bool, dedup: bool = True) -> DataFrame:
 # Rows collected to the driver for labelling: the edge count up to which
 # neardup_components labels on the driver (one Arrow collect + numpy)
 # instead of distributed star contraction, and the distinct band-row
-# count up to which compact_neardup_frontier labels its band table there
-# instead of forming star edges. A driver-memory cap set from
+# count up to which _band_components (compaction, neardup_keepers and
+# incremental_neardup's touched rows) labels a band table there instead
+# of forming star edges. A driver-memory cap set from
 # `python BENCH/points.py cc_regimes` and `compact_frontier`: the driver
 # finish won at every measured size, and peaked at ~0.6 GB of driver RSS
 # at 4 M edges and ~0.5 GB at 4 M xxhash64 band rows (README "Dual
@@ -1119,11 +1103,13 @@ def cut_verbatim_spans(
     dropping whole documents that contain one shared block.
 
     Plan, all codegen DataFrame ops, one projection over `df`:
-      1. spans → one `__cuts` array of [pos_b, pos_b + span_tokens)
+      1. spans → one `__cuts` set of [pos_b, pos_b + span_tokens)
          intervals per id_b, keeping only runs >= min_span_tokens (cut
-         only real duplication, not chance k-gram hits). Overlapping and
-         adjacent intervals are NOT merged: a token is cut iff any
-         interval covers it, so merging would change nothing;
+         only real duplication, not chance k-gram hits). A set, because
+         a doc repeated in M-way boilerplate receives the same interval
+         from each of its M-1 lower-id copies; it then holds one.
+         Overlapping and adjacent intervals are NOT merged: a token is
+         cut iff any interval covers it, so merging would change nothing;
       2. left-join `__cuts` to `df` (the aggregate is doc-keyed and
          small, so it is typically broadcast);
       3. affected rows rebuild their text as the whitespace tokens whose
@@ -1137,7 +1123,7 @@ def cut_verbatim_spans(
         spans.filter(F.col("span_tokens") >= min_span_tokens)
         .groupBy(F.col("id_b").alias(id_col))
         .agg(
-            F.collect_list(
+            F.collect_set(
                 F.struct(
                     F.col("pos_b").alias("__start"),
                     (F.col("pos_b") + F.col("span_tokens")).alias("__end"),

@@ -242,10 +242,12 @@ def incremental_embedding_neardup(
 
     Candidates = (tbl, bucket) equi-join of the new batch against
     seen+new (>= 1 new side, never the all-vs-all of history), verified
-    at cosine >= threshold; the verified edges go through the text
-    frontier's keep rule (dedup._seen_wins) and carry its contract vs a
-    combined run (superset, equal unless a later BRIDGE vector merges
-    two emitted keepers; compact_embedding_frontier resolves those).
+    at cosine >= threshold. CC over the new ids and the verified edges
+    (dedup.neardup_components: these are edges, not band rows) feeds
+    the text frontier's keep rule (dedup._seen_wins), which carries its
+    contract vs a combined run (superset, equal unless a later BRIDGE
+    vector merges two emitted keepers; compact_embedding_frontier
+    resolves those).
     Bucket assignment is seed-deterministic, so a vector's buckets are
     identical in every run — cross-run candidates equal combined-run
     candidates exactly.
@@ -255,7 +257,7 @@ def incremental_embedding_neardup(
     O(history); bucket_verified_pairs verifies the new-vs-all pairs
     (probe = new) with the algorithm the bucket occupancy picks; CC
     runs on the batch-induced subgraph."""
-    from illumio_spark.operators.dedup import _seen_wins
+    from illumio_spark.operators.dedup import _seen_wins, neardup_components
 
     ev = new_df.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
@@ -294,12 +296,18 @@ def incremental_embedding_neardup(
         bv, id_col=id_col, vec_col="__v", threshold=threshold,
         probe_col="__new",
     )
-    # bounded by batch collisions; nodes, CC's edge table, and the keep
-    # joins all read it — same single-execution discipline as the text
-    # path's touched-bands checkpoint
+    # bounded by batch collisions; the node list and CC's edge table
+    # both read it
     verified = verified.localCheckpoint(eager=True)
+    nodes = (
+        new_df.select(id_col)
+        .unionByName(verified.select(F.col("id_a").alias(id_col)))
+        .unionByName(verified.select(F.col("id_b").alias(id_col)))
+        .distinct()
+    )
+    comp = neardup_components(nodes, verified, id_col)
     seen_ids = None if seen_buckets is None else seen_buckets.select(id_col).distinct()
-    kept, _ = _seen_wins(new_df, verified, seen_ids, id_col)
+    kept = _seen_wins(new_df, comp, seen_ids, id_col)
     return kept, nb, new_df.select(id_col, vec_col)
 
 

@@ -29,8 +29,10 @@ count action re-executes stages 1..N-1, O(stages²) total work at scale):
                          appended after the output commits — the
                          processed-keys resume pattern)
   2. near-dup drop     — minhash-LSH band table (xxhash64 engine
-                         mode) → star edges per band bucket → connected
-                         components, keep the min-id representative per
+                         mode) → connected components of its band
+                         buckets (one driver labelling pass up to
+                         DRIVER_CC_MAX_EDGES band rows, star edges
+                         above), keep the min-id representative per
                          component; --seen-sigs PATH makes it CROSS-RUN
                          (band-join vs every prior run's signatures,
                          new-vs-all; frontier appended after the output

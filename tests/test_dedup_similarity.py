@@ -1108,3 +1108,77 @@ def test_compact_frontier_both_regimes_match_union_find(spark, monkeypatch, str_
         assert got_retractions == want_retractions, regime
     assert jobs["driver"] < jobs["star_edges"], jobs
     assert jobs["driver"] <= 8, jobs
+
+
+def _touched_split(seed: int = 4):
+    """A seeded frontier (ids < 100) and a new batch (ids >= 100) holding:
+    random docs with exact and near-dup groups inside the batch; a hot
+    25-copy bucket spanning 12 seen and 13 new docs; a chain a (seen) →
+    a+' x' → a+' x y' (new); the bridge triple (a, b seen; c new); a
+    resubmitted seen id; and a NULL-text and an empty-text new doc."""
+    import random
+
+    rng = random.Random(seed)
+    words = [f"w{i}" for i in range(400)]
+    text = lambda: " ".join(rng.choice(words) for _ in range(rng.randint(25, 45)))  # noqa: E731
+    seen = [(i, text()) for i in range(60)]
+    hot = text()
+    seen += [(60 + i, hot) for i in range(12)]
+    chain = text()
+    a, b, c = _bridge_triple()
+    seen += [(80, chain), (81, a), (82, b)]
+    new = [(100 + i, text()) for i in range(40)]
+    new += [(140 + i, new[i][1]) for i in range(5)]  # exact dups in the batch
+    new += [(150 + i, new[i][1] + " zq") for i in range(5, 10)]  # near dups
+    new += [(160 + i, hot) for i in range(13)]
+    new += [(180, chain + " x"), (181, chain + " x y"), (185, c), (7, seen[7][1] + " re")]
+    new += [(190, None), (191, "")]
+    return seen, new
+
+
+def test_incremental_neardup_both_regimes_match_union_find(spark, monkeypatch):
+    """incremental_neardup against a pure-Python union-find over the band
+    buckets its new docs touch, with the touched band rows labelled on
+    the driver (cap = their distinct count) and through star edges (cap
+    -1): kept ids follow 'min id of its component, no seen id in it',
+    and seen_merges are the seen ids of components holding two or more.
+    Every new id, the NULL-text and empty-text docs included, gets a
+    label."""
+    from collections import Counter
+
+    seen, new = _touched_split()
+    schema = "doc_id long, text string"
+    seen_df = spark.createDataFrame(seen, schema)
+    new_df = spark.createDataFrame(new, schema)
+    seen_bands = D.band_signatures(seen_df).localCheckpoint(eager=True)
+    band_rows = {
+        (r.doc_id, r.band_idx, r.band_key)
+        for r in D.band_signatures(new_df).unionByName(seen_bands).collect()
+    }
+    new_ids = {i for i, _ in new}
+    seen_ids = {i for i, _ in seen}
+    new_keys = {(j, k) for i, j, k in band_rows if i in new_ids}
+    touched = sorted(r for r in band_rows if r[1:] in new_keys)
+    buckets: dict = {}
+    for i, j, k in touched:
+        buckets.setdefault((j, k), []).append(i)
+    label = _union_find_labels(
+        sorted({i for i, _, _ in touched}),
+        [(m[0], v) for m in buckets.values() for v in m[1:]],
+    )
+    seen_touched = seen_ids & label.keys()
+    per_comp = Counter(label[i] for i in seen_touched)
+    want_kept = {i for i in new_ids if label[i] == i and i not in per_comp}
+    want_merges = {(label[i], i) for i in seen_touched if per_comp[label[i]] >= 2}
+    assert new_ids <= label.keys()
+    assert not {7, 180, 181, 185} & want_kept
+    assert len(want_kept) > 30 and want_merges
+
+    touched_df = spark.createDataFrame(touched, "doc_id long, band_idx string, band_key long")
+    for cap in (len(touched), -1):
+        monkeypatch.setattr(D, "DRIVER_CC_MAX_EDGES", cap)
+        kept, _, merges = D.incremental_neardup(new_df, seen_bands)
+        assert {r.doc_id for r in kept.collect()} == want_kept, cap
+        assert {(r.component, r.doc_id) for r in merges.collect()} == want_merges, cap
+        got = {r.doc_id: r.component for r in D._band_components(touched_df, "doc_id").collect()}
+        assert got == label, cap

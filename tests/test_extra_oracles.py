@@ -346,8 +346,11 @@ def test_cut_verbatim_spans_edge_cases_match_reference(spark):
     adjacent intervals on one doc (cut without any merge step), a doc
     whose every token is cut drops, a span below min_span_tokens is
     ignored, an extra column passes through, and untouched docs keep
-    their original whitespace byte for byte."""
-    from illumio_spark.operators.dedup import cut_verbatim_spans
+    their original whitespace byte for byte. Real spans of a paragraph
+    five docs share give the highest id four identical intervals; the
+    cut holds each once and removes the paragraph from all but the
+    lowest id."""
+    from illumio_spark.operators.dedup import cut_verbatim_spans, verbatim_overlap_spans
 
     toks = " ".join(f"t{i}" for i in range(20))
     rows = [
@@ -363,6 +366,20 @@ def test_cut_verbatim_spans_edge_cases_match_reference(spark):
         (4, 0, 2),
         (5, 1, 3),
     ]
+    para = " ".join(f"p{i}" for i in range(12))
+    shared = [
+        (6 + m, " ".join([f"u{m}_{i}" for i in range(m + 2)] + [para, f"tail{m}"]), "e")
+        for m in range(5)
+    ]
+    real = [
+        (r.id_b, r.pos_b, r.span_tokens)
+        for r in verbatim_overlap_spans(
+            spark.createDataFrame(shared, "doc_id long, text string, src string"), k=4
+        ).collect()
+    ]
+    assert real.count((10, 6, 12)) == 4 and len(real) == 10
+    rows += shared
+    spans += real
     df = spark.createDataFrame(rows, "doc_id long, text string, src string")
     sdf = spark.createDataFrame(
         [(0, i, 0, p, 1, n) for i, p, n in spans],
@@ -376,6 +393,8 @@ def test_cut_verbatim_spans_edge_cases_match_reference(spark):
     assert got[1] == rows[0][1:] and got[4] == rows[3][1:] and 3 not in got
     assert got[2][0] == "t0 t1 t14 t15 t16 t17 t18 t19"
     assert got[5] == ("lead y3 tail", None)
+    assert got[6] == shared[0][1:]
+    assert got[10] == ("u4_0 u4_1 u4_2 u4_3 u4_4 u4_5 tail4", "e")
 
 
 def test_text_pipeline_cut_spans_stage(spark, tmp_path):

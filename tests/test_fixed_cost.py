@@ -24,6 +24,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # from the parquet footers in a job of its own.
 JOB_BUDGET = 6
 DEDUP_JOB_BUDGET = 16
+INCR_NEARDUP_JOB_BUDGET = 18
 
 
 def _plan(df) -> str:
@@ -107,6 +108,37 @@ def test_dedup_curation_job_budget(spark):
         op()
         compiles.append(codegen_compile_count(spark) - before)
     assert 0 in compiles, f"classes compiled per warm op: {compiles}"
+
+
+def test_incremental_neardup_job_budget(spark):
+    """Spark jobs of one warm incremental_neardup keep count: a 100-doc
+    batch (25 near-dups and 15 exact dups of earlier docs among them)
+    against the band frontier of the first 60 docs, on local[4]. It ran
+    28 jobs while the touched band rows went through an eager
+    checkpoint, star edges with their own checkpoint, a node union and
+    neardup_components (edge count, collect, createDataFrame, label join
+    and label checkpoint). Labelling the touched rows the way compaction
+    labels a band table (one count, one Arrow collect) leaves
+    18."""
+    from illumio_spark.operators import dedup as D
+
+    sc = spark.sparkContext
+    df = spark.createDataFrame(_neardup_corpus(), "doc_id long, text string")
+    seen = D.band_signatures(df.filter("doc_id < 60")).localCheckpoint(eager=True)
+    new = df.filter("doc_id >= 60")
+
+    def op():
+        return D.incremental_neardup(new, seen)[0].count()
+
+    op()
+    sc.setJobGroup("fixed-cost-incremental", "incremental near-dup job budget")
+    try:
+        kept = op()
+        jobs = sc.statusTracker().getJobIdsForGroup("fixed-cost-incremental")
+    finally:
+        sc.setJobGroup(None, None)
+    assert kept == 60
+    assert 0 < len(jobs) <= INCR_NEARDUP_JOB_BUDGET, f"{len(jobs)} jobs: {sorted(jobs)}"
 
 
 def test_small_frames_are_local_relations(spark):

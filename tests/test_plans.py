@@ -329,8 +329,9 @@ def test_incremental_dedup_plan(spark):
 def test_incremental_neardup_plan(spark):
     # the frontier join is an equi-join on (band_idx, band_key) — hash
     # join, never BNLJ/cartesian; the kept-docs decision is semi/anti
-    # joins on ids. CC runs inside (checkpointed), so assert on the two
-    # returned frames' plans
+    # joins on ids. Labelling runs inside (a driver collect, or
+    # checkpointed CC above the cap), so assert on the two returned
+    # frames' plans
     from illumio_spark.operators.dedup import band_signatures, incremental_neardup
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
@@ -344,9 +345,10 @@ def test_incremental_neardup_plan(spark):
     # the 100 TB property: with the frontier on disk and a small batch,
     # the bucket prefilter BROADCASTS the new side's keys and STREAMS
     # the frontier — the history-sized table is scanned once, never
-    # shuffled — and CC's edge input is the star set (bounded by the
-    # touched band rows), never a new×all pair fan-out. Mirror the
-    # operator's current shape (semi-join prefilter + star edges).
+    # shuffled. The touched rows build the same semi-join prefilter the
+    # operator does; above the driver-labelling cap they form star edges,
+    # which stay bounded by the touched band rows, never a new×all pair
+    # fan-out.
     from pyspark.sql import functions as F
 
     import tempfile
