@@ -31,19 +31,16 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from illumio_spark import schema as S
 from illumio_spark.functions import once_per_gateway
-from illumio_spark.functions.format import py_strip
+from illumio_spark.functions.format import _PY_WS, py_strip
 
 # Java-regex port of the oracle's Python pattern. Three deltas matter:
 #   - named groups: Java has no (?P<name>) — strip to positional
 #   - \S: Python's \s is the str.isspace() set (incl. \x1c-\x1f, NEL, NBSP,
-#     space-separator block); Java's is ASCII-only, so a \x1c inside an
-#     act/sn token matched Java-\S+ but broke the Python match — the row
-#     routed on one engine and dead-lettered on the other (fuzz-caught)
+#     space-separator block; format._PY_WS); Java's is ASCII-only, so a
+#     \x1c inside an act/sn token matched Java-\S+ but broke the Python
+#     match — the row routed on one engine and dead-lettered on the other
+#     (fuzz-caught)
 #   - \d: Python's is any Unicode decimal digit (\p{Nd}); Java's is ASCII
-_PY_WS_CLASS = (
-    "\\t\\n\\x0B\\f\\r\\x1C-\\x1F \\x85\\xA0\\u1680"
-    "\\u2000-\\u200A\\u2028\\u2029\\u202F\\u205F\\u3000"
-)
 #   - '.': Java's dot excludes every line terminator (CR, NEL U+0085,
 #     LS U+2028, PS U+2029), Python's only newline; on the
 #     one-turn-per-line contract (no literal newline) a Java (?s)-dot
@@ -56,7 +53,7 @@ _JAVA_SUMMARY_REGEX = re.sub(r"\(\?P<[^>]+>", "(", S.SUMMARY_TEXT_REGEX)
 # rows). parse_turns picks per row via one cheap two-range scan.
 _JAVA_SUMMARY_REGEX_ASCII = "(?s)" + _JAVA_SUMMARY_REGEX
 _JAVA_SUMMARY_REGEX = "(?s)" + _JAVA_SUMMARY_REGEX.replace(
-    r"\S", f"[^{_PY_WS_CLASS}]"
+    r"\S", f"[^{_PY_WS}]"
 ).replace(r"\d", r"\p{Nd}")
 
 # Jackson option alignment with the oracle's strict json.loads: Spark's

@@ -520,11 +520,14 @@ def incremental_neardup(
     Scale shape: the batch's band table is checkpointed small, so AQE
     builds the bucket prefilter as a BroadcastHashJoin with the NEW
     side as the build (plan-verified at sf0.1: BuildLeft on the band
-    keys) — the history-sized frontier STREAMS through one scan and is
-    never shuffled; per-run cost is O(batch + collisions), not
-    O(history). Buckets holding no new doc are semi-join-pruned before
-    any labelling (their members' components were already resolved by
-    the runs that introduced them, and they cannot reach a new doc).
+    keys) — the history-sized frontier STREAMS through that join
+    without a shuffle, and the candidate work is O(batch + collisions).
+    The per-run cost is NOT free of O(history): the keep rule's
+    seen_ids (the frontier's distinct ids) plans one aggregate over the
+    whole frontier on every call. Buckets holding no new doc are
+    semi-join-pruned before any labelling (their members' components
+    were already resolved by the runs that introduced them, and they
+    cannot reach a new doc).
     The touched rows hold every bucket a new doc sits in, so their
     components keep exactly the new-new connectivity and new-to-seen
     reachability the keep decision reads, and label every new id;

@@ -378,9 +378,8 @@ def _emb_neardup_sql(n_planes: int = 8, n_tables: int = 9, threshold: float = 0.
 
 _INCR_EMB_MAX_ID = 2000  # bound the row's work like the event_id<200 rows
 
-# 4 planes × 3 tables: stays under LSH_LITERAL_BUDGET (JVM literal bucket
-# expressions, no Python workers) — this row pins FRONTIER semantics, not
-# recall calibration (td_embedding_neardup's 8×9 config covers that)
+# 4 planes × 3 tables: this row pins FRONTIER semantics, not recall
+# calibration (td_embedding_neardup's 8×9 config covers that)
 _INCR_EMB_SQL = f"""
     WITH RECURSIVE
     pairs AS (SELECT * FROM (

@@ -1,6 +1,7 @@
 """Unit tests for dedup + similarity operators (SURVEY.md §5.1 style:
 tiny in-memory DataFrames vs hand-computed expectations)."""
 
+import math
 import re
 
 import numpy as np
@@ -234,23 +235,51 @@ def test_exploded_shingles_equal_python_reference(spark, k, with_pos):
     )
 
 
-def test_multi_table_pandas_buckets_agree(emb):
-    """The single-UDF all-tables matmul path must assign the same
-    (table, bucket) rows as the per-table JVM literal-fold path."""
-    from illumio_spark.operators.similarity import LSH_SEED, _bucketed_long
-    import illumio_spark.operators.similarity as S
+# one row per input the bucket kernel must survive: NULL, null element,
+# NaN element, short, long, empty and all-zero (dim 16)
+EDGE_VECTORS = [
+    (1000, None),
+    (1001, [None] + [1.0] * 15),
+    (1002, [float("nan")] + [1.0] * 15),
+    (1003, [1.0] * 15),
+    (1004, [1.0] * 17),
+    (1005, []),
+    (1006, [0.0] * 16),
+]
 
-    base = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    jvm = {(r.vec_id, r.tbl, r.bucket)
-           for r in _bucketed_long(base, "vec_id", "v", 4, 16, 3).collect()}
-    old = S.LSH_LITERAL_BUDGET
-    S.LSH_LITERAL_BUDGET = 0  # force the multi-table pandas path
-    try:
-        np_rows = {(r.vec_id, r.tbl, r.bucket)
-                   for r in _bucketed_long(base, "vec_id", "v", 4, 16, 3).collect()}
-    finally:
-        S.LSH_LITERAL_BUDGET = old
-    assert np_rows == jvm
+
+def _reference_buckets(vec, n_planes: int, dim: int, n_tables: int) -> list:
+    """Hyperplane LSH in plain Python: bit i of table t's bucket is set
+    iff the sequential sum of v[k] * p[k] over plane i of
+    hyperplanes(dim, n_planes, LSH_SEED + t) is > 0. A NULL vector, one
+    whose length is not dim, or one holding a NaN or null element gets
+    bucket 0 in every table."""
+    if vec is None or len(vec) != dim or any(x is None or math.isnan(x) for x in vec):
+        return [0] * n_tables
+    out = []
+    for t in range(n_tables):
+        bucket = 0
+        for i, p in enumerate(SIM.hyperplanes(dim, n_planes, SIM.LSH_SEED + t)):
+            if sum(x * float(y) for x, y in zip(vec, p)) > 0:
+                bucket |= 1 << i
+        out.append(bucket)
+    return out
+
+
+@pytest.mark.parametrize("n_planes,n_tables", [(4, 3), (8, 9)])
+def test_lsh_buckets_equal_python_reference(spark, emb, n_planes, n_tables):
+    """Every (id, table, bucket) row of _bucketed_long equals the
+    pure-Python sign-bit reference, on the emb fixture and the edge
+    vectors."""
+    edge = spark.createDataFrame(EDGE_VECTORS, "vec_id long, v array<double>")
+    vecs = emb.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    ).unionByName(edge)
+    got = {(r.vec_id, r.tbl, r.bucket) for r in SIM._bucketed_long(
+        vecs, "vec_id", "v", n_planes, 16, n_tables).collect()}
+    want = {(r.vec_id, t, b) for r in vecs.collect()
+            for t, b in enumerate(_reference_buckets(r.v, n_planes, 16, n_tables))}
+    assert got == want
 
 
 def test_hashing_embed_text_to_ann_end_to_end(neardup_corpus, spark):
@@ -342,6 +371,65 @@ def test_ivf_topk_recall_on_clustered_corpus(spark):
     plan = SIM.ivf_topk(emb, qs, k=5, n_centroids=16, n_probe=3)._jdf \
         .queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
+
+
+def _with_invalid_vectors(spark, rows, dim: int):
+    """(clean frame, frame plus a NULL, a short, a long and a NaN-holding
+    vector under ids 9000-9003)."""
+    bad = [(9000, None), (9001, [1.0] * (dim - 1)), (9002, [1.0] * (dim + 1)),
+           (9003, [float("nan")] + [1.0] * (dim - 1))]
+    schema = "vec_id long, embedding array<double>"
+    return spark.createDataFrame(rows, schema), spark.createDataFrame(rows + bad, schema)
+
+
+def _clustered_rows(n: int, dim: int, seed: int) -> list:
+    rng = np.random.Generator(np.random.PCG64(seed))
+    centers = rng.standard_normal((8, dim)) * 4
+    return [(i, (centers[i % 8] + rng.standard_normal(dim) * 0.3).tolist())
+            for i in range(n)]
+
+
+def test_ivf_topk_skips_null_and_wrong_length_vectors(spark):
+    """NULL, wrong-length and NaN-holding vectors get no cell: they are
+    left out of centroid training, are never candidates, and as queries
+    probe nothing; every valid query's top-k is the clean corpus's."""
+    clean, dirty = _with_invalid_vectors(spark, _clustered_rows(160, 32, 5), 32)
+
+    def topk(emb):
+        qs = emb.filter("vec_id < 5 OR vec_id >= 9000").selectExpr(
+            "vec_id as qid", "embedding as qe")
+        return {tuple(r) for r in SIM.ivf_topk(
+            emb, qs, k=5, n_centroids=8, n_probe=2).collect()}
+
+    assert np.allclose(SIM.ivf_train_centroids(dirty, n_centroids=8),
+                       SIM.ivf_train_centroids(clean, n_centroids=8))
+    assert topk(dirty) == topk(clean)
+
+
+def test_lsh_paths_accept_null_and_wrong_length_vectors(spark):
+    """Invalid vectors share bucket 0 of every table and score a NULL
+    cosine, so they neither fail the job nor change the valid results:
+    lsh_neardup_pairs finds the same pairs, and lsh_topk the same
+    ranked neighbours ahead of any invalid one."""
+    rows = _clustered_rows(200, 64, 6)
+    rows += [(1000 + i, [x + 1e-3 for x in v]) for i, v in rows[:20]]  # near dups
+    clean, dirty = _with_invalid_vectors(spark, rows, 64)
+    # not the NaN vector: its buckets are 0 too, but a NaN cosine passes
+    # the expression verify's >= (Spark orders NaN above every number)
+    dirty = dirty.filter("vec_id != 9003")
+    lsh = dict(n_planes=8, dim=64, n_tables=9)
+
+    def pairs(emb):
+        return {tuple(r) for r in SIM.lsh_neardup_pairs(
+            emb, "vec_id", "embedding", threshold=0.999, **lsh).collect()}
+
+    def topk(emb):
+        qs = emb.filter("vec_id < 5").selectExpr("vec_id as qid", "embedding as qe")
+        return {tuple(r) for r in SIM.lsh_topk(emb, qs, k=5, **lsh).collect()}
+
+    assert len(pairs(clean)) >= 20
+    assert pairs(dirty) == pairs(clean)
+    assert {r for r in topk(dirty) if r[1] < 9000} == topk(clean)
 
 
 def test_ivf_centroids_deterministic(spark):
